@@ -12,8 +12,12 @@ microsecond truncation of the same column.
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.sql import functions as F
 
 from .session import configure
@@ -45,9 +49,73 @@ def normalize_events(df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change how Spark converts a parquet footer into a
+# StructType: part of the schema-cache key, so flipping any of them
+# re-infers instead of reusing a schema converted under other rules.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# At most this many (file version, confs) schemas are kept; the least
+# recently used one is dropped first.
+_SCHEMA_CACHE_MAX = 256
+_schema_cache: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """(abs path, inode, size, mtime_ns, schema confs) of a regular
+    local file; None for anything else (directory, URI, failed stat)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    return (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns) + confs
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    key = _schema_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    with _schema_lock:
+        schema = _schema_cache.get(key)
+        if schema is not None:
+            _schema_cache.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)  # Spark infers the schema (one job)
+    schema = df.schema
+    with _schema_lock:
+        _schema_cache[key] = schema
+        while len(_schema_cache) > _SCHEMA_CACHE_MAX:
+            _schema_cache.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read `<sf_dir>/<name>.parquet` (plus the `events` ts fix-up).
+
+    Schema cache: a bare `spark.read.parquet` runs one Spark job to
+    infer the schema from the footer on every call. Instead, the
+    StructType Spark inferred the first time is kept and later loads
+    plan with `spark.read.schema(cached).parquet(path)`, which starts
+    no job. The key is the absolute path, the file's `st_ino`,
+    `st_size` and `st_mtime_ns`, and the values of the session confs
+    in `_SCHEMA_CONFS`; rewriting the file or flipping one of those
+    confs is a miss and re-infers (a rewrite that keeps inode, size and
+    mtime_ns all unchanged goes unnoticed). Only regular local files are
+    cached: a directory-shaped `x.parquet`, a remote URI or a failed
+    stat is read exactly as before. At most `_SCHEMA_CACHE_MAX`
+    schemas are kept (least recently used evicted); the cache is
+    shared by all threads and sessions of the process.
+    """
     configure(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events(df)
     return df

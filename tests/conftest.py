@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import shutil
 import sys
+from collections import namedtuple
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -29,6 +32,22 @@ def duck():
     for t in tables:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
     return con
+
+
+_DiskUsage = namedtuple("_DiskUsage", "total used free")
+
+
+@pytest.fixture
+def fake_volume(monkeypatch):
+    """A 1 TiB volume, 10% full, seen by every `shutil.disk_usage` call
+    during the test, so the hot-tier disk-capacity gate
+    (`storage.hottier.validate_disk_capacity`) never depends on how full
+    the host disk is. Set `.used` / `.free` to model another volume."""
+    vol = SimpleNamespace(total=1 << 40, used=1 << 37, free=(1 << 40) - (1 << 37))
+    monkeypatch.setattr(
+        shutil, "disk_usage", lambda path: _DiskUsage(vol.total, vol.used, vol.free)
+    )
+    return vol
 
 
 # Slow-tier marking: tests/slow_tests.txt lists the node IDs measured >= 10 s

@@ -893,10 +893,13 @@ def test_split_rehomed_rows_append_to_largest_generation(spark, tmp_path):
 
 def test_stray_rehome_lands_in_parent_subtree(spark, tmp_path):
     """Rows stranded under a since-split cell re-home WITHIN that
-    cell's own subtree (r12: the flat per-parent argmax replaced the
-    root descent, making this a guarantee instead of a tendency —
-    probes to any descendant leaf keep finding the row via ancestor
-    expansion throughout). Covers both merge-time mechanisms: the
+    cell's own subtree, so probes to any descendant leaf keep finding
+    the row via ancestor expansion throughout. This is guaranteed only
+    for parents that take the flat per-parent argmax (r12), i.e. whose
+    subtree has at most `_FLAT_REHOME_LEAF_CAP` leaves and fits the
+    remaining `_FLAT_REHOME_PAIR_CAP` pair budget; parents past either
+    cap fall back to the root descent, which may leave the subtree.
+    This test's tiny tree stays within both caps. Covers both merge-time mechanisms: the
     stray re-home and the split pull, each of which may only move a
     row DOWN its own subtree. Also re-pins row conservation across
     the re-home."""

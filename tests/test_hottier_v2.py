@@ -78,7 +78,7 @@ class TestValidation:
             ht.validate_resize(used - 1)
         ht.validate_resize(used)  # exactly-used is allowed
 
-    def test_disk_capacity_threshold(self, tmp_path):
+    def test_disk_capacity_threshold(self, tmp_path, fake_volume):
         # a ~0% ceiling is always already exceeded by the volume itself
         with pytest.raises(HotTierError):
             validate_disk_capacity(
@@ -87,7 +87,20 @@ class TestValidation:
         # a 100% ceiling admits a tiny tier
         validate_disk_capacity(str(tmp_path), 1, max_disk_usage_percent=100.0)
 
+    def test_disk_gate_projects_total_minus_free(self, tmp_path, fake_volume):
+        """Usage is `total - free`, as in the reference's
+        is_disk_available (hottier.rs:1435-1467), not `used`: blocks
+        that are in neither (e.g. reserved for root) count as taken."""
+        fake_volume.used = fake_volume.total // 10  # 10% by `used`
+        fake_volume.free = fake_volume.total * 3 // 10  # 70% by total - free
+        request = fake_volume.total // 20  # +5%
+        # 75% projected: over a 72% ceiling (by `used` it would be 15%)
+        with pytest.raises(HotTierError):
+            validate_disk_capacity(str(tmp_path), request, max_disk_usage_percent=72.0)
+        validate_disk_capacity(str(tmp_path), request, max_disk_usage_percent=76.0)
 
+
+@pytest.mark.usefixtures("fake_volume")
 class TestApiSurface:
     def test_put_backfills_persists_and_survives_restart(self, spark, tmp_path):
         api = ParseableAPI(spark, str(tmp_path))
@@ -245,7 +258,7 @@ def test_maintenance_scheduler_runs_retention_and_compaction(spark, tmp_path):
 
 
 class TestReviewRegressions:
-    def test_delete_hot_tier_stops_backfill_thread(self, spark, tmp_path):
+    def test_delete_hot_tier_stops_backfill_thread(self, spark, tmp_path, fake_volume):
         """DELETE must close() the tier BEFORE rmtree so a mid-sync
         backfill thread cannot resurrect the deleted cache dir (review
         finding: the copier kept filling up to the full quota after the
@@ -288,14 +301,12 @@ class TestReviewRegressions:
         assert ht.used_bytes() == 0
 
     def test_disk_gate_counts_peer_tenant_allocations(
-        self, spark, tmp_path, monkeypatch
+        self, spark, tmp_path, fake_volume
     ):
         """Multi-tenant: every tenant caches onto the same volume, so
         one tenant's disk-capacity gate must count the quotas the OTHER
         tenants already allocated (review finding: N tenants could each
         pass the gate alone while jointly exceeding the threshold)."""
-        import shutil as _shutil
-
         from parseable_spark.tenants import TenantManager
 
         api = ParseableAPI(spark, str(tmp_path))
@@ -308,9 +319,9 @@ class TestReviewRegressions:
         # its own gate) — the DEFAULT tenant's next request must see it
         from parseable_spark.storage.hottier import HotTier
 
-        total = _shutil.disk_usage(str(tmp_path)).total
         s1.hot_tier = HotTier(
-            cache_dir=os.path.join(s1.stream_dir, "hottier"), size_limit=total
+            cache_dir=os.path.join(s1.stream_dir, "hottier"),
+            size_limit=fake_volume.total,
         )
         api.get_or_create_stream("applogs")
         with pytest.raises(ApiError) as ei:

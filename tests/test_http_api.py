@@ -425,7 +425,7 @@ def test_detect_schema_endpoint(spark, tmp_path):
         srv.shutdown()
 
 
-def test_hot_tier_endpoints(spark, tmp_path):
+def test_hot_tier_endpoints(spark, tmp_path, fake_volume):
     """Hot-tier CRUD (logstream.rs:421-560): human or byte sizes,
     GET shows quota + usage, DELETE disables."""
     api = ParseableAPI(spark, str(tmp_path))
@@ -2354,7 +2354,7 @@ def test_sse_alert_push_e2e(spark, tmp_path):
         provider.shutdown()
 
 
-def test_about_payload_and_deployment_id_persistence(spark, tmp_path):
+def test_about_payload_and_deployment_id_persistence(spark, tmp_path, fake_volume):
     """GET /api/v1/about mirrors the reference payload shape
     (handlers/http/about.rs:48-119) and deploymentId is stable across
     restarts (StorageMetadata.deployment_id semantics)."""

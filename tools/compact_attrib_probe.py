@@ -40,6 +40,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BATCH = 512
 COMPACT_EVERY = 4
 KEEP_RECENT = 4
+# sha256 of inspect.getsource(StreamingEmbeddingIndex.compact_index) when
+# InstrumentedIndex.compact_index below copied its body
+COPIED_COMPACT_INDEX_SHA256 = (
+    "bbd00ffea52ef3c17d01f9d708ce26734c351b8d48fe0020ddf7c252c1dfef11"
+)
+
+
+def check_copy_current(cls) -> None:
+    """Refuse to run once the engine's compact_index differs from the
+    body copied below: the phase split would silently mis-attribute."""
+    import hashlib
+    import inspect
+
+    got = hashlib.sha256(inspect.getsource(cls.compact_index).encode()).hexdigest()
+    if got != COPIED_COMPACT_INDEX_SHA256:
+        raise SystemExit(
+            "StreamingEmbeddingIndex.compact_index changed since this probe "
+            f"copied it (sha256 {got}); re-copy its body into "
+            "InstrumentedIndex.compact_index and update COPIED_COMPACT_INDEX_SHA256"
+        )
 
 
 def main(lo: int, hi: int) -> None:
@@ -48,6 +68,7 @@ def main(lo: int, hi: int) -> None:
     from parseable_spark.session import get_spark
     from parseable_spark.streaming.ann_index import StreamingEmbeddingIndex
 
+    check_copy_current(StreamingEmbeddingIndex)
     DIM = 64
     spark = get_spark("compact-attrib-probe")
     spark.sparkContext.setLogLevel("ERROR")
