@@ -181,14 +181,7 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
         self.max_splits_per_compaction = int(max_splits_per_compaction)
         self.split_fanout_cap = max(2, int(split_fanout_cap))
         self.beam_width = max(self.nprobe, int(beam_width))
-        # tiered-compaction knobs (r9, judge r8 #1): each compaction
-        # merges only the out-of-grace FRESH batches into a NEW
-        # generation; when more than ``max_generations`` generations
-        # live, the ``merge_fanout`` smallest merge into one (classic
-        # size-tiered LSM) — each row is rewritten O(log history)
-        # times total instead of once per compaction.
-        # max_generations=1 restores the pre-r9 full-merge behavior
-        # (every compaction collapses everything) — the probe's A/B.
+        # tiered-compaction knobs (BatchPartitionedIndex)
         self.max_generations = max(1, int(max_generations))
         self.merge_fanout = max(2, int(merge_fanout))
         # per-batch pair-work budget (r11, judge r10 #5): the probe's
@@ -1055,19 +1048,10 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
             self.id_col, "v", "cell", "src"
         )
         if pull_parents:
-            raw = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self._index_root)
-                .filter(F.col("batch_id").isin(other_gens))
-                .filter(F.col("cell").isin(pull_parents))
-            )
-            psrc = (
-                F.coalesce(F.col("src"), F.col("batch_id"))
-                if "src" in raw.columns
-                else F.col("batch_id")
-            )
             work = work.unionByName(
-                raw.select(self.id_col, "v", "cell", psrc.alias("src"))
+                self._read_layers(self._index_root, other_gens)
+                .filter(F.col("cell").isin(pull_parents))
+                .select(self.id_col, "v", "cell", "src")
             )
         work = work.localCheckpoint()
         sizes = total
@@ -1129,11 +1113,7 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
                     planned.append((int(cell), next_cid, v))
                     next_cid += 1
         if thin and count_also:
-            fresh_work = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self._index_root)
-                .filter(F.col("batch_id").isin(count_also))
-            )
+            fresh_work = self._read_layers(self._index_root, count_also)
             for i in range(0, len(thin), 16):
                 chunk3 = thin[i : i + 16]
                 sampled = (
@@ -1393,69 +1373,33 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
             )
 
     def compact_index(self, keep_recent: int = 4) -> None:
-        """TIERED compaction (r9, judge r8 #1 — the old design merged
-        ALL generations into one every time, Θ(index) bytes rewritten
-        per compact_every batches, amortized O(history) per-batch write
-        cost):
+        """Tiered compaction on the shared ladder
+        (BatchPartitionedIndex), over committed (below-LATEST) batches
+        only. Duplicate ids keep the oldest ``src``, then the smallest
+        cell. csz/crep are written LAYER-local (advisory) — probes
+        recompute exact global stats over their pruned slice
+        (probe_pairs_df). Each merge also re-homes rows under since-split
+        (non-leaf) cells and splits giant cells; see
+        ``_write_generation``."""
+        self._compact_layers(
+            self._index_root,
+            self.latest_version() or 0,
+            keep_recent,
+            cols=[self.id_col, "v", "cell"],
+            key=[self.id_col],
+            tie="cell",
+            write=self._write_generation,
+        )
 
-        1. entry merge: the out-of-grace FRESH batches merge into one
-           NEW generation — O(compact_every × batch) bytes;
-        2. size-tiered cascade: when more than ``max_generations``
-           generations live, the ``merge_fanout`` smallest merge into
-           one — each row participates in O(log history) merges over
-           its lifetime, so amortized per-batch compaction writes are
-           O(batch × log history), not O(history).
-
-        Generation count stays bounded (probe partition listings and
-        the flood guard's slice stay O(max_generations × cells)).
-        Global flood-guard stats no longer depend on compaction at all:
-        probes recompute csz/crep EXACTLY over their pruned slice
-        (probe_pairs_df), so generations never need a global rewrite.
-        Splits stay exact across tiers: sizes are taken globally
-        (metadata-only counts) and a splitting cell's rows are pulled
-        from every generation (O(cell) partition-pruned reads) — see
-        ``_split_giant_cells``. Rows under pre-split (non-leaf) cells
-        are re-homed to leaves whenever their layer merges.
-        ``max_generations=1`` restores the pre-r9 full-merge behavior
-        (tools/compact_probe.py measures both)."""
-        parts = self._index_parts()
-        lv = self.latest_version() or 0
-        committed = [p for p in parts if 0 <= p < lv]
-        if not committed:
-            return
-        old = [p for p in committed if p <= max(committed) - int(keep_recent)]
-        if not old:
-            return
-        if self.max_generations == 1:
-            # legacy full-merge mode: fold existing generations into
-            # the entry merge directly (one write, pre-r9 numbering)
-            old = old + [p for p in parts if p < 0]
-        self._merge_generations(old)
-        while True:
-            gens = [p for p in self._index_parts() if p < 0]
-            victims = self._merge_victims(self._index_root, gens)
-            if not victims:
-                break
-            self._merge_generations(victims)
-
-    def _merge_generations(self, sources: list[int]) -> None:
-        """Merge the given index layers (fresh batches and/or
-        generations) into ONE new generation — write-then-delete, same
-        crash discipline as before (duplicate rows from a crash are
-        benign: probes dedup pairs, later merges dedup rows).
-
-        Duplicate ids dedup DETERMINISTICALLY first-writer-wins on the
-        per-row data-age key ``src`` (the ORIGINAL commit batch id,
-        carried through every merge): an id re-folded with a different
-        embedding keeps its oldest-committed vector, matching the
-        lexical path's canonical-text semantics — ordering on LAYER id
-        would invert this under tiered cascades, where a more-negative
-        (later-created) generation can hold OLDER data than one the
-        cascade skipped (judge ADVICE r9). Layers written before the
-        key existed fall back to their layer id (generations sort
-        before fresh batches — the pre-r10 approximation). csz/crep
-        written here are LAYER-LOCAL and advisory — probes recompute
-        exact global stats over their pruned slice (r9)."""
+    def _write_generation(
+        self, rows: DataFrame, new_gen: int, sources: list[int]
+    ) -> list[str]:
+        """The ANN merge hook: re-home stray rows, split giant cells
+        (sizes are taken globally — metadata-only counts — and a
+        splitting cell's rows are pulled from every generation, see
+        ``_split_giant_cells``), then write ``new_gen`` plus the
+        re-homed rows of split cells. Returns the pulled cell dirs to
+        delete after the write."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
@@ -1465,27 +1409,6 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
         fresh_keep = [
             p for p in all_parts if 0 <= p < lv and p not in sources
         ]
-        new_gen = min([p for p in all_parts if p < 0], default=0) - 1
-        # mergeSchema: pre-r10 layers lack the src column — the merged
-        # schema surfaces it as NULL there (footers-only cost, and only
-        # on this rare compaction-time read)
-        raw = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self._index_root)
-            .filter(F.col("batch_id").isin(sources))
-        )
-        src = (
-            F.coalesce(F.col("src"), F.col("batch_id"))
-            if "src" in raw.columns
-            else F.col("batch_id")
-        )
-        w_id = Window.partitionBy(self.id_col).orderBy("src", "cell")
-        rows = (
-            raw.select(self.id_col, "v", "cell", src.alias("src"))
-            .withColumn("_rn", F.row_number().over(w_id))
-            .filter(F.col("_rn") == 1)
-            .select(self.id_col, "v", "cell", "src")
-        )
         # re-home rows folded under a since-split cell: the non-leaf
         # set is small (parents only), so the isin stays cheap
         nonleaf = sorted(self._children) if self._nodes else []
@@ -1501,10 +1424,9 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
         rows, rehomed, drop_dirs = self._split_giant_cells(
             rows.localCheckpoint(), other_gens=others, count_also=fresh_keep
         )
-        if rehomed is not None and (self.max_generations == 1 or not others):
-            # legacy full-merge mode keeps its single-generation
-            # contract; with no untouched generation there is nowhere
-            # to append, so everything folds into the one output layer
+        if rehomed is not None and not others:
+            # no untouched generation to append to: everything folds
+            # into the one output layer
             rows = rows.unionByName(rehomed)
             rehomed = None
         w = Window.partitionBy("cell")
@@ -1541,13 +1463,7 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
             }
             target = max(others, key=lambda g: (gen_sizes.get(g, 0), g))
             self._write_index_rows(_stats(rehomed), target)
-        for p in sources:
-            shutil.rmtree(
-                os.path.join(self._index_root, f"batch_id={p}"),
-                ignore_errors=True,
-            )
-        for d in drop_dirs:
-            shutil.rmtree(d, ignore_errors=True)
+        return drop_dirs
 
     # -- reads ---------------------------------------------------------------
     def index_df(self) -> DataFrame | None:

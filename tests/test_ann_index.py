@@ -967,27 +967,3 @@ def test_stray_rehome_lands_in_parent_subtree(spark, tmp_path):
             assert visible[did] != pcell, (
                 f"stray doc {did} was not re-homed off non-leaf {pcell}"
             )
-
-
-def test_legacy_full_merge_keeps_single_generation(spark, tmp_path):
-    """max_generations=1 (the pre-r9 full-merge A/B mode) must keep its
-    one-generation contract even when the merge splits a cell — the
-    re-home append only exists in tiered mode."""
-    rng = random.Random(9)
-    A1, A2, B = _axis(0), _axis(1), _axis(2)
-    idx = StreamingEmbeddingIndex(
-        spark, str(tmp_path / "ann"), n_cells=2, nprobe=2,
-        threshold=0.95, split_target=8, compact_every=0,
-        max_generations=1,
-    )
-    nid = 0
-    for b in range(6):
-        rows = []
-        for anchor in (A1, A1, A2, A2, B):
-            rows.append((nid, _near(rng, anchor)))
-            nid += 1
-        idx.process_batch(_df(spark, rows), b)
-    idx.compact_index(keep_recent=2)
-    assert idx._children, "expected the A cell to split"
-    gens = [p for p in idx._index_parts() if p < 0]
-    assert len(gens) == 1, f"legacy mode must write ONE generation, got {gens}"

@@ -783,14 +783,12 @@ def test_dedup_index_migrates_flat_layout(spark, tmp_path):
 def test_dedup_index_compaction_globalizes_stats_and_heals_orphans(
     spark, tmp_path
 ):
-    """max_generations=1 (the pre-r9 full-merge mode): compact_index
-    merges out-of-grace batch partitions + ALL generations (a crash
-    between a compaction's write and delete leaves two generations;
-    folding only the newest would orphan the older forever),
-    de-duplicates crash duplicates on (id, band_idx), and recomputes
-    bsz/rep_id globally within the single generation. Tiered-mode
-    behavior is pinned separately
-    (test_dedup_index_tiered_compaction_*)."""
+    """compact_index merges out-of-grace batch partitions into a
+    generation whose bsz/rep_id are computed over every row it holds.
+    A crash between a compaction's write and delete leaves an orphan
+    generation beside its twin; the cascade (max_generations=2,
+    merge_fanout=4) folds both together with the next entry merge and
+    de-duplicates the crash duplicates on (id, band_idx)."""
     import os as _os
     import shutil as _shutil
 
@@ -799,7 +797,7 @@ def test_dedup_index_compaction_globalizes_stats_and_heals_orphans(
     d = tmp_path / "d"
     idx = StreamingDedupIndex(
         spark, str(d), bucket_cap=10**9, compact_every=0,
-        max_generations=1,
+        max_generations=2, merge_fanout=4,
     )
     for b in range(6):
         docs = spark.createDataFrame(
@@ -823,16 +821,16 @@ def test_dedup_index_compaction_globalizes_stats_and_heals_orphans(
     # batches -> bsz >= 4 in the generation)
     gen = spark.read.parquet(str(d / "index")).filter("batch_id = -1")
     assert gen.filter("bsz >= 4").count() > 0
-    # simulate crash: duplicate the generation as an older orphan
+    # simulate crash: duplicate the generation as an orphan
     _shutil.copytree(d / "index" / "batch_id=-1", d / "index" / "batch_id=-2")
-    # swap names so -1 is the "older orphan" and -2 the newest: not
-    # needed — both are folded regardless of order
     idx.fold_batch(
         spark.createDataFrame([(90, "x y z")], "doc_id bigint, text string"), 6
     )
+    # entry: batch 4 -> gen -3; three generations > 2, so the cascade
+    # merges all three (fanout 4) into -4
     idx.compact_index(keep_recent=2)
     parts2 = {p for p in _os.listdir(d / "index") if p.startswith("batch_id=")}
-    assert parts2 == {"batch_id=-3", "batch_id=5", "batch_id=6"}
+    assert parts2 == {"batch_id=-4", "batch_id=5", "batch_id=6"}
     # crash-duplicates de-duplicated: row set unchanged (plus batch 6)
     after = rows()
     assert len(after) == len(before) + len(
@@ -966,15 +964,15 @@ def test_dedup_index_texts_compaction(spark, tmp_path):
     compacted generation per shard — bounding file count (per-lookup
     footer I/O) as batch count grows — without changing any lookup
     result. Recent batches stay per-batch so streaming replays still
-    overwrite a live partition; a second compaction folds the previous
-    generation in (crash-duplicate tolerant: lookups de-duplicate)."""
+    overwrite a live partition; once more than max_generations
+    generations live, the cascade folds them into one."""
     import os as _os
 
     from parseable_spark.streaming import StreamingDedupIndex
 
     idx = StreamingDedupIndex(
         spark, str(tmp_path / "d"), text_shards=4, compact_every=0,
-        max_generations=1,  # pre-r9 full-merge mode (tiered pinned separately)
+        max_generations=2, merge_fanout=4,
     )
     for b in range(8):
         docs = spark.createDataFrame(
@@ -995,15 +993,27 @@ def test_dedup_index_texts_compaction(spark, tmp_path):
     assert parts() == {"batch_id=-1", "batch_id=6", "batch_id=7"}
     assert sorted(map(tuple, idx.lookup_texts(all_ids).collect())) == before
 
-    # another batch + second compaction folds gen -1 into gen -2
+    # another batch + second compaction: batch 6 -> gen -2, no
+    # cascade at two generations
     idx.fold_batch(
         spark.createDataFrame([(80, "text 80")], "doc_id bigint, text string"), 8
     )
     idx.compact_texts(keep_recent=2)
-    assert parts() == {"batch_id=-2", "batch_id=7", "batch_id=8"}
+    assert parts() == {"batch_id=-2", "batch_id=-1", "batch_id=7", "batch_id=8"}
     all_ids2 = spark.createDataFrame([(i,) for i in range(81)], "doc_id bigint")
     got = sorted(map(tuple, idx.lookup_texts(all_ids2).collect()))
     assert got == before + [(80, "text 80")]
+
+    # third: batch 7 -> gen -3; three generations > 2, so the cascade
+    # folds all three (fanout 4) into -4
+    idx.fold_batch(
+        spark.createDataFrame([(81, "text 81")], "doc_id bigint, text string"), 9
+    )
+    idx.compact_texts(keep_recent=2)
+    assert parts() == {"batch_id=-4", "batch_id=8", "batch_id=9"}
+    all_ids3 = spark.createDataFrame([(i,) for i in range(82)], "doc_id bigint")
+    got = sorted(map(tuple, idx.lookup_texts(all_ids3).collect()))
+    assert got == before + [(80, "text 80"), (81, "text 81")]
 
     # auto-compaction from fold_batch (compact_every=2: fires on the
     # batch ids where (b+1) % 2 == 0)

@@ -11,10 +11,11 @@ Same deterministic corpus, cadence and parameters as
 tools/compact_probe.py --ann (512-doc batches, compact_every=4,
 split_target=512, dim 64, max_generations=8, merge_fanout=4); bytes
 are JVM-process wchar deltas, bracketed per phase via a probe-side
-subclass (zero engine changes):
+subclass that overrides the engine's hooks (zero engine changes):
 
-- entry:    compact_index's out-of-grace entry merge
-- cascade:  compact_index's size-tiered cascade merges
+- entry:    compact_index's out-of-grace entry merge (the first
+            _merge_layers call of a compact_index call)
+- cascade:  compact_index's size-tiered cascade merges (every later one)
 and within every merge:
 - split:    _split_giant_cells' own jobs (pull reads, sample collects,
             reassignment checkpoint)
@@ -40,26 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BATCH = 512
 COMPACT_EVERY = 4
 KEEP_RECENT = 4
-# sha256 of inspect.getsource(StreamingEmbeddingIndex.compact_index) when
-# InstrumentedIndex.compact_index below copied its body
-COPIED_COMPACT_INDEX_SHA256 = (
-    "bbd00ffea52ef3c17d01f9d708ce26734c351b8d48fe0020ddf7c252c1dfef11"
-)
-
-
-def check_copy_current(cls) -> None:
-    """Refuse to run once the engine's compact_index differs from the
-    body copied below: the phase split would silently mis-attribute."""
-    import hashlib
-    import inspect
-
-    got = hashlib.sha256(inspect.getsource(cls.compact_index).encode()).hexdigest()
-    if got != COPIED_COMPACT_INDEX_SHA256:
-        raise SystemExit(
-            "StreamingEmbeddingIndex.compact_index changed since this probe "
-            f"copied it (sha256 {got}); re-copy its body into "
-            "InstrumentedIndex.compact_index and update COPIED_COMPACT_INDEX_SHA256"
-        )
 
 
 def main(lo: int, hi: int) -> None:
@@ -68,7 +49,6 @@ def main(lo: int, hi: int) -> None:
     from parseable_spark.session import get_spark
     from parseable_spark.streaming.ann_index import StreamingEmbeddingIndex
 
-    check_copy_current(StreamingEmbeddingIndex)
     DIM = 64
     spark = get_spark("compact-attrib-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -93,48 +73,30 @@ def main(lo: int, hi: int) -> None:
                 "cascades": 0, "splits": 0, "rehomed_rows": 0,
                 "merged_src_layers": 0,
             }
-            self._in_cascade = False
+            self._merges = 0
             self._in_merge = False
             self._writes_in_merge = 0
 
         def compact_index(self, keep_recent: int = 4) -> None:
-            # same structure as the parent, with phase brackets; the
-            # parent's body is replicated so entry and cascade merges
-            # can be told apart (the engine exposes no hook between
-            # them and this probe must not change engine code).
-            parts = self._index_parts()
-            lv = self.latest_version() or 0
-            committed = [p for p in parts if 0 <= p < lv]
-            if not committed:
-                return
-            old = [p for p in committed if p <= max(committed) - int(keep_recent)]
-            if not old:
-                return
-            if self.max_generations == 1:
-                old = old + [p for p in parts if p < 0]
-            self._in_cascade = False
-            w0 = wchar()
-            self._merge_generations(old)
-            self.phases["entry"] += wchar() - w0
-            self._in_cascade = True
-            while True:
-                gens = [p for p in self._index_parts() if p < 0]
-                victims = self._merge_victims(self._index_root, gens)
-                if not victims:
-                    break
-                self.counts["cascades"] += 1
-                w0 = wchar()
-                self._merge_generations(victims)
-                self.phases["cascade"] += wchar() - w0
+            self._merges = 0
+            super().compact_index(keep_recent)
 
-        def _merge_generations(self, sources):
+        def _merge_layers(self, root, sources, **merge):
+            # inside one compact_index call the first merge is the
+            # entry merge, every later one a cascade
+            phase = "cascade" if self._merges else "entry"
+            self._merges += 1
+            if phase == "cascade":
+                self.counts["cascades"] += 1
             self._writes_in_merge = 0
             self._in_merge = True
             self.counts["merged_src_layers"] += len(sources)
+            w0 = wchar()
             try:
-                return super()._merge_generations(sources)
+                super()._merge_layers(root, sources, **merge)
             finally:
                 self._in_merge = False
+            self.phases[phase] += wchar() - w0
 
         def _assign_cells(self, docs, n):
             # at merge time this is the STRAY re-home descent; at fold

@@ -4,16 +4,15 @@ fixed compact_every — the r8 judge's #1 done bar ("a probe showing
 amortized per-batch compaction WRITE bytes sublinear in history across
 ≥16× growth at fixed compact_every").
 
-Two modes per index, same fold stream, same compaction cadence:
-
-- legacy (max_generations=1): every compaction merges out-of-grace
-  batches + ALL generations into one — Θ(index) bytes per compaction,
-  so the per-batch amortized write cost grows LINEARLY with history.
-- tiered (max_generations=8, merge_fanout=4): entry merges fold only
-  the out-of-grace batches; size-tiered cascades merge the smallest
-  generations when more than max_generations live — each row is
-  rewritten O(log history) times over its lifetime, so the amortized
-  per-batch cost stays near-flat (a log factor).
+The indexes compact on the size-tiered ladder (max_generations=8,
+merge_fanout=4): entry merges fold only the out-of-grace batches;
+size-tiered cascades merge the smallest generations when more than
+max_generations live — each row is rewritten O(log history) times over
+its lifetime, so the amortized per-batch cost stays near-flat (a log
+factor). The pre-r9 full-merge baseline (every compaction rewrote the
+whole index, linear growth) was removed from the engine; its measured
+numbers are in SCALE.md ("Measured: tools/compact_probe.py" and the
+ANN compaction-writes table).
 
 Bytes are JVM-process **wchar** deltas measured around the compaction
 calls only (folds excluded) — the honest write counter, catching
@@ -131,27 +130,22 @@ def lexical(lo: int, hi: int) -> None:
         idx.compact_texts(keep_recent=KEEP_RECENT)
 
     checkpoints = [1 << k for k in range(lo, hi + 1, 2)]
-    out = {
+    base = tempfile.mkdtemp(prefix="compact_probe_")
+    series = _run(
+        spark, jvm_pid,
+        lambda: StreamingDedupIndex(
+            spark, base, compact_every=0, max_generations=8, merge_fanout=4
+        ),
+        fold, checkpoints, compact,
+    )
+    for row in series:
+        print(json.dumps({"mode": "tiered", **row}), flush=True)
+    shutil.rmtree(base, ignore_errors=True)
+    print(json.dumps({
         "index": "lexical (signatures + texts)",
-        "batch": BATCH, "compact_every": COMPACT_EVERY, "modes": {},
-    }
-    for mode, kwargs in (
-        ("legacy", dict(max_generations=1)),
-        ("tiered", dict(max_generations=8, merge_fanout=4)),
-    ):
-        base = tempfile.mkdtemp(prefix=f"compact_probe_{mode}_")
-        series = _run(
-            spark, jvm_pid,
-            lambda: StreamingDedupIndex(
-                spark, base, compact_every=0, **kwargs
-            ),
-            fold, checkpoints, compact,
-        )
-        for row in series:
-            print(json.dumps({"mode": mode, **row}), flush=True)
-        out["modes"][mode] = series
-        shutil.rmtree(base, ignore_errors=True)
-    print(json.dumps(out))
+        "batch": BATCH, "compact_every": COMPACT_EVERY,
+        "modes": {"tiered": series},
+    }))
 
 
 def ann(lo: int, hi: int) -> None:
@@ -191,41 +185,28 @@ def ann(lo: int, hi: int) -> None:
         idx.compact_index(keep_recent=KEEP_RECENT)
 
     checkpoints = [1 << k for k in range(lo, hi + 1, 2)]
+    base = tempfile.mkdtemp(prefix="compact_probe_ann_")
+    series = _run(
+        spark, jvm_pid,
+        lambda: StreamingEmbeddingIndex(
+            spark, base, n_cells=16, nprobe=2, threshold=0.9,
+            cell_cap=1 << 40, split_target=512, compact_every=0,
+            max_splits_per_compaction=64, max_generations=8, merge_fanout=4,
+        ),
+        fold, checkpoints, compact,
+    )
+    for row in series:
+        print(json.dumps({"mode": "tiered", **row}), flush=True)
     out = {
         "index": "embedding (IVF, split_target=512)",
         "batch": BATCH, "compact_every": COMPACT_EVERY, "dim": DIM,
-        "modes": {},
+        "modes": {"tiered": series},
     }
-    last_base = None
-    mode_list = [
-        ("legacy", dict(max_generations=1)),
-        ("tiered", dict(max_generations=8, merge_fanout=4)),
-    ]
-    if "--tiered-only" in sys.argv:  # extend one axis without re-paying
-        mode_list = mode_list[1:]  # the (already-established) legacy run
-    for mode, kwargs in mode_list:
-        base = tempfile.mkdtemp(prefix=f"compact_probe_ann_{mode}_")
-        series = _run(
-            spark, jvm_pid,
-            lambda: StreamingEmbeddingIndex(
-                spark, base, n_cells=16, nprobe=2, threshold=0.9,
-                cell_cap=1 << 40, split_target=512, compact_every=0,
-                max_splits_per_compaction=64, **kwargs,
-            ),
-            fold, checkpoints, compact,
-        )
-        for row in series:
-            print(json.dumps({"mode": mode, **row}), flush=True)
-        out["modes"][mode] = series
-        if mode == "tiered":
-            last_base = base
-        else:
-            shutil.rmtree(base, ignore_errors=True)
     # evidence for the metadata-only global cell counts the tiered
     # split path relies on: grouping by PARTITION columns only reads
     # footers, not data pages — rchar per row must be orders of
     # magnitude below the full-scan cost
-    root = os.path.join(last_base, "index")
+    root = os.path.join(base, "index")
     df = spark.read.parquet(root)
     df.groupBy("cell").count().collect()  # warm listing/footers
     r0, _ = _counters(jvm_pid)
@@ -241,7 +222,7 @@ def ann(lo: int, hi: int) -> None:
         "rows": full,
     }
     print(json.dumps(out))
-    shutil.rmtree(last_base, ignore_errors=True)
+    shutil.rmtree(base, ignore_errors=True)
 
 
 if __name__ == "__main__":
