@@ -113,41 +113,31 @@ def test_ladder_invariants_against_model(
 
 
 def test_merge_falls_back_to_layer_id_without_src(spark, tmp_path):
-    """A layer written without ``src`` (pre-r10 folds, backfill_texts,
-    _migrate_flat_index) ranks by its layer id: doc 1's oldest text
-    (batch 0) wins over the src-less batch 1 although newer texts sort
-    first, doc 2's batch-1 text wins over batch 2, and the merged
-    generation carries the resolved ``src``."""
+    """``backfill_texts`` writes generation -1 without ``src``; when the
+    cascade merges it with a generation that has ``src``, its rows rank
+    by their layer id, so the backfilled (oldest) text of doc 1 wins
+    although the newer one sorts first, and the merged generation
+    carries the resolved ``src``."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from parseable_spark.streaming import StreamingDedupIndex
 
     d = tmp_path / "d"
-    idx = StreamingDedupIndex(spark, str(d), text_shards=1, compact_every=0)
-    batches = [
-        [(1, "zz 0")],
-        [(1, "mm 1"), (2, "zz 1")],
-        [(1, "aa 2"), (2, "aa 2")],
-    ]
-    for b, rows in enumerate(batches):
-        idx._write_text_rows(
-            spark.createDataFrame(rows, "doc_id bigint, text string")
-            .withColumn("src", F.lit(b)),
-            b,
-        )
-    for r, _, fs in os.walk(d / "texts" / "batch_id=1"):
-        for f in fs:
-            if f.endswith(".parquet"):
-                path = os.path.join(r, f)
-                table = pq.ParquetFile(path).read().drop(["src"])
-                # Spark reads its own schema from the footer metadata
-                pq.write_table(table.replace_schema_metadata(None), path)
-                os.remove(os.path.join(r, f".{f}.crc"))
+    idx = StreamingDedupIndex(
+        spark, str(d), text_shards=1, compact_every=0, max_generations=1
+    )
+    docs = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "doc_id bigint, text string"
+    )
+    idx.backfill_texts(docs([(1, "zz backfill")]))
+    for b, rows in enumerate([[(1, "mm 0"), (2, "zz 0")], [(2, "aa 1")]]):
+        idx._write_text_rows(docs(rows).withColumn("src", F.lit(b)), b)
+    # entry: batches 0, 1 -> gen -2; cascade: gens -1, -2 -> gen -3
     idx.compact_texts(keep_recent=0)
-    gen = pq.read_table(str(d / "texts" / "batch_id=-1")).to_pylist()
-    got = {r["doc_id"]: (r["text"], r["src"]) for r in gen}
-    assert got == {1: ("zz 0", 0), 2: ("zz 1", 1)}
     assert sorted(
         n for n in os.listdir(d / "texts") if n.startswith("batch_id=")
-    ) == ["batch_id=-1"]
+    ) == ["batch_id=-3"]
+    gen = pq.read_table(str(d / "texts" / "batch_id=-3")).to_pylist()
+    got = {r["doc_id"]: (r["text"], r["src"]) for r in gen}
+    assert got == {1: ("zz backfill", -1), 2: ("zz 0", 0)}
