@@ -224,15 +224,8 @@ class Manifest:
     ) -> list[str]:
         """File-level min/max pruning: keep files whose stats ranges can
         satisfy the predicates (stream_schema_provider.rs:505-600,
-        1032-1137). Unknown stats ⇒ keep (never prune unsafely).
-
-        With a time window, candidates come from the time index:
-        bisect on sorted lower bounds caps the range at `lower < end`,
-        and bisect on the (non-decreasing) prefix-max of upper bounds
-        skips the prefix where every upper < start — O(log n + window)
-        for append-ordered logs, exact-filtered so arbitrary overlap
-        stays correct. Output preserves original file order."""
-        import bisect
+        1032-1137). Unknown stats ⇒ keep (never prune unsafely). The
+        time window goes through overlapping()."""
 
         def _eq_keep(f: FileStats) -> bool:
             for col, v in (equals or {}).items():
@@ -251,8 +244,25 @@ class Manifest:
                     continue
             return True
 
+        return [
+            f.file_path for f in self.overlapping(time_col, start, end) if _eq_keep(f)
+        ]
+
+    def overlapping(
+        self, time_col: str, start: str | None = None, end: str | None = None
+    ) -> list[FileStats]:
+        """Files whose time range can hold a row of [start, end), plus
+        every file with unknown time bounds, in original file order.
+
+        Candidates come from the time index: bisect on sorted lower
+        bounds caps the range at `lower < end`, and bisect on the
+        (non-decreasing) prefix-max of upper bounds skips the prefix
+        where every upper < start — O(log n + window) for append-ordered
+        logs, exact-filtered so arbitrary overlap stays correct."""
+        import bisect
+
         if start is None and end is None:
-            return [f.file_path for f in self._files if _eq_keep(f)]
+            return list(self._files)
         lowers, bounded, pmax, unknown = self._time_index(time_col)
         # one-sided windows prune too ("everything since T" is a common
         # shape): bisect handles an absent bound as the respective end
@@ -268,11 +278,7 @@ class Manifest:
                 continue
             kept_pos.append(pos)
         kept_pos.sort()
-        return [
-            self._files[i].file_path
-            for i in kept_pos
-            if _eq_keep(self._files[i])
-        ]
+        return [self._files[i] for i in kept_pos]
 
     def limit_truncate(self, paths: list[str], limit: int) -> list[str]:
         """Planning-time LIMIT: stop adding files once cumulative

@@ -30,6 +30,8 @@ except ImportError as e:  # pragma: no cover - flight present in this env
     _flight = None
     _FLIGHT_ERR = e
 
+from pyspark.sql import DataFrame
+
 from .query.engine import QueryEngine
 
 
@@ -239,20 +241,20 @@ def fetch(
 # --- querier → ingestor fan-out (airplane.rs:155-184) -----------------------
 
 
+# Unsynced ingestor events are fetched only for windows that touch the
+# last STAGING_WINDOW_SECONDS (reference send_to_ingester, 5 minutes);
+# ingestors must therefore sync staging faster than this (the server's
+# maintenance sub-tick is 60 s).
+STAGING_WINDOW_SECONDS = 300
+
+
 def send_to_ingester(
-    start, end, now=None, window_seconds: int | None = None
+    start, end, now=None, window_seconds: int = STAGING_WINDOW_SECONDS
 ) -> bool:
     """True when the query window [start, end) touches the fresh-staging
     window — events that live only in ingestor memory and haven't been
     synced to the object store yet (reference send_to_ingester,
-    src/utils/arrow/flight.rs:112-160). The window defaults to the ONE
-    constant `storage.store.STAGING_WINDOW_SECONDS` — a hardcoded copy
-    here silently desynchronized the fan-out gate from scan()'s
-    staging union whenever the store constant was tuned (r7 review)."""
-    if window_seconds is None:
-        from .storage.store import STAGING_WINDOW_SECONDS
-
-        window_seconds = STAGING_WINDOW_SECONDS
+    src/utils/arrow/flight.rs:112-160)."""
     from datetime import datetime, timedelta, timezone
 
     now = now or datetime.now(timezone.utc)
@@ -335,7 +337,7 @@ def fetch_fresh_events(
 def querier_query(
     engine: QueryEngine,
     stream_name: str,
-    local_df,
+    local,
     sql: str,
     start: str,
     end: str,
@@ -348,24 +350,31 @@ def querier_query(
     append their fresh events to the local view as temporary events
     (append_temporary_events, utils/arrow/flight.rs:91-110), then run
     the SQL once over the union. Outside the fresh window this is a
-    plain local query — no RPCs."""
+    plain local query — no RPCs. ``local`` is the stream's local data:
+    a DataFrame or a scan provider (QueryEngine.register_stream); it is
+    the stream's registration again when this returns."""
     from .query.engine import TimeRange
 
     tr = TimeRange.parse(start, end, now=now)
-    df = local_df
-    if ingestor_ports and send_to_ingester(tr.start, tr.end, now=now):
+    scan = (lambda s, e: local) if isinstance(local, DataFrame) else local
+    fan_out = bool(ingestor_ports) and send_to_ingester(tr.start, tr.end, now=now)
+
+    def with_fresh(s, e):
+        df = scan(s, e)
+        if not fan_out:
+            return df
         # auth passes through to every ingestor fetch (r7 review: there
         # was no way to hand credentials down, so against the module's
         # own secured-bind posture every fan-out fetch failed auth and
         # was silently skipped — fresh staging events vanished)
         fresh = fetch_fresh_events(
             engine.spark, ingestor_ports, stream_name, start, end,
-            schema=local_df.schema, auth=auth,
+            schema=df.schema, auth=auth,
         )
-        if fresh is not None:
-            df = local_df.unionByName(fresh, allowMissingColumns=True)
-    engine.register_stream(stream_name, df, time_col=engine.time_col)
+        return df if fresh is None else df.unionByName(fresh, allowMissingColumns=True)
+
+    engine.register_stream(stream_name, with_fresh, time_col=engine.time_col)
     try:
         return engine.query(sql, start, end, now=now)
     finally:
-        engine.register_stream(stream_name, local_df, time_col=engine.time_col)
+        engine.register_stream(stream_name, local, time_col=engine.time_col)

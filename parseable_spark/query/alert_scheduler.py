@@ -18,6 +18,7 @@ uses a tokio scheduler; any cron/Airflow slot works identically).
 
 from __future__ import annotations
 
+import contextlib
 import threading
 import time as _time
 from dataclasses import dataclass, field
@@ -148,8 +149,12 @@ class ScheduledAlert:
 class AlertScheduler:
     """Driver-side evaluation loop over registered alerts."""
 
-    def __init__(self, engine) -> None:
+    def __init__(self, engine, lock=None) -> None:
+        """``lock``: held around each evaluation — the server passes its
+        API lock, because the engine's scan providers read live stores
+        that ingest and sync mutate under it."""
         self.engine = engine
+        self._lock = lock if lock is not None else contextlib.nullcontext()
         self._alerts: list[ScheduledAlert] = []
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
@@ -170,7 +175,8 @@ class AlertScheduler:
             # alerts disable/enable routes, modal/server.rs:367-380)
             if sa.enabled and sa.due(m) and sa in self._alerts:
                 try:
-                    sa.evaluate(self.engine, now=now)
+                    with self._lock:
+                        sa.evaluate(self.engine, now=now)
                 except Exception:  # noqa: BLE001
                     # a failing alert (e.g. referencing a dropped
                     # column) must not starve the alerts after it or

@@ -71,8 +71,34 @@ def top_k_counts_sql(
     """
 
 
+def manifest_window_count(manifest, time_col: str, lo: str | None, hi: str | None):
+    """Rows of the manifest files in [lo, hi) (ISO_MICRO_FMT bounds),
+    or None when metadata cannot prove the answer. Only files the
+    time index says can overlap the window are visited, so a windowed
+    COUNT(*) costs O(log n + window), not O(history). Every overlapping
+    file must lie FULLY inside the window; a file with unknown bounds
+    or one that straddles a boundary forces a real scan (None)."""
+    n = 0
+    for f in manifest.overlapping(time_col, lo, hi):
+        tb = f.time_bounds(time_col)
+        if tb is None:
+            return None  # unknown bounds: cannot prove containment
+        f_lo, f_hi = tb
+        if (lo is not None and f_lo < lo) or (hi is not None and f_hi >= hi):
+            return None  # straddles a boundary: must scan
+        # the real windowed scan (ts >= lo AND ts < hi) drops
+        # NULL-timestamp rows, and parquet min/max stats ignore
+        # NULLs — so containment says nothing about them. Subtract
+        # the file's known null count; unknown → must scan.
+        nulls = (f.columns.get(time_col) or {}).get("nulls")
+        if nulls is None:
+            return None
+        n += f.num_rows - nulls
+    return n
+
+
 def fast_count(
-    engine, sql: str, stores: dict, start=None, end=None
+    engine, sql: str, stores: dict, start=None, end=None, scans: dict | None = None
 ) -> "object | None":
     """Answer a bare COUNT(*) from manifest metadata when the plan shape
     allows (reference route: src/handlers/http/query.rs:186-256 —
@@ -84,8 +110,13 @@ def fast_count(
     the count comes from files FULLY inside the window plus in-window
     staging rows; any boundary-straddling file forces a real scan
     (None) — the all-time manifest total must never answer a windowed
-    query (review finding)."""
-    hit = engine.detect_bare_count(sql)
+    query (review finding). ``scans`` is the request's memo of
+    resolved stream scans (QueryEngine.query), shared with the query
+    that runs when this returns None."""
+    from .timerange import TimeRange
+
+    window = TimeRange(start, end) if start is not None and end is not None else None
+    hit = engine.detect_bare_count(sql, window=window, scans=scans)
     if hit is None:
         return None
     stream, alias = hit
@@ -99,25 +130,9 @@ def fast_count(
     else:
         iso = lambda d: d.strftime(ISO_MICRO_FMT) if d else None  # noqa: E731
         lo, hi = iso(start), iso(end)
-        n = 0
-        for f in store.manifest.files:
-            tb = f.time_bounds(store.time_col)
-            if tb is None:
-                return None  # unknown bounds: cannot prove containment
-            f_lo, f_hi = tb
-            if (hi is not None and f_lo >= hi) or (lo is not None and f_hi < lo):
-                continue  # fully outside
-            inside = (lo is None or f_lo >= lo) and (hi is None or f_hi < hi)
-            if not inside:
-                return None  # straddles a boundary: must scan
-            # the real windowed scan (ts >= lo AND ts < hi) drops
-            # NULL-timestamp rows, and parquet min/max stats ignore
-            # NULLs — so containment says nothing about them. Subtract
-            # the file's known null count; unknown → must scan.
-            nulls = (f.columns.get(store.time_col) or {}).get("nulls")
-            if nulls is None:
-                return None
-            n += f.num_rows - nulls
+        n = manifest_window_count(store.manifest, store.time_col, lo, hi)
+        if n is None:
+            return None
         for b in store._staging:
             for rec in b.records:
                 ts = rec.get(store.time_col)

@@ -2,11 +2,15 @@
 
 The reference rewrites every TableScan in the logical plan to add
 `ts >= start AND ts < end` unless the query already constrains the time
-column (src/query/mod.rs:387-424, 829-911). Spark equivalent: for each
-referenced stream we register a *time-filtered temp view* and run the
-user SQL against it — Catalyst then pushes the predicate into the scan
-(partition pruning + parquet row-group pruning), which is exactly the
-physical effect the reference achieves with manifest pruning.
+column (src/query/mod.rs:387-424, 829-911). Spark equivalent: each
+stream is registered as a scan provider, `(start, end) -> DataFrame`;
+per request, every referenced stream's provider is asked for the
+window and its result is installed as a *time-filtered temp view* the
+user SQL runs against. A StreamStore provider answers with the
+manifest-pruned file set (planning-time file skipping), and Catalyst
+pushes the injected predicate into the scan (row-group pruning).
+Streams whose time column the SQL constrains itself get the provider's
+full scan and no injected filter.
 """
 
 from __future__ import annotations
@@ -14,6 +18,10 @@ from __future__ import annotations
 import re
 import threading
 import uuid
+from contextlib import contextmanager
+from dataclasses import dataclass
+from datetime import datetime
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,6 +41,31 @@ DEFAULT_SQL_TIMEOUT_SECONDS = 300.0
 # after).
 _VIEW_LOCK = threading.RLock()
 _VIEW_OWNER: dict[str, "QueryEngine"] = {}  # view name → owning engine
+
+# (start, end) -> DataFrame holding at least every row of [start, end);
+# either bound may be None (unbounded). StreamStore.scan is one.
+ScanProvider = Callable[[datetime | None, datetime | None], DataFrame]
+
+
+@dataclass(frozen=True)
+class _Registration:
+    scan: ScanProvider
+    time_col: str
+    # the resting temp view between requests: the DataFrame of a
+    # DataFrame registration; None for a provider, whose view exists
+    # only while one request is analysed
+    view: DataFrame | None
+
+
+def _restore_view(spark, name: str) -> None:
+    """Put back what rests under ``name`` between requests: the owning
+    engine's DataFrame registration, or no view at all."""
+    owner = _VIEW_OWNER.get(name.lower())
+    reg = owner._lookup(name) if owner is not None else None
+    if reg is not None and reg[1].view is not None:
+        reg[1].view.createOrReplaceTempView(reg[0])
+    else:
+        spark.catalog.dropTempView(name)
 
 # A query "already constrains time" only if the time column appears in a
 # comparison/BETWEEN — a bare mention (e.g. inside DATE_BIN) doesn't count.
@@ -308,36 +341,54 @@ class QueryEngine:
         # relations that never touch the view registry or per-stream
         # RBAC. The engine reads data exclusively through spark.read.
         spark.conf.set("spark.sql.runSQLOnFiles", "false")
-        self._streams: dict[str, tuple[DataFrame, str]] = {}
-        # query() swaps shared temp views in and restores them; the
-        # Flight server calls it from multiple gRPC threads, and other
-        # tenants' engines share the same session catalog, so the
-        # inject→analyze→restore window must be exclusive or parallel
-        # requests read each other's time windows — or each other's
-        # tenants (review findings). spark.sql() resolves views at
-        # ANALYSIS (inside the lock) — executing the returned DataFrame
-        # later is safe.
+        self._streams: dict[str, _Registration] = {}
+        # per-request views are installed, analysed against and removed
+        # under this lock; the Flight server calls query() from several
+        # gRPC threads, and other tenants' engines share the same
+        # session catalog, so the install→analyze→restore window must
+        # be exclusive or parallel requests read each other's time
+        # windows — or each other's tenants (review findings).
+        # spark.sql() resolves views at ANALYSIS (inside the lock) —
+        # executing the returned DataFrame later is safe.
         self._view_lock = _VIEW_LOCK
 
     def register_stream(
         self,
         name: str,
-        df: DataFrame,
+        source: "DataFrame | ScanProvider",
         time_col: str | None = None,
         tenant: str | None = None,
     ) -> None:
-        """Register a stream; with a tenant, the view is namespaced
-        (tenant__stream) so one SparkSession serves many tenants — the
-        analog of the reference's per-tenant DataFusion schema
+        """Register a stream as a scan provider ``(start, end) ->
+        DataFrame``, asked once per request for that request's window
+        (a StreamStore registers its ``scan``). A plain DataFrame is
+        served for every window and also rests as a temp view. With a
+        tenant, the name is namespaced (tenant__stream) so one
+        SparkSession serves many tenants — the analog of the
+        reference's per-tenant DataFusion schema
         (src/query/mod.rs:122-147)."""
         if tenant is not None:
             from ..rbac import tenant_view_name
 
             name = tenant_view_name(tenant, name)
-        with self._view_lock:  # query()'s restore loop iterates _streams
-            self._streams[name] = (df, time_col or self.time_col)
+        tcol = time_col or self.time_col
+        if isinstance(source, DataFrame):
+            reg = _Registration(lambda start, end: source, tcol, source)
+        else:
+            reg = _Registration(source, tcol, None)
+        with self._view_lock:
+            self._streams[name] = reg
             _VIEW_OWNER[name.lower()] = self
-            df.createOrReplaceTempView(name)
+            _restore_view(self.spark, name)
+
+    def _lookup(self, name: str) -> tuple[str, _Registration] | None:
+        """(registered key, registration) for a case-insensitive name —
+        Spark resolves temp views case-insensitively, so every lookup
+        must too (an exact-case miss silently skipped injection)."""
+        for key, reg in list(self._streams.items()):
+            if key.lower() == name.lower():
+                return key, reg
+        return None
 
     def deregister_stream(self, name: str, tenant: str | None = None) -> None:
         """Drop a stream's registration AND its temp view. Without the
@@ -349,14 +400,13 @@ class QueryEngine:
 
             name = tenant_view_name(tenant, name)
         with self._view_lock:
-            # case-insensitive pop, matching the view drop below and
-            # query()'s lookups: an exact-case miss left a _streams
-            # entry that the next query()'s restore loop used to
-            # resurrect the dropped view (review finding)
-            canon = {k.lower(): k for k in self._streams}
-            key = canon.get(name.lower())
-            if key is not None:
-                self._streams.pop(key, None)
+            # case-insensitive pop, matching the view drop below: an
+            # exact-case miss left a _streams entry that a later
+            # query's restore resurrected the dropped view from
+            # (review finding)
+            hit = self._lookup(name)
+            if hit is not None:
+                self._streams.pop(hit[0], None)
             owner = _VIEW_OWNER.get(name.lower())
             if owner is self:
                 del _VIEW_OWNER[name.lower()]
@@ -366,44 +416,56 @@ class QueryEngine:
                 # survive our teardown
                 self.spark.catalog.dropTempView(name)
 
-    def query(
-        self,
-        sql: str,
-        start: str | None = None,
-        end: str | None = None,
-        now=None,
-    ) -> DataFrame:
-        """Run SQL; inject the time filter on every referenced stream
-        unless the query already filters its time column (reference
-        behavior: src/query/mod.rs:404-411). Read-only statements only
-        (ensure_read_only); SQL-on-files relations are disabled at the
-        session level (see __init__)."""
-        ensure_read_only(sql)
+    @contextmanager
+    def _request_views(
+        self, sql: str, window: TimeRange | None, scans: dict | None = None
+    ):
+        """Install this request's view of every stream ``sql``
+        references, for the duration of the block, then restore what
+        rests between requests. Each stream's provider is asked once:
+        for ``window`` when the time filter is injected (the SQL does
+        not constrain that stream's time column itself), else for
+        everything — the window reaches the provider exactly where the
+        injected filter would drop the rows it prunes. ``scans``, a
+        dict the caller owns, memoises the providers' answers across
+        calls of one request (fast_count's detection, then the query).
+        Providers run outside the view lock: a scan lists files, and
+        that must not stall other tenants' analysis."""
+        scans = {} if scans is None else scans
         with self._view_lock:
-            lo = hi = None
-            if start is not None and end is not None:
-                tr = TimeRange.parse(start, end, now=now)
-                lo, hi = tr.sql_literals()
-            # Spark resolves temp views case-insensitively, so the
-            # lookup must too — an exact-case miss would silently
-            # skip injection and return full history (review finding)
-            canon = {k.lower(): k for k in self._streams}
-            replaced_own: list[str] = []
-            dropped_foreign: list[tuple[str, QueryEngine]] = []
-            for name in extract_table_names(sql, spark=self.spark):
-                key = canon.get(name.lower())
-                if key is not None:
-                    # install OUR view unconditionally (another tenant's
-                    # engine may have left a same-named view installed),
-                    # time-filtered unless the user constrains time
-                    df, tcol = self._streams[key]
-                    if lo is not None and not references_time_col(
-                        sql, tcol, stream=key, known_streams=set(canon)
-                    ):
-                        df = df.filter(f"{tcol} >= {lo} AND {tcol} < {hi}")
-                    df.createOrReplaceTempView(key)
-                    replaced_own.append(key)
-                    continue
+            streams = dict(self._streams)
+        canon = {k.lower(): k for k in streams}
+        known = set(canon)
+        views: dict[str, DataFrame] = {}
+        foreign: list[str] = []
+        for name in extract_table_names(sql, spark=self.spark):
+            key = canon.get(name.lower())
+            if key is None:
+                foreign.append(name)
+                continue
+            if key in views:
+                continue
+            reg = streams[key]
+            inject = window is not None and not references_time_col(
+                sql, reg.time_col, stream=key, known_streams=known
+            )
+            bounds = (window.start, window.end) if inject else (None, None)
+            memo_key = (key, *bounds)
+            if memo_key not in scans:
+                scans[memo_key] = reg.scan(*bounds)
+            df = scans[memo_key]
+            if inject:
+                lo, hi = window.sql_literals()
+                df = df.filter(f"{reg.time_col} >= {lo} AND {reg.time_col} < {hi}")
+            views[key] = df
+        with self._view_lock:
+            touched = []
+            for key, df in views.items():
+                # install OUR view unconditionally: another tenant's
+                # engine may have left a same-named view installed
+                df.createOrReplaceTempView(key)
+                touched.append(key)
+            for name in foreign:
                 owner = _VIEW_OWNER.get(name.lower())
                 if owner is not None and owner is not self:
                     # a DIFFERENT engine's stream: invisible to this
@@ -412,24 +474,43 @@ class QueryEngine:
                     # reading the other tenant's data (cross-tenant
                     # isolation; reference per-tenant schema resolution)
                     self.spark.catalog.dropTempView(name)
-                    dropped_foreign.append((name, owner))
+                    touched.append(name)
             try:
-                return self.spark.sql(sql)
+                yield
             finally:
-                # restore EXACTLY what this query touched (r7 review):
+                # restore EXACTLY what this request touched (r7 review:
                 # re-installing every stream of every involved engine
-                # (the old shape) let a foreign owner's SAME-NAMED view
-                # overwrite ours after we had just restored it — the
-                # other tenant's data then sat installed under our name
-                # until the next query — and did O(all streams) catalog
-                # writes per query under the process-global lock.
-                for key in replaced_own:
-                    self._streams[key][0].createOrReplaceTempView(key)
-                for name, owner in dropped_foreign:
-                    ocanon = {k.lower(): k for k in owner._streams}
-                    okey = ocanon.get(name.lower())
-                    if okey is not None and okey.lower() not in canon:
-                        owner._streams[okey][0].createOrReplaceTempView(okey)
+                # let a foreign owner's same-named view be overwritten,
+                # and did O(all streams) catalog writes per query under
+                # the process-global lock)
+                for name in touched:
+                    _restore_view(self.spark, name)
+
+    def _analyze(
+        self, sql: str, window: TimeRange | None, scans: dict | None
+    ) -> DataFrame:
+        ensure_read_only(sql)
+        with self._request_views(sql, window, scans):
+            return self.spark.sql(sql)
+
+    def query(
+        self,
+        sql: str,
+        start: str | None = None,
+        end: str | None = None,
+        now=None,
+        scans: dict | None = None,
+    ) -> DataFrame:
+        """Run SQL; inject the time filter on every referenced stream
+        unless the query already filters its time column (reference
+        behavior: src/query/mod.rs:404-411), and hand that stream's
+        provider the window. Read-only statements only
+        (ensure_read_only); SQL-on-files relations are disabled at the
+        session level (see __init__). ``scans``: see _request_views."""
+        window = None
+        if start is not None and end is not None:
+            window = TimeRange.parse(start, end, now=now)
+        return self._analyze(sql, window, scans)
 
     def execute(
         self,
@@ -486,7 +567,12 @@ class QueryEngine:
             raise out["err"]
         return out["val"]
 
-    def detect_bare_count(self, sql: str) -> tuple[str, str] | None:
+    def detect_bare_count(
+        self,
+        sql: str,
+        window: TimeRange | None = None,
+        scans: dict | None = None,
+    ) -> tuple[str, str] | None:
         """Plan-shape detection of `SELECT COUNT(*) FROM stream` with no
         filters/grouping — the COUNT(*) fast path trigger (reference
         is_logical_plan_count_without_filters, src/query/mod.rs:427-462:
@@ -495,21 +581,20 @@ class QueryEngine:
         Aggregate(no grouping, single count(1) expr) over an
         alias/view-wrapped leaf with nothing else (any Filter/Project in
         between disqualifies). Returns (stream_name, output_alias) when
-        the answer can come from manifest row counts without a scan."""
-        # the GATE must run before spark.sql(): Spark executes commands
-        # (SET / DROP VIEW / CREATE TABLE AS) EAGERLY at spark.sql(),
-        # so probing unvalidated SQL for its plan shape was a full
-        # read-only-gate bypass via the fast path — `SET
+        the answer can come from manifest row counts without a scan.
+        The views are the request's own (_request_views, for
+        ``window``): an injected time filter sits inside the view body,
+        below the stream's alias, so it does not disqualify."""
+        # the GATE (inside _analyze) must run before spark.sql(): Spark
+        # executes commands (SET / DROP VIEW / CREATE TABLE AS) EAGERLY
+        # at spark.sql(), so probing unvalidated SQL for its plan shape
+        # was a full read-only-gate bypass via the fast path — `SET
         # spark.sql.runSQLOnFiles=true` flipped the engine's file-read
         # defense before the 400 was returned (r7 review, high).
         # Returning None routes the statement to query(), whose own
         # ensure_read_only raises the consistent 400.
         try:
-            ensure_read_only(sql)
-        except ValueError:
-            return None
-        try:
-            plan = self.spark.sql(sql)._jdf.queryExecution().analyzed()
+            plan = self._analyze(sql, window, scans)._jdf.queryExecution().analyzed()
         except Exception:
             return None
         if plan.getClass().getSimpleName() != "Aggregate":

@@ -143,7 +143,10 @@ class ParseableAPI:
         self._stores: dict[str, StreamStore] = {}
         self._retention: dict[str, list[dict[str, Any]]] = {}
         self.targets = TargetRegistry()
-        self.scheduler = AlertScheduler(self.engine)
+        self._lock = threading.RLock()
+        # scheduled evaluations read live stores through the engine's
+        # scan providers, so they take the API lock like every request
+        self.scheduler = AlertScheduler(self.engine, lock=self._lock)
         self._alerts: dict[str, Any] = {}
         from .rbac import Rbac
 
@@ -169,7 +172,6 @@ class ParseableAPI:
         # expire after EXPIRY_DURATION = 1 h (rbac/mod.rs:47)
         self._sessions: dict[str, tuple[str, float]] = {}
         self._oauth_users: set[str] = set()  # oidc: principals (is_oauth)
-        self._lock = threading.RLock()
         self._target_bodies: dict[str, dict[str, Any]] = {}
         # outbound egress policy for alert targets (alert_target_policy.rs):
         # None until an admin PUTs one — then every new target's
@@ -228,13 +230,15 @@ class ParseableAPI:
                     ),
                     "zorder_cols": stored.get("zorder_cols"),
                 }
-            self._stores[name] = StreamStore(
-                self.spark,
-                self.root,
-                StreamConfig(name=name, **cfg_kwargs),
-                time_col=self.time_col,
-                delta_log_enabled=_delta_log_env(),
-                iceberg_enabled=_iceberg_env(),
+            self._add_store(
+                StreamStore(
+                    self.spark,
+                    self.root,
+                    StreamConfig(name=name, **cfg_kwargs),
+                    time_col=self.time_col,
+                    delta_log_enabled=_delta_log_env(),
+                    iceberg_enabled=_iceberg_env(),
+                )
             )
             stored_ret = load_versioned("retention", os.path.join(sdir, "retention.json"))
             if stored_ret is not None:
@@ -449,17 +453,28 @@ class ParseableAPI:
             raise ApiError(400, f"invalid stream name {name!r}")
         return name
 
+    def _add_store(self, store: StreamStore) -> None:
+        """Track a stream and register its scan with the engine — once:
+        every request then asks ``store.scan`` for its own window, so
+        no registered view carries one request's window or file list
+        into the next."""
+        name = store.config.name
+        self._stores[name] = store
+        self.engine.register_stream(name, store.scan, time_col=store.time_col)
+
     def get_or_create_stream(self, name: str) -> StreamStore:
         with self._lock:
             if name not in self._stores:
                 self.validate_stream_name(name)
-                self._stores[name] = StreamStore(
-                    self.spark,
-                    self.root,
-                    StreamConfig(name=name),
-                    time_col=self.time_col,
-                    delta_log_enabled=_delta_log_env(),
-                    iceberg_enabled=_iceberg_env(),
+                self._add_store(
+                    StreamStore(
+                        self.spark,
+                        self.root,
+                        StreamConfig(name=name),
+                        time_col=self.time_col,
+                        delta_log_enabled=_delta_log_env(),
+                        iceberg_enabled=_iceberg_env(),
+                    )
                 )
             return self._stores[name]
 
@@ -541,61 +556,21 @@ class ParseableAPI:
             raise ApiError(400, "empty startTime")
         if not end:
             raise ApiError(400, "empty endTime")
-        # register the current scan (staging ∪ parquet) of the streams
-        # the SQL actually references — registering all N streams paid
-        # N manifest prunes + N temp-view swaps under the API lock per
-        # query touching one table (review finding). Parser-derived
-        # extraction; anything unresolvable falls back to all streams.
-        from .query.engine import extract_table_names
-
-        canon = {k.lower(): k for k in self._stores}
         try:
-            referenced = {
-                canon[t.lower()]
-                for t in extract_table_names(sql, spark=self.spark)
-                if t.lower() in canon
-            }
-        except Exception:  # noqa: BLE001 — unparseable SQL: let the
-            referenced = set()  # engine surface the real error below
-        for name in referenced or self._stores:
-            store = self._stores[name]
-            self.engine.register_stream(name, store.scan(), time_col=store.time_col)
-        try:
-            if not self.ingestor_ports:
-                # COUNT(*) fast path (reference query.rs:186-256): a bare
-                # SELECT COUNT(*) FROM stream answers from manifest row
-                # counts + in-window staging when every file is FULLY
-                # inside the window — no scan. Boundary-straddling files
-                # or any filter/grouping fall through to the real query.
-                # Skipped in querier mode (peer staging isn't in local
-                # manifests).
-                from .query.counts import fast_count
-                from .query.engine import TimeRange
-
-                tr = TimeRange.parse(start, end)
-                fast = fast_count(
-                    self.engine,
-                    sql,
-                    self._stores,
-                    start=tr.start.replace(tzinfo=None),
-                    end=tr.end.replace(tzinfo=None),
-                )
-                if fast is not None:
-                    return fast
             if self.ingestor_ports:
                 # querier mode (airplane.rs:155-184): merge fresh staging
                 # events from ingestor peers for single-stream queries
-                # whose window touches the hot period
-                from .query.engine import extract_table_names
+                # whose window touches the hot period. Parser-derived
+                # (spark=) — the regex fallback misses FROM/**/s and
+                # case variants, silently skipping the fan-out (review
+                # finding)
                 from .flight import querier_query
+                from .query.engine import extract_table_names
 
                 canon = {k.lower(): k for k in self._stores}
                 streams = list(
                     dict.fromkeys(
                         canon[t.lower()]
-                        # parser-derived (spark=) — the regex fallback
-                        # misses FROM/**/s and case variants, silently
-                        # skipping the fan-out (review finding)
                         for t in extract_table_names(sql, spark=self.spark)
                         if t.lower() in canon
                     )
@@ -605,14 +580,33 @@ class ParseableAPI:
                     return querier_query(
                         self.engine,
                         name,
-                        self._stores[name].scan(),
+                        self._stores[name].scan,
                         sql,
                         start,
                         end,
                         ingestor_ports=self.ingestor_ports,
                         auth=self.ingestor_auth,
                     )
-            return self.engine.query(sql, start, end)
+                return self.engine.query(sql, start, end)
+            # COUNT(*) fast path (reference query.rs:186-256): a bare
+            # SELECT COUNT(*) FROM stream answers from manifest row
+            # counts + in-window staging when every file is FULLY inside
+            # the window — no scan. Boundary-straddling files or any
+            # filter/grouping fall through to the real query, which
+            # reuses the stream scans the detection resolved (`scans`).
+            # Querier mode skips it (peer staging isn't in local
+            # manifests).
+            from .query.counts import fast_count
+            from .query.engine import TimeRange
+
+            tr = TimeRange.parse(start, end)
+            scans: dict = {}
+            fast = fast_count(
+                self.engine, sql, self._stores, start=tr.start, end=tr.end, scans=scans
+            )
+            if fast is not None:
+                return fast
+            return self.engine.query(sql, start, end, scans=scans)
         except ValueError as e:  # bad time range / rejected SQL
             raise ApiError(400, str(e)) from e
 
@@ -1002,8 +996,6 @@ class ParseableAPI:
             if alert_id not in self._alerts:
                 raise ApiError(404, f"no alert {alert_id}")
             sa = self._alerts[alert_id]
-            for name, store in self._stores.items():
-                self.engine.register_stream(name, store.scan(), time_col=store.time_col)
             state = sa.evaluate(self.engine)
         return {"id": alert_id, "state": state.value}
 
@@ -1158,16 +1150,9 @@ class ParseableAPI:
             raise ApiError(400, str(e)) from e
         lo, hi = tr.start.replace(tzinfo=None), tr.end.replace(tzinfo=None)
         with self._lock:
-            from pyspark.sql import functions as F
-
             dfs, tcs = [], []
             for tc in cfg["tableConfigs"]:
-                store = self._stores[tc["tableName"]]
-                df = store.scan().filter(
-                    (F.col(store.time_col) >= F.lit(lo))
-                    & (F.col(store.time_col) < F.lit(hi))
-                )
-                dfs.append(df)
+                dfs.append(self._stores[tc["tableName"]].scan(lo, hi))
                 tcs.append(TableConfig(tc["tableName"], tuple(tc["selectedFields"])))
             jcs = tuple(
                 JoinCondition(j["tableName"], j["field"])
@@ -1610,7 +1595,8 @@ class ParseableAPI:
         """Shared request plumbing for the trace routes: resolve the
         dataset, validate it carries span columns, apply the time
         window and optional serviceName filter. The span source is the
-        same store.scan() every query uses (staging ∪ parquet)."""
+        store's scan of the window (manifest-pruned parquet ∪ staging),
+        the same one every query of that window reads."""
         from pyspark.sql import functions as F
 
         from .query.engine import TimeRange
@@ -1625,7 +1611,8 @@ class ParseableAPI:
             )
         except ValueError as e:
             raise ApiError(400, str(e)) from e
-        df = store.scan()
+        lo, hi = tr.start.replace(tzinfo=None), tr.end.replace(tzinfo=None)
+        df = store.scan(lo, hi)
         cols = set(df.columns)
         # OTel flattening names the resource attribute `service.name`
         # (otel.py separator '.'); the span helpers use service_name
@@ -1637,10 +1624,7 @@ class ParseableAPI:
             raise ApiError(
                 400, f"dataset {dataset} is not a trace dataset (missing {missing})"
             )
-        lo, hi = tr.start.replace(tzinfo=None), tr.end.replace(tzinfo=None)
-        df = df.filter(
-            (F.col(store.time_col) >= F.lit(lo)) & (F.col(store.time_col) < F.lit(hi))
-        ).filter(F.col("service_name").isNotNull())
+        df = df.filter(F.col("service_name").isNotNull())
         service = (body.get("serviceName") or "").strip()
         if body.get("serviceName") is not None and not service:
             raise ApiError(400, "serviceName must not be empty when provided")
@@ -2214,9 +2198,7 @@ class ParseableAPI:
 
         with self._lock:
             tcol = store.time_col
-            df = store.scan().filter(
-                (F.col(tcol) >= F.lit(lo)) & (F.col(tcol) < F.lit(hi))
-            )
+            df = store.scan(lo, hi)
             if where:
                 df = df.filter(where)
             # microsecond offsets: SECOND-granularity truncation misbins
@@ -2341,7 +2323,7 @@ class ParseableAPI:
                         "zorder_cols": list(zorder_cols) if zorder_cols else None,
                     },
                 )
-            self._stores[name] = store
+            self._add_store(store)
 
     def delete_stream(self, name: str) -> None:
         """DELETE /api/v1/logstream/{name} (logstream.rs:52-94): drop
@@ -2560,12 +2542,14 @@ class ParseableAPI:
         the loop continues (one bad stream must not stop the fleet's
         retention forever).
 
-        The sub-tick cadence is ≤60 s on purpose: scan()'s staging
-        union is gated to the last STAGING_WINDOW_SECONDS (300 s), so
-        acknowledged events are only fully queryable if staging reaches
-        parquet faster than that window — without a sync cadence,
-        events older than 5 minutes silently vanished from bounded
-        queries and a restart lost everything since boot."""
+        The sub-tick cadence is ≤60 s on purpose. A local query sees
+        staged events whatever their age (scan() unions staging when a
+        staged batch's time range overlaps the window), but staging is
+        memory: a restart loses everything not yet synced. And a
+        querier fans out to ingestor peers only when its window touches
+        the last flight.STAGING_WINDOW_SECONDS (300 s), so an ingestor
+        must sync faster than that or its acknowledged events vanish
+        from the querier's results."""
         import logging
         import threading
 
@@ -2597,7 +2581,7 @@ class ParseableAPI:
             # NEVER run retention (review finding)
             tick()
             # between full passes: flush staging (the 60 s sync cycle —
-            # MUST beat the 300 s staging query window) and reap
+            # MUST beat the 300 s querier fan-out window) and reap
             # compaction tombstones — with only the daily cadence,
             # swapped-out inputs would sit on disk for a whole interval
             # after their 330 s grace expired

@@ -31,7 +31,6 @@ class TestCompaction:
         assert store.count_fast_path() == before_rows
         df = store.scan(
             start=ts - timedelta(days=1), end=ts + timedelta(days=1),
-            now=ts + timedelta(days=1),
         )
         assert df.count() == 3
         assert {r["status"] for r in df.collect()} == {"s0", "s1", "s2"}
@@ -85,7 +84,7 @@ class TestCompaction:
         assert store.count_fast_path() == before_rows
         # scan + time pruning still correct (stats carry the time col)
         df = store.scan(
-            start=base, end=base.replace(minute=59), now=base + timedelta(days=1)
+            start=base, end=base.replace(minute=59)
         )
         assert {r["status"] for r in df.collect()} == {"m1", "m2", "m3"}
         pruned = store.manifest.prune_paths(
@@ -131,7 +130,7 @@ class TestCompaction:
         assert store.compact(level="hour") == 1
         assert len(store.manifest.files) == 1
         df = store.scan(
-            start=base, end=base + timedelta(hours=1), now=base + timedelta(days=1)
+            start=base, end=base + timedelta(hours=1)
         )
         assert {r["status"] for r in df.collect()} == {"m1", "m2"}
 

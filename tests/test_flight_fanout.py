@@ -51,7 +51,7 @@ def test_fresh_ingestor_events_appear_in_querier_results(spark, tmp_path):
         p_timestamp=NOW - timedelta(seconds=20),
     )
     engine_b = QueryEngine(spark, time_col="p_timestamp")
-    engine_b.register_stream("applogs", store_b.scan(now=NOW), time_col="p_timestamp")
+    engine_b.register_stream("applogs", store_b.scan(), time_col="p_timestamp")
     server_b = serve(engine_b)
 
     # --- querier process A: its own store with older, flushed data
@@ -62,7 +62,7 @@ def test_fresh_ingestor_events_appear_in_querier_results(spark, tmp_path):
     )
     store_a.flush()
     engine_a = QueryEngine(spark, time_col="p_timestamp")
-    local = store_a.scan(now=NOW)
+    local = store_a.scan()
 
     start = (NOW - timedelta(hours=1)).strftime("%Y-%m-%dT%H:%M:%SZ")
     end = (NOW + timedelta(minutes=1)).strftime("%Y-%m-%dT%H:%M:%SZ")
@@ -109,7 +109,7 @@ def test_past_window_skips_rpc_entirely(spark, tmp_path):
     store.ingest([{"k": "v"}], p_timestamp=NOW - timedelta(hours=3))
     store.flush()
     engine = QueryEngine(spark, time_col="p_timestamp")
-    local = store.scan(now=NOW)
+    local = store.scan()
     start = (NOW - timedelta(hours=4)).strftime("%Y-%m-%dT%H:%M:%SZ")
     end = (NOW - timedelta(hours=1)).strftime("%Y-%m-%dT%H:%M:%SZ")
     rows = querier_query(
@@ -166,7 +166,7 @@ def test_flight_requires_auth_when_configured(spark, tmp_path):
     store = StreamStore(spark, str(tmp_path / "s"), StreamConfig(name="app"))
     store.ingest([{"n": 1}], p_timestamp=NOW)
     engine = QueryEngine(spark, time_col="p_timestamp")
-    engine.register_stream("app", store.scan(now=NOW), time_col="p_timestamp")
+    engine.register_stream("app", store.scan(), time_col="p_timestamp")
     srv = serve(engine, auth=("cluster", "secret"))
     try:
         with pytest.raises(fl.FlightUnauthenticatedError):
@@ -205,7 +205,7 @@ def test_staging_only_fanout_does_not_double_count(spark, tmp_path):
     engine_i = QueryEngine(spark, time_col="p_timestamp")
     # the ingestor registers its FULL view (the hazardous wiring) —
     # the stores-aware staging_only path must still answer staging only
-    engine_i.register_stream("app", shared.scan(now=NOW), time_col="p_timestamp")
+    engine_i.register_stream("app", shared.scan(), time_col="p_timestamp")
     ingestor = serve(engine_i, stores={"app": shared})
     try:
         start = (NOW - timedelta(hours=1)).strftime("%Y-%m-%dT%H:%M:%SZ")
@@ -225,12 +225,12 @@ def test_staging_only_fanout_does_not_double_count(spark, tmp_path):
         querier_store = StreamStore(
             spark, str(tmp_path / "shared"), StreamConfig(name="app")
         )
-        assert querier_store.scan(now=NOW).count() == 3  # parquet only
+        assert querier_store.scan().count() == 3  # parquet only
         engine_q = QueryEngine(spark, time_col="p_timestamp")
         out = querier_query(
             engine_q,
             "app",
-            querier_store.scan(now=NOW),
+            querier_store.scan(),
             "select count(*) AS n from `app`",
             start,
             end,

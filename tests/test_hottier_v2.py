@@ -200,7 +200,6 @@ def test_run_compaction_all_streams(spark, tmp_path):
         df = st.scan(
             start=datetime(2024, 1, 15),
             end=datetime(2024, 1, 16),
-            now=datetime(2024, 1, 16),
         )
         assert df.count() == 2
     # idempotent second pass

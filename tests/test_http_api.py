@@ -1757,8 +1757,6 @@ def test_alert_modify_enable_disable(spark, tmp_path):
         # disable: scheduler skips it entirely
         d = req("PATCH", f"/api/v1/alerts/{aid}/disable", None, admin)
         assert d["enabled"] is False
-        for name, store in api._stores.items():
-            api.engine.register_stream(name, store.scan(), time_col=store.time_col)
         assert api.scheduler.run_pending() == 0
         # enable: evaluated again on the next due tick
         e = req("PATCH", f"/api/v1/alerts/{aid}/enable", None, admin)
@@ -2117,8 +2115,6 @@ def test_user_role_mgmt_and_notification_state(spark, tmp_path):
         out = req("PATCH", "/api/v1/alerts/a9/update_notification_state",
                   {"state": "indefinite"})
         assert out["mutedUntil"] is None
-        for name, store in api._stores.items():
-            api.engine.register_stream(name, store.scan(), time_col=store.time_col)
         state = sa.evaluate(api.engine)
         assert state is AlertState.TRIGGERED  # evaluation still runs
         assert rec.transport.calls == []  # delivery muted

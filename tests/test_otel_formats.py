@@ -417,7 +417,7 @@ class TestR6ReviewFixes:
         )
         st.flush()
         rows = (
-            st.scan(now=datetime(2026, 8, 14, 12, 1))
+            st.scan()
             .select("data_point_value")
             .collect()
         )

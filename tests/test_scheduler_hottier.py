@@ -147,7 +147,6 @@ class TestScanProviderCompletion:
             ht.add(f.file_path)
         df = store.scan(
             start=datetime(2026, 7, 31), end=datetime(2026, 8, 2),
-            now=datetime(2026, 8, 2),
         )
         assert df.count() == 2
         # the scan read the hot-tier copies, not the remote paths
@@ -203,6 +202,5 @@ class TestScanProviderCompletion:
         assert ht.used_bytes() > 0
         df = store.scan(
             start=datetime(2026, 7, 31), end=datetime(2026, 8, 2),
-            now=datetime(2026, 8, 2),
         )
         assert all(str(tmp_path / "hot") in p for p in df.inputFiles())

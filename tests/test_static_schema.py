@@ -252,7 +252,7 @@ def test_time_partition_flush_scan_prunes_by_event_time(spark, tmp_path):
         [{"event_ts": iso(base + timedelta(minutes=i)), "n": i} for i in range(5)]
     )
     store.flush()
-    df = store.scan(now=now)
+    df = store.scan()
     got = df.filter(
         (df["p_timestamp"] >= base) & (df["p_timestamp"] < base + timedelta(minutes=10))
     )

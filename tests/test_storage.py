@@ -53,7 +53,7 @@ class TestSinkAndManifest:
             "p_timestamp", "2026-08-02T00:00:00", "2026-08-03T00:00:00"
         )
         assert len(all_paths) == 3 and len(pruned) == 1
-        df = st.scan(_ts(2), _ts(3), now=_ts(10))
+        df = st.scan(_ts(2), _ts(3))
         assert df.count() == 1
         assert df.collect()[0]["d"] == 2.0
 
@@ -80,13 +80,14 @@ class TestStagingWindow:
         st.ingest([{"x": 1}], p_timestamp=_ts(1, 10, 0))
         st.flush()
         st.ingest([{"x": 2}], p_timestamp=_ts(1, 12, 4))  # staged only
-        now = _ts(1, 12, 5)
-        # query window touches last 5 min → staging unioned in
-        fresh = st.scan(_ts(1, 0, 0), _ts(1, 12, 5), now=now)
+        # window overlaps the staged batch's time range → staging unioned in
+        fresh = st.scan(_ts(1, 0, 0), _ts(1, 12, 5))
         assert fresh.count() == 2
-        # historical window (end before now-5min) → parquet only
-        old = st.scan(_ts(1, 0, 0), _ts(1, 11, 0), now=now)
+        # window ends before the staged batch's time range → parquet only
+        old = st.scan(_ts(1, 0, 0), _ts(1, 11, 0))
         assert old.count() == 1
+        assert not st._staging_in_window(_ts(1, 0, 0), _ts(1, 11, 0))
+        assert st._staging_in_window(_ts(1, 12, 4), _ts(1, 12, 5))
 
     def test_schema_evolution_across_flushes(self, spark, tmp_path):
         st = _mk_store(spark, tmp_path)
@@ -108,7 +109,7 @@ class TestRetention:
         st.flush()
         removed = st.apply_retention(days=5, now=_ts(10))
         assert removed == 1  # day 1 is >5 days old
-        assert st.scan(now=_ts(10)).count() == 2
+        assert st.scan().count() == 2
         assert st.manifest.total_rows() == 2
 
 
