@@ -93,6 +93,38 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
+def nearest_cell(v: Column, cands: Column, ndigits: int) -> Column:
+    """The one nearest-cell comparator: per-row argmax of `v` over
+    `cands`, an array<struct(cid, cv)> codebook attached to the row
+    (one broadcast row of collect_list(struct(cid, cv))). Returns
+    struct(sim, ncid): sim = round(cosine(v, cv), ndigits) and ncid =
+    -cid, so the winning cell is -ncid. Struct ordering compares sim
+    first, then ncid: the highest rounded similarity wins, ties go to
+    the smaller cid, and a NULL sim (zero-norm vector) loses to any
+    number. The result is NULL when `cands` is NULL or empty.
+
+    `greatest` orders struct(sim, ncid) the same way and skips NULL, so
+    the argmax over a codebook split into blocks is
+    greatest(argmax(block_1), argmax(block_2), ...) — exact.
+
+    Bound: one collect_list row is built by one final-aggregation task
+    and broadcast whole. Keep it well under Spark's per-row/broadcast
+    limits (~10⁵ cells × 1k dims ≈ 1 GB is past them); larger
+    codebooks are split into blocks and combined with `greatest`, as
+    the streaming ANN index does. Callers wrap the result in
+    `eval_once`: the interpreted HOF body must not be copied into a
+    consumer filter or a second field extraction."""
+    return F.array_max(
+        F.transform(
+            cands,
+            lambda c: F.struct(
+                F.round(cosine(v, c["cv"]), ndigits).alias("sim"),
+                (-c["cid"]).alias("ncid"),
+            ),
+        )
+    )
+
+
 def eval_once(c: Column) -> Column:
     """Pin an expensive projection expression to exactly ONE evaluation
     per row. Catalyst re-evaluates expressions wherever it copies them:

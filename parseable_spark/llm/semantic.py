@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..functions import as_double_array, cosine, eval_once
+from ..functions import as_double_array, cosine, eval_once, nearest_cell
 
 
 def _centroid_df(spark, centroids: list[tuple[int, list[float]]]):
@@ -52,48 +52,19 @@ def kmeans_assign(
 ) -> DataFrame:
     """(id, cluster, sim, v): nearest centroid by cosine, argmax
     PER-ROW over the codebook attached as one broadcast row of
-    collect_list(struct(cid, cv)). r11 rework (guide §2.4): the old
-    join(broadcast)+groupBy-argmax emitted k rows per vector and then
-    shuffled the whole corpus through the groupBy (first(v) dragged
-    every embedding across the exchange) — ONCE PER k-MEANS ITERATION
-    via kmeans_fit. array_max keeps the exact max(struct(sim, -cid))
-    comparator (same rounding, same tie-break), with zero shuffles of
-    the vector corpus; the broadcast payload (k x dim doubles) is
-    unchanged.
+    collect_list(struct(cid, cv)) — `functions.nearest_cell`, whose
+    docstring states the comparator and the codebook-size bound. The
+    vector corpus is never shuffled.
 
-    Behavior change vs the pre-r11 join shape (ADVICE r11): an EMPTY
-    centroid list now raises ValueError instead of returning an empty
-    DataFrame — there is no meaningful assignment against zero
-    centroids, and the old empty-in/empty-out silently produced a
-    frame downstream code joined against. kmeans_fit guards its own
-    calls; external callers relying on empty-in/empty-out must check
-    first.
-
-    Codebook-size bound (ADVICE r11): the codebook rides in ONE row of
-    collect_list(struct(cid, cv)) built by a single final-aggregation
-    task and broadcast whole. That is the right shape for the codebook
-    sizes these paths produce (registry queries: ≤64 cells; the
-    streaming index assigns per LEVEL, bounded by split_fanout_cap ×
-    internal nodes per level) but NOT for arbitrarily large codebooks:
-    past ~10⁵ cells × 1k dims (~1 GB in one row) the single row
-    approaches Spark's per-row/broadcast limits — callers with
-    codebooks that size should shard the assignment (chunk the
-    centroid list, argmax per chunk, combine) rather than grow this
-    row."""
+    An EMPTY centroid list raises ValueError: there is no meaningful
+    assignment against zero centroids. kmeans_fit guards its own
+    calls; external callers must check first."""
     if not centroids:
         raise ValueError("kmeans_assign requires a non-empty centroid list")
     cents = _centroid_df(embeddings.sparkSession, centroids)
     cent_row = cents.agg(F.collect_list(F.struct("cid", "cv")).alias("_cents"))
     vecs = embeddings.select(F.col(id_col), as_double_array(vec_col).alias("v"))
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                F.round(cosine(F.col("v"), c["cv"]), ndigits).alias("sim"),
-                (-c["cid"]).alias("neg_cid"),
-            ),
-        )
-    )
+    best = nearest_cell(F.col("v"), F.col("_cents"), ndigits)
     # two-stage select with eval_once: `best` is consumed twice
     # (cluster + sim); writing both extractions over the raw expression
     # would run the whole codebook argmax twice per row (interpreted
@@ -105,7 +76,7 @@ def kmeans_assign(
     )
     return staged.select(
         F.col(id_col),
-        (-F.col("_best")["neg_cid"]).alias("cluster"),
+        (-F.col("_best")["ncid"]).alias("cluster"),
         F.col("_best")["sim"].alias("sim"),
         "v",
     )

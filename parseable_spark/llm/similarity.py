@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import as_double_array, cosine, eval_once
+from ..functions import as_double_array, cosine, eval_once, nearest_cell
 
 
 def brute_force_topk(
@@ -117,37 +117,17 @@ def ivf_ann(
         .limit(nprobe)
         .collect()
     ]
-    # cell assignment: PER-ROW argmax over the codebook, attached as one
-    # broadcast row holding collect_list(struct(cid, cv)). r11 rework
-    # (guide §2.4): the previous join(broadcast)+groupBy-argmax emitted
-    # n_centroids rows per vector and then shuffled the whole embedding
-    # corpus through the groupBy (first(v) dragged every vector across
-    # the exchange). array_max over the in-row codebook keeps the exact
-    # max(struct(sim, -cid)) comparator — same rounding, same tie-break
-    # — with ZERO shuffles of the vector corpus at any scale. The
-    # broadcast payload (k x dim doubles) is unchanged. Bound (ADVICE
-    # r11): the single collect_list row is built by one final-agg task
-    # and must stay well under Spark's per-row/broadcast limits —
-    # fine for the ≤64-cell codebooks these query paths produce;
-    # ~10⁵ cells × 1k dims would need a sharded argmax instead (see
-    # semantic.kmeans_assign docstring).
+    # cell assignment: per-row argmax over the codebook attached as one
+    # broadcast row (functions.nearest_cell) — no shuffle of the corpus
     vecs = embeddings.select(F.col(id_col), as_double_array(vec_col).alias("v"))
     cent_row = cents.agg(F.collect_list(F.struct("cid", "cv")).alias("_cents"))
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                F.round(cosine(F.col("v"), c["cv"]), 6).alias("sim"),
-                (-c["cid"]).alias("neg_cid"),
-            ),
-        )
-    )
+    best = nearest_cell(F.col("v"), F.col("_cents"), 6)
     # eval_once: without it the probe filter below is substituted
     # through this projection (and into the cross-join condition),
     # re-running the whole codebook argmax per row per copy — measured
     # 2x per-row cost (no CSE for interpreted HOF expressions)
     assigned = vecs.crossJoin(broadcast(cent_row)).select(
-        F.col(id_col), (-eval_once(best)["neg_cid"]).alias("cell"), "v"
+        F.col(id_col), (-eval_once(best)["ncid"]).alias("cell"), "v"
     )
     hits = assigned.filter(F.col("cell").isin(probe))
     scored = hits.select(
@@ -280,41 +260,28 @@ def ivf_ann_hierarchical(
         F.col(id_col).alias("cid"), as_double_array(vec_col).alias("cv")
     )
     coarse = embeddings.filter(F.col(id_col) < n_coarse).select(
-        F.col(id_col).alias("gid"), as_double_array(vec_col).alias("gv")
+        F.col(id_col).alias("cid"), as_double_array(vec_col).alias("cv")
     )
 
-    # r11 rework (guide §2.4): every argmax below is PER-ROW over an
-    # in-row codebook array (one broadcast row of collect_list(struct))
-    # instead of join(broadcast)+groupBy — the old shape shuffled the
-    # full vector corpus through THREE groupBys (first(v) dragging each
-    # embedding across every exchange). Comparator unchanged:
-    # max(struct(round(cosine, 6), -id)) — same rounding, same
-    # tie-break, so assignments are bit-identical.
-    coarse_row = coarse.agg(F.collect_list(F.struct("gid", "gv")).alias("_coarse"))
-
-    def _best_group(vec_col_name: str):
-        return F.array_max(
-            F.transform(
-                F.col("_coarse"),
-                lambda g: F.struct(
-                    F.round(cosine(F.col(vec_col_name), g["gv"]), 6).alias("sim"),
-                    (-g["gid"]).alias("neg"),
-                ),
-            )
-        )
+    # every argmax below is per-row over an in-row codebook array (one
+    # broadcast row of collect_list(struct(cid, cv)),
+    # functions.nearest_cell) — no shuffle of the vector corpus
+    coarse_row = coarse.agg(F.collect_list(F.struct("cid", "cv")).alias("_coarse"))
 
     # fine centroid → coarse group (C rows × n_coarse — tiny)
-    cent_group = (
-        cents.crossJoin(broadcast(coarse_row))
-        .select("cid", (-_best_group("cv")["neg"]).alias("gid"), "cv")
+    cent_group = cents.crossJoin(broadcast(coarse_row)).select(
+        "cid",
+        (-nearest_cell(F.col("cv"), F.col("_coarse"), 6)["ncid"]).alias("gid"),
+        "cv",
     )
 
     # vector → coarse group (n × n_coarse cosines, map-side).
     # eval_once: the fine-cell join below infers isnotnull(gid) and
     # would substitute the full coarse argmax into a pushed filter
     vecs = embeddings.select(F.col(id_col), as_double_array(vec_col).alias("v"))
+    best_group = nearest_cell(F.col("v"), F.col("_coarse"), 6)
     vec_group = vecs.crossJoin(broadcast(coarse_row)).select(
-        id_col, (-eval_once(_best_group("v"))["neg"]).alias("gid"), "v"
+        id_col, (-eval_once(best_group)["ncid"]).alias("gid"), "v"
     )
 
     # vector → fine cell within its coarse group (n × C/n_coarse
@@ -323,18 +290,10 @@ def ivf_ann_hierarchical(
     group_cents = cent_group.groupBy("gid").agg(
         F.collect_list(F.struct("cid", "cv")).alias("_gc")
     )
-    best_cell = F.array_max(
-        F.transform(
-            F.col("_gc"),
-            lambda c: F.struct(
-                F.round(cosine(F.col("v"), c["cv"]), 6).alias("sim"),
-                (-c["cid"]).alias("neg"),
-            ),
-        )
-    )
+    best_cell = nearest_cell(F.col("v"), F.col("_gc"), 6)
     # eval_once: same single-evaluation pin for the probe filter below
     assigned = vec_group.join(broadcast(group_cents), "gid").select(
-        F.col(id_col), (-eval_once(best_cell)["neg"]).alias("cell"), "v"
+        F.col(id_col), (-eval_once(best_cell)["ncid"]).alias("cell"), "v"
     )
 
     # probe cells: nearest fine centroids to the query (single-vector work)

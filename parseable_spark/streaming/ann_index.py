@@ -99,12 +99,12 @@ import json
 import logging
 import os
 import shutil
-from typing import Callable
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..llm.semantic import kmeans_fit
-from ..functions import as_double_array, cosine, dot, eval_once, l2_norm
+from ..functions import as_double_array, cosine, dot, eval_once, l2_norm, nearest_cell
 from .dedup_index import BatchPartitionedIndex, read_log, save_log_schema
 
 _LOG = logging.getLogger(__name__)
@@ -1166,54 +1166,17 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
                 )
         if not planned:
             return rows, None, []
-        split_cents = self.spark.createDataFrame(
-            planned, "pcell bigint, ccid bigint, ccv array<double>"
-        )
         fit_parents = sorted({p for p, _, _ in planned})
         affected = work.filter(F.col("cell").isin(fit_parents))
-        # per-row argmax over the parent's OWN children (r12, guide
-        # §2.4 — the same broadcast-codebook argmax adopted for the
-        # q33/q40/kmeans paths in r11): the former
-        # join(broadcast)+groupBy(id) emitted k rows per member and
-        # then shuffled every pulled VECTOR through a
-        # hashpartitioning(id) exchange to collapse them (first(v)
-        # dragged the payload) — attribution at 2^15 put the split
-        # phase at 96 of 412 MB of compaction wchar
-        # (tools/compact_attrib_probe.py). collect_list(struct) per
-        # parent is bounded by split_fanout_cap (≤16 children × dim
-        # doubles), the comparator is IDENTICAL (round(·,9), -cid
-        # tie-break — max over struct(sim, ncid) field-order compare),
-        # and the output stays one row per input row with ZERO
-        # shuffles. Crash-duplicate ids (write-then-delete leftovers)
-        # pass through where the groupBy incidentally collapsed them —
-        # benign by the module contract (probes dedup pairs, later
-        # merges dedup rows), same as every other layer. eval_once
-        # pins the interpreted HOF to one evaluation per row (r11,
-        # tests/test_eval_once.py).
-        split_cands = split_cents.groupBy("pcell").agg(
-            F.collect_list(F.struct(F.col("ccid"), F.col("ccv"))).alias("_cands")
-        )
-        best = F.array_max(
-            F.transform(
-                F.col("_cands"),
-                lambda c: F.struct(
-                    F.round(cosine(F.col("v"), c["ccv"]), 9).alias("sim"),
-                    (-c["ccid"]).alias("ncid"),
-                ),
-            )
-        )
-        reassigned = (
-            affected.join(F.broadcast(split_cands), F.col("cell") == F.col("pcell"))
-            .withColumn("_best", eval_once(best))
-            .select(
-                self.id_col,
-                "v",
-                (-F.col("_best.ncid")).cast("bigint").alias("cell"),
-                F.col("cell").alias("pcell"),
-                "src",
-            )
-            .localCheckpoint()  # one pass; reused for sizes AND rows
-        )
+        # each member moves to the nearest of its parent's OWN new
+        # children: one row out per row in, no shuffle of the pulled
+        # vectors. Crash-duplicate ids (write-then-delete leftovers)
+        # pass through — benign by the module contract (probes dedup
+        # pairs, later merges dedup rows), same as every other layer.
+        reassigned = self._nearest_under_parent(
+            affected,
+            self._pair_blocks(planned, "pcell bigint, cid bigint, cv array<double>"),
+        ).localCheckpoint()  # one pass; reused for sizes AND rows
         child_sizes = {
             r["cell"]: r["n"]
             for r in reassigned.groupBy("cell")
@@ -1257,120 +1220,87 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
             drop_dirs,
         )
 
-    # caps for the flat stray re-home (r12): per-parent subtree-leaf
-    # candidates and the total broadcast pair count. At the production
-    # header geometry (768-dim doubles) 16,384 pairs ≈ 100 MB framed —
-    # inside the SHJ-era 4–8 GiB executor floor SCALE.md documents.
-    # Parents past either cap fall back to the root descent.
-    _FLAT_REHOME_LEAF_CAP = 4096
-    _FLAT_REHOME_PAIR_CAP = 16384
+    # (parent, candidate) pairs per broadcast block of
+    # ``_nearest_under_parent``: at 768-dim doubles 16,384 pairs ≈
+    # 100 MB framed, inside the 4–8 GiB executor floor SCALE.md
+    # documents
+    _ARGMAX_BLOCK_PAIRS = 16384
 
-    def _rehome_strays(self, stray: DataFrame, stray_cells: list[int]):
-        """Re-home rows stranded under since-split (non-leaf) cells.
+    def _pair_blocks(self, pairs: list[tuple], schema: str) -> Iterator[DataFrame]:
+        """``pairs`` (parent, candidate, ...) as frames of at most
+        ``_ARGMAX_BLOCK_PAIRS`` rows each."""
+        step = self._ARGMAX_BLOCK_PAIRS
+        for i in range(0, len(pairs), step):
+            yield self.spark.createDataFrame(pairs[i : i + step], schema)
 
-        r12, attribution-directed (tools/compact_attrib_probe.py,
-        guide §2.4): the former implementation sent every stray row
-        through the full ``_assign_cells`` root DESCENT — per tree
-        level, a shuffle-hash re-attach of the stray VECTORS, a beam
-        ranking window, and (at depth ≥3) a localCheckpoint. That
-        machinery exists so un-assigned BATCHES never meet the whole
-        leaf set at once; for strays it is waste, because a stray's
-        destination is known to be inside its own parent's subtree
-        (the split children were fit on the parent's members, and
-        probes to any descendant leaf read the parent's dirs via
-        ancestor expansion). Measured at the 2^15 write axis, the
-        descent was 145 of 412 MB of compaction wchar and the
-        fastest-growing term (×13.5 per-batch per ×4 history — depth
-        growth multiplies the per-level shuffles AND turns on the
-        per-level checkpoints).
+    def _nearest_under_parent(
+        self, rows: DataFrame, blocks: Iterable[DataFrame]
+    ) -> DataFrame:
+        """Move each row of ``rows`` (id, v, cell, src) to the nearest
+        candidate of its parent ``cell``. ``blocks`` are (pcell, cid,
+        cv) frames of at most ``_ARGMAX_BLOCK_PAIRS`` (parent,
+        candidate) pairs each, together holding every row's parent.
+        The comparator is ``functions.nearest_cell`` at round(·, 9).
 
-        Here each stray row instead takes a per-row argmax over its
-        parent's DESCENDANT LEAVES, attached as one broadcast
-        collect_list(struct(cid, cv)) per parent — the same
-        broadcast-codebook argmax the r11 round adopted for
-        q33/q40/kmeans assignment: zero shuffles of the stray vectors,
-        no per-level plan growth, deterministic comparator
-        (round(·,9) sim, -cid tie-break). Subtrees past the caps above
-        (ancient strays under a root whose region grew thousands of
-        leaves) keep the old descent — bounded broadcast by
-        construction. Yields 0–2 frames of (id, v, cell, src)."""
+        Each block becomes one broadcast collect_list(struct(cid, cv))
+        row per parent, left-joined on the parent cell, and its argmax
+        is folded in with ``greatest`` — exact, since ``greatest``
+        orders struct(sim, ncid) as the argmax does and skips the NULL
+        of a block holding none of the row's candidates. Returns (id,
+        v, cell, pcell, src), ``pcell`` the parent."""
         from pyspark.sql import functions as F
 
-        if not stray_cells:
-            return
-        kids = self._children
+        out = rows
+        for i, block in enumerate(blocks):
+            cand_rows = block.groupBy("pcell").agg(
+                F.collect_list(F.struct("cid", "cv")).alias("_cands")
+            )
+            # eval_once pins the interpreted HOF to one run per row
+            best = eval_once(nearest_cell(F.col("v"), F.col("_cands"), 9))
+            out = (
+                out.join(
+                    F.broadcast(cand_rows), F.col("cell") == F.col("pcell"), "left"
+                )
+                .withColumn("_best", F.greatest("_best", best) if i else best)
+                .drop("pcell", "_cands")
+            )
+        return out.select(
+            self.id_col,
+            "v",
+            (-F.col("_best.ncid")).cast("bigint").alias("cell"),
+            F.col("cell").alias("pcell"),
+            "src",
+        )
 
-        def leaves_under(p: int) -> list[int]:
-            out: list[int] = []
+    def _rehome_strays(self, stray: DataFrame, stray_cells: list[int]) -> DataFrame:
+        """Re-home rows stranded under since-split (non-leaf) cells to
+        the nearest of their parent's DESCENDANT LEAVES. The
+        destination stays inside the parent's subtree — the split
+        children were fit on the parent's members, and probes to any
+        descendant leaf read the parent's dirs via ancestor expansion
+        — so a stray is findable throughout. Returns (id, v, cell,
+        src)."""
+        from pyspark.sql import functions as F
+
+        kids = self._children
+        pairs = []
+        for p in stray_cells:
             stack = [p]
             while stack:
                 c = stack.pop()
-                cs = kids.get(c)
-                if cs:
-                    stack.extend(cs)
+                if c in kids:
+                    stack.extend(kids[c])
                 else:
-                    out.append(c)
-            return sorted(out)
-
-        subtrees = {p: leaves_under(p) for p in stray_cells}
-        flat: list[int] = []
-        deep: list[int] = []
-        budget = self._FLAT_REHOME_PAIR_CAP
-        for p in sorted(stray_cells, key=lambda c: len(subtrees[c])):
-            n = len(subtrees[p])
-            if n <= self._FLAT_REHOME_LEAF_CAP and n <= budget:
-                flat.append(p)
-                budget -= n
-            else:
-                deep.append(p)
-        if flat:
-            pair_df = self.spark.createDataFrame(
-                [(int(p), int(l)) for p in flat for l in subtrees[p]],
-                "pcell bigint, lcid bigint",
-            )
-            cands = (
-                pair_df.join(
-                    self._codebook_df().select("cid", "v"),
-                    F.col("lcid") == F.col("cid"),
-                )
-                .groupBy("pcell")
-                .agg(
-                    F.collect_list(
-                        F.struct(F.col("cid"), F.col("v").alias("cv"))
-                    ).alias("_cands")
-                )
-            )
-            best = F.array_max(
-                F.transform(
-                    F.col("_cands"),
-                    lambda c: F.struct(
-                        F.round(cosine(F.col("v"), c["cv"]), 9).alias("sim"),
-                        (-c["cid"]).alias("ncid"),
-                    ),
-                )
-            )
-            yield (
-                stray.filter(F.col("cell").isin(flat))
-                .join(F.broadcast(cands), F.col("cell") == F.col("pcell"))
-                .withColumn("_best", eval_once(best))
-                .select(
-                    self.id_col,
-                    "v",
-                    (-F.col("_best.ncid")).cast("bigint").alias("cell"),
-                    "src",
-                )
-            )
-        if deep:
-            sub = stray.filter(F.col("cell").isin(deep))
-            yield (
-                self._assign_cells(
-                    sub.select(self.id_col, F.col("v").alias(self.vec_col)),
-                    1,
-                )
-                .select(self.id_col, "v", "cell")
-                # re-attach the data-age key (deep strays are few)
-                .join(sub.select(self.id_col, "src"), self.id_col)
-            )
+                    pairs.append((p, c))
+        pairs.sort()
+        cb = self._codebook_df().select("cid", F.col("v").alias("cv"))
+        # the pair block (ints only) is the broadcast side: the
+        # codebook streams, whatever its size
+        blocks = (
+            cb.join(F.broadcast(b), F.col("cid") == F.col("lcid"))
+            for b in self._pair_blocks(pairs, "pcell bigint, lcid bigint")
+        )
+        return self._nearest_under_parent(stray, blocks).drop("pcell")
 
     def compact_index(self, keep_recent: int = 4) -> None:
         """Tiered compaction on the shared ladder
@@ -1419,8 +1349,8 @@ class StreamingEmbeddingIndex(BatchPartitionedIndex):
                 r["cell"]
                 for r in stray.select("cell").distinct().collect()
             )
-            for part in self._rehome_strays(stray, stray_cells):
-                rows = rows.unionByName(part)
+            if stray_cells:
+                rows = rows.unionByName(self._rehome_strays(stray, stray_cells))
         rows, rehomed, drop_dirs = self._split_giant_cells(
             rows.localCheckpoint(), other_gens=others, count_also=fresh_keep
         )

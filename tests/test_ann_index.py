@@ -891,18 +891,18 @@ def test_split_rehomed_rows_append_to_largest_generation(spark, tmp_path):
     assert sorted(ids) == sorted(all_ids), "append lost or duped rows"
 
 
-def test_stray_rehome_lands_in_parent_subtree(spark, tmp_path):
-    """Rows stranded under a since-split cell re-home WITHIN that
-    cell's own subtree, so probes to any descendant leaf keep finding
-    the row via ancestor expansion throughout. This is guaranteed only
-    for parents that take the flat per-parent argmax (r12), i.e. whose
-    subtree has at most `_FLAT_REHOME_LEAF_CAP` leaves and fits the
-    remaining `_FLAT_REHOME_PAIR_CAP` pair budget; parents past either
-    cap fall back to the root descent, which may leave the subtree.
-    This test's tiny tree stays within both caps. Covers both merge-time mechanisms: the
+def test_stray_rehome_lands_in_parent_subtree(spark, tmp_path, monkeypatch):
+    """Rows stranded under a since-split cell re-home to the nearest
+    leaf of that cell's own subtree — unconditionally, whatever the
+    subtree's size — so probes to any descendant leaf keep finding the
+    row via ancestor expansion throughout. Pins each stray's cell
+    against a numpy argmax over the codebook parquet (round(·, 9),
+    smaller cid on ties), and the same placement with the pairs split
+    into blocks of 1 and of 3. Covers both merge-time mechanisms: the
     stray re-home and the split pull, each of which may only move a
     row DOWN its own subtree. Also re-pins row conservation across
     the re-home."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     rng = random.Random(7)
@@ -930,6 +930,18 @@ def test_stray_rehome_lands_in_parent_subtree(spark, tmp_path):
         .select("doc_id", "cell").collect()
     }
     assert set(prior) & set(range(20, 30)), "expected b4/b5 rows on disk"
+    kids_at_rehome = idx._children
+    nonleaf = set(kids_at_rehome)
+    strays = [
+        (r["doc_id"], list(r["v"]), r["cell"], r["src"])
+        for r in idx._read_layers(idx._index_root, [4, 5])
+        .filter(F.col("cell").isin(sorted(nonleaf)))
+        .select("doc_id", "v", "cell", "src").collect()
+    ]
+    assert strays, (
+        "fixture regression: no b4/b5 row sat under a split cell, the "
+        "stray path was never exercised"
+    )
     for b in range(6, 8):
         rows = []
         for anchor in (A1, A1, A2, A2, B):
@@ -939,13 +951,28 @@ def test_stray_rehome_lands_in_parent_subtree(spark, tmp_path):
     all_ids = set(range(nid))
     idx.compact_index(keep_recent=2)  # merges b4..b5 → strays re-home
 
-    def subtree(c: int) -> set[int]:
+    def subtree(c: int, kids: dict) -> set[int]:
         out, stack = set(), [c]
         while stack:
             cur = stack.pop()
             out.add(cur)
-            stack.extend(idx._children.get(cur, []))
+            stack.extend(kids.get(cur, []))
         return out
+
+    cb = {
+        r["cid"]: np.asarray(r["v"])
+        for r in idx._codebook_df().select("cid", "v").collect()
+    }
+
+    def nearest_leaf(v: list[float], parent: int, kids: dict) -> int:
+        x = np.asarray(v)
+        leaves = [c for c in subtree(parent, kids) if c not in kids]
+        sims = [
+            round(float(x @ cb[c] / np.linalg.norm(x) / np.linalg.norm(cb[c])), 9)
+            for c in leaves
+        ]
+        # max over (sim, -cid): the highest sim, then the smaller cid
+        return -max(zip(sims, [-c for c in leaves]))[1]
 
     visible = {
         r["doc_id"]: r["cell"]
@@ -954,16 +981,23 @@ def test_stray_rehome_lands_in_parent_subtree(spark, tmp_path):
         .select("doc_id", "cell").collect()
     }
     assert sorted(visible) == sorted(all_ids), "re-home lost or duped rows"
-    nonleaf = set(idx._children)
-    assert any(p in nonleaf for p in prior.values()), (
-        "fixture regression: no b4/b5 row sat under a split cell, the "
-        "stray path was never exercised"
-    )
     for did, pcell in prior.items():
-        assert visible[did] in subtree(pcell), (
+        assert visible[did] in subtree(pcell, idx._children), (
             f"doc {did} left its subtree: {pcell} -> {visible[did]}"
         )
-        if pcell in nonleaf:
-            assert visible[did] != pcell, (
-                f"stray doc {did} was not re-homed off non-leaf {pcell}"
-            )
+    for did, v, pcell, _ in strays:
+        want = nearest_leaf(v, pcell, kids_at_rehome)
+        # a split later in the same merge may move the row further down
+        assert visible[did] in subtree(want, idx._children), (
+            f"stray doc {did} under {pcell}: {visible[did]}, nearest leaf {want}"
+        )
+    # the block-wise argmax is exact: any block size, same placement
+    stray_df = spark.createDataFrame(
+        strays, "doc_id bigint, v array<double>, cell bigint, src bigint"
+    )
+    kids = idx._children
+    want = {did: nearest_leaf(v, pcell, kids) for did, v, pcell, _ in strays}
+    for block in (1, 3):
+        monkeypatch.setattr(StreamingEmbeddingIndex, "_ARGMAX_BLOCK_PAIRS", block)
+        got = idx._rehome_strays(stray_df, sorted({s[2] for s in strays}))
+        assert {r["doc_id"]: r["cell"] for r in got.collect()} == want, block

@@ -13,8 +13,9 @@ get no CSE, so each copy is a full per-row re-run. These tests pin:
 2. a filter over the wrapped column does NOT duplicate the expression
    body into the pushed-down predicate;
 3. wrapping changes no values;
-4. the real consumers (ivf_ann / hierarchical / kmeans_assign) keep
-   exactly one corpus-side argmax in their optimized plans.
+4. the real consumers (ivf_ann / hierarchical / kmeans_assign and the
+   streaming ANN index's split reassignment and stray re-home) keep
+   exactly one corpus-side argmax (per block) in their optimized plans.
 """
 
 from __future__ import annotations
@@ -102,7 +103,37 @@ def test_kmeans_assign_single_argmax(spark):
             (F.col("id") % 3).cast("double"), (F.col("id") % 5).cast("double")
         ).alias("embedding"),
     )
-    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    # centroids 1 and 2 are identical: an exact tie the smaller cid
+    # wins; a == b rows tie 0 against 1 too, and the zero vector
+    # (all sims NULL) also falls to the smallest cid
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 1.0])]
     out = kmeans_assign(emb, cents)
     # cluster AND sim both read the staged struct — argmax body once
     assert _optimized(out).count("array_max") == 1
+    got = {r["vec_id"]: r["cluster"] for r in out.collect()}
+    assert got == {i: 0 if i % 3 >= i % 5 else 1 for i in range(20)}
+
+
+def test_ann_argmax_one_per_block(spark, tmp_path, monkeypatch):
+    """The streaming ANN index's split reassignment and stray re-home
+    (StreamingEmbeddingIndex._nearest_under_parent) run one guarded
+    argmax per block of (parent, candidate) pairs, not a copy per
+    consumer."""
+    from parseable_spark.streaming import StreamingEmbeddingIndex
+
+    idx = StreamingEmbeddingIndex(spark, str(tmp_path / "ann"), n_cells=1)
+    idx._nodes = {0: {"parent": None}}
+    kids = [(1, 0, [1.0, 0.0]), (2, 0, [0.0, 1.0]), (3, 0, [1.0, 1.0])]
+    for c, p, _ in kids:
+        idx._nodes[c] = {"parent": p}
+    idx._append_codebook_rows([(0, None, [1.0, 1.0])] + kids)
+    rows = spark.createDataFrame(
+        [(7, [0.2, 1.0], 0, 1)], "doc_id bigint, v array<double>, cell bigint, src int"
+    )
+    for block, n in ((16384, 1), (2, 2), (1, 3)):
+        monkeypatch.setattr(StreamingEmbeddingIndex, "_ARGMAX_BLOCK_PAIRS", block)
+        blocks = idx._pair_blocks(kids, "cid bigint, pcell bigint, cv array<double>")
+        split = idx._nearest_under_parent(rows, blocks)
+        rehome = idx._rehome_strays(rows, [0])
+        assert _optimized(split).count("array_max") == n, block
+        assert _optimized(rehome).count("array_max") == n, block

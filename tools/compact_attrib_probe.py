@@ -67,7 +67,7 @@ def main(lo: int, hi: int) -> None:
         def reset_phases(self) -> None:
             self.phases = {
                 "entry": 0, "cascade": 0, "split": 0,
-                "main_w": 0, "rehome_w": 0, "stray_assign": 0,
+                "main_w": 0, "rehome_w": 0,
             }
             self.counts = {
                 "cascades": 0, "splits": 0, "rehomed_rows": 0,
@@ -97,21 +97,6 @@ def main(lo: int, hi: int) -> None:
             finally:
                 self._in_merge = False
             self.phases[phase] += wchar() - w0
-
-        def _assign_cells(self, docs, n):
-            # at merge time this is the STRAY re-home descent; at fold
-            # time it is the batch assignment (not a compaction cost)
-            if not getattr(self, "_in_merge", False):
-                return super()._assign_cells(docs, n)
-            w0 = wchar()
-            out = super()._assign_cells(docs, n)
-            # the descent is lazy until the caller acts; force it here
-            # so its jobs land inside this bracket, and hand the caller
-            # the materialized frame (checkpoint = same mechanism the
-            # engine itself uses on this path)
-            out = out.localCheckpoint()
-            self.phases["stray_assign"] += wchar() - w0
-            return out
 
         def _split_giant_cells(self, rows, other_gens=None, count_also=None):
             w0 = wchar()
@@ -181,7 +166,7 @@ def main(lo: int, hi: int) -> None:
                 idx.phases["total"] = idx.phases.get("total", 0) + wchar() - w0
         ph = idx.phases
         tot = ph.pop("total", 0)
-        sub = ph["split"] + ph["main_w"] + ph["rehome_w"] + ph["stray_assign"]
+        sub = ph["split"] + ph["main_w"] + ph["rehome_w"]
         row = {
             "history": folded,
             "total_mb": round(tot / 1e6, 1),
@@ -190,7 +175,6 @@ def main(lo: int, hi: int) -> None:
             "split_mb": round(ph["split"] / 1e6, 1),
             "main_w_mb": round(ph["main_w"] / 1e6, 1),
             "rehome_w_mb": round(ph["rehome_w"] / 1e6, 1),
-            "stray_assign_mb": round(ph["stray_assign"] / 1e6, 1),
             "residual_mb": round((tot - ph["entry"] - ph["cascade"]) / 1e6, 1),
             "merge_minus_sub_mb": round(
                 (ph["entry"] + ph["cascade"] - sub) / 1e6, 1
