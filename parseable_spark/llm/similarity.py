@@ -92,7 +92,7 @@ def ivf_ann(
     production path — a trained codebook, same mechanics
     (tools/quality_probe.py measures the recall difference). Scale
     shape: the codebook is broadcast (tiny), cell assignment is a
-    map-side argmax partially aggregated before the groupBy shuffle,
+    per-row argmax over it (`functions.nearest_cell`, no shuffle),
     and on a cell-partitioned table the probe reads nprobe/n_centroids
     of the data — the IVF index IS the partition layout."""
     from pyspark.sql.functions import broadcast
@@ -250,8 +250,8 @@ def ivf_ann_hierarchical(
     Deterministic codebook (first C vectors; coarse = first n_coarse of
     those) keeps the whole pipeline oracle-checkable. Both joins
     broadcast centroid tables keyed small-side; assignments stay
-    map-side argmaxes (max over struct, partial-aggregated before any
-    shuffle). The final cell id is the partition key at scale, exactly
+    per-row argmaxes (`functions.nearest_cell`, no shuffle of the
+    vectors). The final cell id is the partition key at scale, exactly
     as in `ivf_ann`.
     """
     from pyspark.sql.functions import broadcast
