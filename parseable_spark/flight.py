@@ -344,6 +344,7 @@ def querier_query(
     ingestor_ports=(),
     now=None,
     auth: tuple[str, str] | None = None,
+    ctx=None,
 ):
     """Distributed querier execution (airplane.rs:155-199): when the
     window touches the staging-fresh period, fan out to the ingestors,
@@ -352,7 +353,8 @@ def querier_query(
     the SQL once over the union. Outside the fresh window this is a
     plain local query — no RPCs. ``local`` is the stream's local data:
     a DataFrame or a scan provider (QueryEngine.register_stream); it is
-    the stream's registration again when this returns."""
+    the stream's registration again when this returns. ``ctx``: the
+    request's context (QueryEngine.query)."""
     from .query.engine import TimeRange
 
     tr = TimeRange.parse(start, end, now=now)
@@ -375,6 +377,6 @@ def querier_query(
 
     engine.register_stream(stream_name, with_fresh, time_col=engine.time_col)
     try:
-        return engine.query(sql, start, end, now=now)
+        return engine.query(sql, start, end, now=now, ctx=ctx)
     finally:
         engine.register_stream(stream_name, local, time_col=engine.time_col)

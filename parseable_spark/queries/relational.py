@@ -14,6 +14,8 @@ COVERAGE.md.
 
 Determinism rules used throughout:
 - float aggregates rounded (sum order varies across partitions);
+- rounded sums exact (_exact_sum): rounding alone does not make a
+  double SUM order-independent when it sits on a rounding boundary;
 - ORDER BY keys always made unique with an id tie-break;
 - timestamps kept as TIMESTAMP_NTZ (µs) — matches DuckDB exactly.
 """
@@ -27,16 +29,38 @@ from ..functions import date_bin, duckdb_date_bin_sql
 from ..tables import load_table
 from . import register
 
+# Every summed column here has at most 2 decimals, so a product of three
+# of them is exact at this scale; 32 integer digits leave room for any
+# sum. Decimal addition is associative, so the rounded sum no longer
+# depends on the order partitions reach the final aggregate: a double
+# SUM within a few ulps of a rounding boundary flipped with task order
+# (q12's NATION_22 returned .79 or .80 at random). The oracle SQL
+# states the same spec (_exact_sum_sql); the result stays a DOUBLE.
+_SUM_SCALE = 6
+
+
+def _exact_sum(col, ndigits: int):
+    """round(sum(col), ndigits) over terms cast to DECIMAL(38, 6)."""
+    return F.round(F.sum(col.cast(f"decimal(38,{_SUM_SCALE})")), ndigits).cast("double")
+
+
+def _exact_sum_sql(expr: str, ndigits: int) -> str:
+    """_exact_sum as SQL, for the DuckDB oracle."""
+    return (
+        f"CAST(round(sum(CAST({expr} AS DECIMAL(38, {_SUM_SCALE}))), {ndigits}) "
+        "AS DOUBLE)"
+    )
+
 
 # --- projection / filter / hash aggregate (TPC-H Q1 shape) ----------------
 @register(
     "q01_pricing_summary",
-    """
+    f"""
     SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2)                                   AS sum_qty,
-           round(sum(l_extendedprice), 2)                              AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2)           AS sum_disc_price,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+           {_exact_sum_sql("l_quantity", 2)} AS sum_qty,
+           {_exact_sum_sql("l_extendedprice", 2)} AS sum_base_price,
+           {_exact_sum_sql("l_extendedprice * (1 - l_discount)", 2)} AS sum_disc_price,
+           {_exact_sum_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)", 2)} AS sum_charge,
            round(avg(l_quantity), 2)                                   AS avg_qty,
            round(avg(l_extendedprice), 2)                              AS avg_price,
            round(avg(l_discount), 4)                                   AS avg_disc,
@@ -54,10 +78,10 @@ def q01_pricing_summary(spark, sf_dir):
         li.filter(F.col("l_shipdate") <= F.expr("TIMESTAMP_NTZ '1999-12-01 00:00:00'"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
+            _exact_sum(F.col("l_quantity"), 2).alias("sum_qty"),
+            _exact_sum(F.col("l_extendedprice"), 2).alias("sum_base_price"),
+            _exact_sum(disc_price, 2).alias("sum_disc_price"),
+            _exact_sum(disc_price * (1 + F.col("l_tax")), 2).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 2).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 2).alias("avg_price"),
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
@@ -120,7 +144,7 @@ def q03_string_predicates(spark, sf_dir):
     f"""
     SELECT {duckdb_date_bin_sql('ts', 3600)} AS bin_epoch, event_type,
            CAST(count(*) AS BIGINT) AS cnt,
-           round(sum(value), 2) AS sum_value,
+           {_exact_sum_sql("value", 2)} AS sum_value,
            round(min(value), 2) AS min_v,
            round(max(value), 2) AS max_v,
            round(avg(value), 6) AS avg_v
@@ -146,7 +170,7 @@ def q05_date_bin_histogram(spark, sf_dir):
         .groupBy(date_bin("ts", 3600).alias("bin_epoch"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
+            _exact_sum(F.col("value"), 2).alias("sum_value"),
             F.round(F.min("value"), 2).alias("min_v"),
             F.round(F.max("value"), 2).alias("max_v"),
             F.round(F.avg("value"), 6).alias("avg_v"),
@@ -367,9 +391,9 @@ def q10_range_join(spark, sf_dir):
 
 @register(
     "q11_shipping_priority",
-    """
+    f"""
     SELECT l.l_orderkey,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           {_exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS revenue,
            o.o_orderdate
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -406,7 +430,7 @@ def q11_shipping_priority(spark, sf_dir):
         .join(oc, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+            _exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2).alias(
                 "revenue"
             )
         )
@@ -418,9 +442,9 @@ def q11_shipping_priority(spark, sf_dir):
 
 @register(
     "q12_local_supplier_volume",
-    """
+    f"""
     SELECT n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+           {_exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 2)} AS revenue
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -476,7 +500,7 @@ def q12_local_supplier_volume(spark, sf_dir):
         )
         .groupBy("n_name")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+            _exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2).alias(
                 "revenue"
             )
         )
@@ -600,13 +624,13 @@ def q15_subqueries(spark, sf_dir):
 
 @register(
     "q22_grouping_sets",
-    """
+    f"""
     SELECT event_type,
            CAST(CAST(date_trunc('day', ts) AS DATE) AS VARCHAR) AS day,
            CAST(grouping(event_type) AS INT) AS g_type,
            CAST(grouping(CAST(date_trunc('day', ts) AS DATE)) AS INT) AS g_day,
            CAST(count(*) AS BIGINT) AS n,
-           round(sum(value), 2) AS total
+           {_exact_sum_sql("value", 2)} AS total
     FROM events
     GROUP BY GROUPING SETS (
         (event_type, CAST(date_trunc('day', ts) AS DATE)),
@@ -639,7 +663,7 @@ def q22_grouping_sets(spark, sf_dir):
             F.grouping("event_type").cast("int").alias("g_type"),
             F.grouping("day").cast("int").alias("g_day"),
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total"),
+            _exact_sum(F.col("value"), 2).alias("total"),
         )
         .select("event_type", "day", "g_type", "g_day", "n", "total")
     )
@@ -738,10 +762,10 @@ def q43_json_extraction(spark, sf_dir):
 
 @register(
     "q45_theta_join",
-    """
+    f"""
     SELECT l.l_orderkey,
            CAST(count(*) AS BIGINT) AS n_late_lines,
-           round(sum(l.l_extendedprice), 2) AS late_value
+           {_exact_sum_sql("l.l_extendedprice", 2)} AS late_value
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
                  AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
@@ -763,7 +787,7 @@ def q45_theta_join(spark, sf_dir):
         joined.groupBy("l_orderkey")
         .agg(
             F.count(F.lit(1)).alias("n_late_lines"),
-            F.round(F.sum("l_extendedprice"), 2).alias("late_value"),
+            _exact_sum(F.col("l_extendedprice"), 2).alias("late_value"),
         )
         .orderBy(F.desc("late_value"), F.asc("l_orderkey"))
         .limit(25)

@@ -98,7 +98,7 @@ def manifest_window_count(manifest, time_col: str, lo: str | None, hi: str | Non
 
 
 def fast_count(
-    engine, sql: str, stores: dict, start=None, end=None, scans: dict | None = None
+    engine, sql: str, stores: dict, start=None, end=None, ctx=None
 ) -> "object | None":
     """Answer a bare COUNT(*) from manifest metadata when the plan shape
     allows (reference route: src/handlers/http/query.rs:186-256 —
@@ -110,13 +110,13 @@ def fast_count(
     the count comes from files FULLY inside the window plus in-window
     staging rows; any boundary-straddling file forces a real scan
     (None) — the all-time manifest total must never answer a windowed
-    query (review finding). ``scans`` is the request's memo of
-    resolved stream scans (QueryEngine.query), shared with the query
-    that runs when this returns None."""
+    query (review finding). ``ctx`` is the request's context
+    (engine.RequestContext) for the same window: detection inspects its
+    analysed DataFrame, the one the query runs when this returns None."""
     from .timerange import TimeRange
 
     window = TimeRange(start, end) if start is not None and end is not None else None
-    hit = engine.detect_bare_count(sql, window=window, scans=scans)
+    hit = engine.detect_bare_count(sql, window=window, ctx=ctx)
     if hit is None:
         return None
     stream, alias = hit
@@ -141,11 +141,9 @@ def fast_count(
                 t = ts.strftime(ISO_MICRO_FMT)
                 if (lo is None or t >= lo) and (hi is None or t < hi):
                     n += 1
-    # StructType, not a DDL string: an alias containing a backtick
-    # (SELECT COUNT(*) AS `a``b` — legal) broke the DDL parse into a
-    # 500 where the scan path would have answered (r7 review)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return engine.spark.createDataFrame(
-        [(n,)], StructType([StructField(alias, LongType(), False)])
-    )
+    # A one-row LocalRelation: collecting it starts no Spark job, where
+    # createDataFrame from a list builds an RDD that one job collects.
+    # toDF takes the alias verbatim: one containing a backtick
+    # (SELECT COUNT(*) AS `a``b` — legal) must not go through a parser
+    # (r7 review: a DDL string broke into a 500 on it).
+    return engine.spark.sql(f"VALUES ({int(n)}L)").toDF(alias)

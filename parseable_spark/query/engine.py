@@ -19,7 +19,7 @@ import re
 import threading
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from datetime import datetime
 from typing import Callable
 
@@ -55,6 +55,27 @@ class _Registration:
     # DataFrame registration; None for a provider, whose view exists
     # only while one request is analysed
     view: DataFrame | None
+
+
+@dataclass
+class RequestContext:
+    """What one query request resolves once and every step reuses: the
+    SQL's table list (one parse, shared by the RBAC gate, querier
+    fan-out and the views), the time window, the scans the stream
+    providers returned, the analysed DataFrame (one analysis, shared by
+    fast-count detection and the query) and an id naming the request."""
+
+    sql: str
+    window: TimeRange | None = None
+    request_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
+    tables: list[str] | None = None
+    scans: dict[str, DataFrame] = field(default_factory=dict)
+    df: DataFrame | None = None
+
+    def table_names(self, spark) -> list[str]:
+        if self.tables is None:
+            self.tables = extract_table_names(self.sql, spark=spark)
+        return self.tables
 
 
 def _restore_view(spark, name: str) -> None:
@@ -417,28 +438,25 @@ class QueryEngine:
                 self.spark.catalog.dropTempView(name)
 
     @contextmanager
-    def _request_views(
-        self, sql: str, window: TimeRange | None, scans: dict | None = None
-    ):
-        """Install this request's view of every stream ``sql``
-        references, for the duration of the block, then restore what
-        rests between requests. Each stream's provider is asked once:
-        for ``window`` when the time filter is injected (the SQL does
+    def _request_views(self, ctx: RequestContext):
+        """Install the request's view of every stream its SQL references
+        (the context's table list), for the duration of the block, then
+        restore what rests between requests. Each stream's provider is
+        asked once per request, its answer kept in ``ctx.scans``: for
+        ``ctx.window`` when the time filter is injected (the SQL does
         not constrain that stream's time column itself), else for
         everything — the window reaches the provider exactly where the
-        injected filter would drop the rows it prunes. ``scans``, a
-        dict the caller owns, memoises the providers' answers across
-        calls of one request (fast_count's detection, then the query).
-        Providers run outside the view lock: a scan lists files, and
-        that must not stall other tenants' analysis."""
-        scans = {} if scans is None else scans
+        injected filter would drop the rows it prunes. Providers run
+        outside the view lock: a scan plans files from the manifest,
+        and that must not stall other tenants' analysis."""
+        sql, window = ctx.sql, ctx.window
         with self._view_lock:
             streams = dict(self._streams)
         canon = {k.lower(): k for k in streams}
         known = set(canon)
         views: dict[str, DataFrame] = {}
         foreign: list[str] = []
-        for name in extract_table_names(sql, spark=self.spark):
+        for name in ctx.table_names(self.spark):
             key = canon.get(name.lower())
             if key is None:
                 foreign.append(name)
@@ -450,10 +468,7 @@ class QueryEngine:
                 sql, reg.time_col, stream=key, known_streams=known
             )
             bounds = (window.start, window.end) if inject else (None, None)
-            memo_key = (key, *bounds)
-            if memo_key not in scans:
-                scans[memo_key] = reg.scan(*bounds)
-            df = scans[memo_key]
+            df = ctx.scans[key] = reg.scan(*bounds)
             if inject:
                 lo, hi = window.sql_literals()
                 df = df.filter(f"{reg.time_col} >= {lo} AND {reg.time_col} < {hi}")
@@ -486,12 +501,13 @@ class QueryEngine:
                 for name in touched:
                     _restore_view(self.spark, name)
 
-    def _analyze(
-        self, sql: str, window: TimeRange | None, scans: dict | None
-    ) -> DataFrame:
-        ensure_read_only(sql)
-        with self._request_views(sql, window, scans):
-            return self.spark.sql(sql)
+    def _analyze(self, ctx: RequestContext) -> DataFrame:
+        """The request's analysed DataFrame, analysed at most once."""
+        if ctx.df is None:
+            ensure_read_only(ctx.sql)
+            with self._request_views(ctx):
+                ctx.df = self.spark.sql(ctx.sql)
+        return ctx.df
 
     def query(
         self,
@@ -499,18 +515,21 @@ class QueryEngine:
         start: str | None = None,
         end: str | None = None,
         now=None,
-        scans: dict | None = None,
+        ctx: RequestContext | None = None,
     ) -> DataFrame:
         """Run SQL; inject the time filter on every referenced stream
         unless the query already filters its time column (reference
         behavior: src/query/mod.rs:404-411), and hand that stream's
         provider the window. Read-only statements only
         (ensure_read_only); SQL-on-files relations are disabled at the
-        session level (see __init__). ``scans``: see _request_views."""
-        window = None
-        if start is not None and end is not None:
-            window = TimeRange.parse(start, end, now=now)
-        return self._analyze(sql, window, scans)
+        session level (see __init__). ``ctx``, the request's context
+        for ``sql``, carries what the request already resolved; a
+        window it holds wins over ``start``/``end``."""
+        if ctx is None:
+            ctx = RequestContext(sql)
+        if ctx.window is None and start is not None and end is not None:
+            ctx.window = TimeRange.parse(start, end, now=now)
+        return self._analyze(ctx)
 
     def execute(
         self,
@@ -571,7 +590,7 @@ class QueryEngine:
         self,
         sql: str,
         window: TimeRange | None = None,
-        scans: dict | None = None,
+        ctx: RequestContext | None = None,
     ) -> tuple[str, str] | None:
         """Plan-shape detection of `SELECT COUNT(*) FROM stream` with no
         filters/grouping — the COUNT(*) fast path trigger (reference
@@ -582,9 +601,10 @@ class QueryEngine:
         alias/view-wrapped leaf with nothing else (any Filter/Project in
         between disqualifies). Returns (stream_name, output_alias) when
         the answer can come from manifest row counts without a scan.
-        The views are the request's own (_request_views, for
-        ``window``): an injected time filter sits inside the view body,
-        below the stream's alias, so it does not disqualify."""
+        The plan is the request's one analysis (``ctx``, else a fresh
+        context for ``window``), over its own views (_request_views): an
+        injected time filter sits inside the view body, below the
+        stream's alias, so it does not disqualify."""
         # the GATE (inside _analyze) must run before spark.sql(): Spark
         # executes commands (SET / DROP VIEW / CREATE TABLE AS) EAGERLY
         # at spark.sql(), so probing unvalidated SQL for its plan shape
@@ -593,8 +613,10 @@ class QueryEngine:
         # defense before the 400 was returned (r7 review, high).
         # Returning None routes the statement to query(), whose own
         # ensure_read_only raises the consistent 400.
+        if ctx is None:
+            ctx = RequestContext(sql, window)
         try:
-            plan = self._analyze(sql, window, scans)._jdf.queryExecution().analyzed()
+            plan = self._analyze(ctx)._jdf.queryExecution().analyzed()
         except Exception:
             return None
         if plan.getClass().getSimpleName() != "Aggregate":

@@ -546,7 +546,14 @@ class ParseableAPI:
             return n
 
     # -- query (query.rs:63-77, 590-631) ------------------------------------
-    def _query_df(self, payload: dict[str, Any]):
+    def _query_df(self, payload: dict[str, Any], ctx=None):
+        """The request's DataFrame, from one parse and one analysis of
+        its SQL. ``ctx`` (engine.RequestContext for the payload's
+        stripped query) carries what the route already resolved: the
+        HTTP handler parses the table list once for RBAC."""
+        from .query.counts import fast_count
+        from .query.engine import RequestContext, TimeRange
+
         sql = (payload.get("query") or "").strip()
         start = payload.get("startTime") or ""
         end = payload.get("endTime") or ""
@@ -556,6 +563,8 @@ class ParseableAPI:
             raise ApiError(400, "empty startTime")
         if not end:
             raise ApiError(400, "empty endTime")
+        if ctx is None:
+            ctx = RequestContext(sql)
         try:
             if self.ingestor_ports:
                 # querier mode (airplane.rs:155-184): merge fresh staging
@@ -565,13 +574,12 @@ class ParseableAPI:
                 # case variants, silently skipping the fan-out (review
                 # finding)
                 from .flight import querier_query
-                from .query.engine import extract_table_names
 
                 canon = {k.lower(): k for k in self._stores}
                 streams = list(
                     dict.fromkeys(
                         canon[t.lower()]
-                        for t in extract_table_names(sql, spark=self.spark)
+                        for t in ctx.table_names(self.spark)
                         if t.lower() in canon
                     )
                 )
@@ -586,38 +594,33 @@ class ParseableAPI:
                         end,
                         ingestor_ports=self.ingestor_ports,
                         auth=self.ingestor_auth,
+                        ctx=ctx,
                     )
-                return self.engine.query(sql, start, end)
+                return self.engine.query(sql, start, end, ctx=ctx)
             # COUNT(*) fast path (reference query.rs:186-256): a bare
             # SELECT COUNT(*) FROM stream answers from manifest row
             # counts + in-window staging when every file is FULLY inside
-            # the window — no scan. Boundary-straddling files or any
-            # filter/grouping fall through to the real query, which
-            # reuses the stream scans the detection resolved (`scans`).
-            # Querier mode skips it (peer staging isn't in local
-            # manifests).
-            from .query.counts import fast_count
-            from .query.engine import TimeRange
-
-            tr = TimeRange.parse(start, end)
-            scans: dict = {}
+            # the window — no scan. The detection inspects the query's
+            # own analysed plan; boundary-straddling files or any
+            # filter/grouping run that same DataFrame. Querier mode
+            # skips it (peer staging isn't in local manifests).
+            ctx.window = tr = TimeRange.parse(start, end)
+            df = self.engine.query(sql, start, end, ctx=ctx)
             fast = fast_count(
-                self.engine, sql, self._stores, start=tr.start, end=tr.end, scans=scans
+                self.engine, sql, self._stores, start=tr.start, end=tr.end, ctx=ctx
             )
-            if fast is not None:
-                return fast
-            return self.engine.query(sql, start, end, scans=scans)
+            return df if fast is None else fast
         except ValueError as e:  # bad time range / rejected SQL
             raise ApiError(400, str(e)) from e
 
-    def query(self, payload: dict[str, Any]) -> dict | list:
+    def query(self, payload: dict[str, Any], ctx=None) -> dict | list:
         """Batch response body (fields/sendNull honored). The collect
         runs under the engine's P_SQL_TIMEOUT deadline — a runaway
         query is cancelled instead of holding the API lock forever
         (the reference applies the SQL timeout to this route too)."""
         with self._lock:
             try:
-                df = self._query_df(payload)
+                df = self._query_df(payload, ctx)
             except ApiError:
                 raise
             except Exception as e:
@@ -640,7 +643,7 @@ class ParseableAPI:
             except Exception as e:  # Spark analysis errors → client error
                 raise ApiError(400, str(e).split("\n")[0]) from e
 
-    def query_ndjson(self, payload: dict[str, Any]) -> Iterator[str]:
+    def query_ndjson(self, payload: dict[str, Any], ctx=None) -> Iterator[str]:
         """Streaming NDJSON lines. Validation and planning run eagerly
         (so a 400 surfaces BEFORE the handler commits to a 200 chunked
         response); the lock is held until the stream is drained — one
@@ -654,7 +657,7 @@ class ParseableAPI:
         later request (review finding)."""
         self._lock.acquire()
         try:
-            df = self._query_df(payload)
+            df = self._query_df(payload, ctx)
         except BaseException:
             self._lock.release()
             raise
@@ -4601,7 +4604,7 @@ class _Handler(BaseHTTPRequestHandler):
         self._respond_json(200, {"status": "ok", "records": n})
 
     def _handle_query(self, params: dict[str, list[str]]) -> None:
-        from .query.engine import extract_table_names
+        from .query.engine import RequestContext
         from .rbac import Action
 
         payload = self._json_body()
@@ -4610,14 +4613,14 @@ class _Handler(BaseHTTPRequestHandler):
         # parser-derived table set: matches exactly what Spark resolves,
         # closing the regex bypasses (FROM`s2`, FROM/**/s2, comma joins)
         # case-insensitive: Spark resolves views case-insensitively, so
-        # FROM APP must hit the grant check for stream "app" too
+        # FROM APP must hit the grant check for stream "app" too. The
+        # request context keeps the parse: views and fan-out reuse it.
+        ctx = RequestContext(str(payload.get("query") or "").strip())
         canon = {k.lower(): k for k in self.api._stores}
         canon.update(
             {k.lower(): k for k in self.api.engine._streams if k.lower() not in canon}
         )
-        for t in extract_table_names(
-            str(payload.get("query") or ""), spark=self.api.spark
-        ):
+        for t in ctx.table_names(self.api.spark):
             # fail closed: anything resolvable in the engine needs a
             # QUERY grant, whether or not a live store backs it — a
             # stale view must never be a grant bypass (review finding)
@@ -4629,12 +4632,12 @@ class _Handler(BaseHTTPRequestHandler):
                 payload[flag] = params[flag][0].lower() == "true"
         t0 = time.perf_counter()
         if payload.get("streaming"):
-            lines = self.api.query_ndjson(payload)
+            lines = self.api.query_ndjson(payload, ctx)
             self._respond_chunked(
                 lines, {TIME_ELAPSED_HEADER: f"{time.perf_counter() - t0:.3f}s"}
             )
         else:
-            out = self.api.query(payload)
+            out = self.api.query(payload, ctx)
             self._respond_json(
                 200, out, {TIME_ELAPSED_HEADER: f"{time.perf_counter() - t0:.3f}s"}
             )

@@ -42,7 +42,21 @@ RUNTIME_CONFS = {
     # default), and flipping the whole engine to V2 changes
     # pushdown/stats behavior everywhere for a win the manifest
     # COUNT(*) fast path already covers. Measured inert on V1, reverted.
+    # The manifest is the listing: a StreamStore scan hands Spark the
+    # exact file paths the manifest pruned, all local. Above this
+    # threshold (Spark's default is 32 paths) Spark re-lists them in a
+    # Spark job with one task per path, at DataFrame creation: 0.17 MB
+    # of JVM read I/O to plan an 80- or a 40-file window, against
+    # 0.01-0.015 MB listed on the driver (Spark 4.1, local[4]). Remote
+    # roots put the default back (objectstore.s3a_spark_conf,
+    # azureblob.abfs_spark_conf, storage/boot.py's GCS conf), where
+    # per-path round trips make the parallel listing pay.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "2147483647",
 }
+
+# Spark's own default for the listing threshold above; the remote conf
+# builders return it so an object-store root keeps parallel listing.
+REMOTE_LISTING_CONF = {"spark.sql.sources.parallelPartitionDiscovery.threshold": "32"}
 
 
 def default_parallelism() -> int:
@@ -55,6 +69,27 @@ def default_parallelism() -> int:
     except ValueError:
         n = os.cpu_count() or 8
     return max(1, n) if n > 0 else (os.cpu_count() or 8)
+
+
+def _physical_ram_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf / unknown
+        return None
+
+
+def driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else 16g capped at half the host's
+    physical RAM: a heap cap above the RAM can never bind before the
+    host runs out of memory, and the other half is left to the Python
+    workers, the page cache and any other JVM on the host."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = _physical_ram_bytes()
+    if ram is None or ram // 2 >= 16 * 2**30:
+        return "16g"
+    return f"{max(1, ram // 2 // 2**20)}m"
 
 
 def configure(spark: SparkSession) -> SparkSession:
@@ -75,7 +110,7 @@ def get_spark(app_name: str = "parseable-spark", master: str | None = None) -> S
         # one shuffle partition per core locally; a real cluster would
         # size this to ~2-3x total cores (AQE coalesces the excess)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )

@@ -383,9 +383,13 @@ def abfs_spark_conf(cfg: AzureBlobConfig) -> dict[str, str]:
     """``spark.hadoop.fs.azure.*`` conf for this account — what a
     deployment passes so ``data_root_uri`` paths resolve. ABFS commits
     via real renames (hierarchical namespace), so no special committer
-    is needed, unlike s3a."""
+    is needed, unlike s3a. The listing threshold goes back to Spark's
+    default, as for s3a (REMOTE_LISTING_CONF)."""
+    from ..session import REMOTE_LISTING_CONF
+
     host = f"{cfg.account}.dfs.core.windows.net"
     return {
+        **REMOTE_LISTING_CONF,
         f"spark.hadoop.fs.azure.account.key.{host}": cfg.access_key,
         "spark.hadoop.fs.azure.account.auth.type": "SharedKey",
     }

@@ -74,6 +74,7 @@ def boot_storage(mode: str, root: str) -> dict[str, str]:
             # GCS Hadoop connector jar isn't bundled with pyspark, so
             # this returns the documented keyfile conf for deployments
             # that add it; metastore traffic needs no jar at all.
+            from ..session import REMOTE_LISTING_CONF
             from .gcs import GCSClient, GCSMetastore, gcs_native_config_from_env
 
             ncfg = gcs_native_config_from_env()
@@ -81,6 +82,7 @@ def boot_storage(mode: str, root: str) -> dict[str, str]:
             client.check()  # fail loud at boot, not on first op
             set_metastore(GCSMetastore(client, root))
             return {
+                **REMOTE_LISTING_CONF,
                 "spark.hadoop.fs.gs.auth.type": "SERVICE_ACCOUNT_JSON_KEYFILE",
                 "spark.hadoop.fs.gs.auth.service.account.json.keyfile": (
                     os.environ["P_GCS_SERVICE_ACCOUNT"]

@@ -428,8 +428,13 @@ def s3a_spark_conf(cfg: S3Config) -> dict[str, str]:
     """The ``spark.hadoop.fs.s3a.*`` conf for this S3Config — what a
     deployment passes so ``data_root_uri`` paths resolve. Committer
     keys included: the magic committer is the correct zero-rename
-    commit protocol for S3 (directory rename is O(data) there)."""
+    commit protocol for S3 (directory rename is O(data) there). The
+    listing threshold goes back to Spark's default (REMOTE_LISTING_CONF):
+    per-path object-store round trips make the parallel listing pay."""
+    from ..session import REMOTE_LISTING_CONF
+
     conf = {
+        **REMOTE_LISTING_CONF,
         "spark.hadoop.fs.s3a.endpoint": cfg.endpoint_url,
         "spark.hadoop.fs.s3a.endpoint.region": cfg.region,
         "spark.hadoop.fs.s3a.path.style.access": str(cfg.use_path_style).lower(),

@@ -328,6 +328,11 @@ class StreamStore:
 
     # --- scan ------------------------------------------------------------
     def _parquet_df(self, paths: list[str]) -> DataFrame | None:
+        """A DataFrame over exactly ``paths`` with the stream's schema.
+        The manifest is the listing: Spark only stats the given files,
+        on the driver, and starts no Spark job to plan them (the
+        session's parallelPartitionDiscovery.threshold, see
+        session.RUNTIME_CONFS)."""
         if not paths:
             return None
         return self.spark.read.schema(
@@ -349,7 +354,9 @@ class StreamStore:
         manifest-pruned parquet, plus the staging memtable when a staged
         batch's time range overlaps the window (_staging_in_window), with
         the time predicate applied on top so Spark also prunes row
-        groups."""
+        groups. The manifest is the listing: building the DataFrame
+        starts no Spark job, whatever the number of files
+        (_parquet_df)."""
         naive = lambda d: (  # noqa: E731 — aware stamps → UTC-naive axis
             d.astimezone(timezone.utc).replace(tzinfo=None)
             if d is not None and d.tzinfo is not None

@@ -38,10 +38,19 @@ def _q(api, sql, start, end):
 
 
 def _forbid_scan(api, monkeypatch):
-    def boom(*a, **k):
-        raise AssertionError("engine.query called — fast path not taken")
+    """The route analyses the query once either way; the fast path is
+    taken when fast_count answers instead of that DataFrame running."""
+    from parseable_spark.query import counts
 
-    monkeypatch.setattr(api.engine, "query", boom)
+    orig = counts.fast_count
+
+    def must_answer(*a, **k):
+        out = orig(*a, **k)
+        if out is None:
+            raise AssertionError("fast_count declined — fast path not taken")
+        return out
+
+    monkeypatch.setattr(counts, "fast_count", must_answer)
 
 
 def test_bare_count_answers_from_manifests(api, monkeypatch):

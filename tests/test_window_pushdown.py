@@ -254,3 +254,111 @@ def test_concurrent_windows_stay_per_request(api):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
+
+
+def _jobs_submitted(spark) -> int:
+    """Spark jobs submitted so far in this application, from any thread
+    or job group; counted at submission, so no listener lag."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+@pytest.fixture(scope="module")
+def wide(spark, tmp_path_factory):
+    """(api, url, t0): one event-time stream of 48 one-minute files from
+    t0 (5 rows each), served over HTTP: past Spark's default 32-path
+    parallel-listing threshold."""
+    from parseable_spark.server import serve_background
+
+    t0 = datetime.now(timezone.utc).replace(tzinfo=None, microsecond=0)
+    t0 = t0.replace(second=0) - timedelta(hours=2)
+    api = ParseableAPI(spark, str(tmp_path_factory.mktemp("wide")))
+    api.create_stream("app", time_partition="ts")
+    api.ingest(
+        "app",
+        [
+            {"m": m, "i": i, "ts": _iso(t0 + timedelta(minutes=m, seconds=30))}
+            for m in range(48)
+            for i in range(5)
+        ],
+    )
+    api.run_sync()
+    assert len(api._stores["app"].manifest.files) == 48
+    srv, base = serve_background(api)
+    yield api, base, t0
+    srv.shutdown()
+
+
+def _post_query(base, sql, lo, hi):
+    import json
+    import urllib.request
+
+    body = {"query": sql, "startTime": _iso(lo), "endTime": _iso(hi)}
+    req = urllib.request.Request(
+        base + "/api/v1/query",
+        data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+    )
+    with urllib.request.urlopen(req, timeout=60) as resp:
+        return json.loads(resp.read())
+
+
+def test_manifest_window_scan_starts_no_listing_job(spark, wide):
+    """The manifest is the listing: a 44-file window's DataFrame is
+    planned without Spark's parallel-listing job."""
+    api, _, t0 = wide
+    store = api._stores["app"]
+    lo, hi = t0 + timedelta(minutes=2), t0 + timedelta(minutes=46)
+    before = _jobs_submitted(spark)
+    df = store.scan(lo, hi)
+    assert _jobs_submitted(spark) - before == 0
+    assert len(df.inputFiles()) == 44
+    assert df.count() == 44 * 5
+
+
+def test_manifest_answered_bare_count_starts_no_job(spark, wide):
+    """Through the HTTP route, a bare COUNT(*) the manifest answers
+    starts no Spark job at all: not to plan its windowed scan, not to
+    analyse it, not to return the one-row answer. The same window with
+    a filter runs its scan (the counter does count)."""
+    _, base, t0 = wide
+    lo, hi = t0, t0 + timedelta(minutes=44)
+    before = _jobs_submitted(spark)
+    assert _post_query(base, "SELECT COUNT(*) AS n FROM app", lo, hi) == [{"n": 220}]
+    assert _jobs_submitted(spark) - before == 0
+    rows = _post_query(base, "SELECT COUNT(*) AS n FROM app WHERE i > 0", lo, hi)
+    assert rows == [{"n": 176}]
+    assert _jobs_submitted(spark) - before >= 1
+
+
+@pytest.mark.parametrize(
+    "sql, n",
+    [
+        ("SELECT m, count(*) AS n FROM app GROUP BY m ORDER BY m LIMIT 1", [{"m": 3, "n": 5}]),
+        ("SELECT COUNT(*) AS n FROM app", [{"n": 200}]),
+    ],
+    ids=["scan", "fast_count"],
+)
+def test_one_parse_per_query_request(wide, monkeypatch, sql, n):
+    """The RBAC gate's parse is the request's only one: the views and
+    fast-count detection read the table list from its context."""
+    from parseable_spark.query import counts, engine
+
+    calls, answered = [], []
+    orig_parse, orig_fast = engine.extract_table_names, counts.fast_count
+
+    def parse(*a, **k):
+        calls.append(a[0])
+        return orig_parse(*a, **k)
+
+    def fast(*a, **k):
+        out = orig_fast(*a, **k)
+        answered.append(out is not None)
+        return out
+
+    monkeypatch.setattr(engine, "extract_table_names", parse)
+    monkeypatch.setattr(counts, "fast_count", fast)
+    _, base, t0 = wide
+    lo = t0 + timedelta(minutes=3)
+    assert _post_query(base, sql, lo, lo + timedelta(minutes=40)) == n
+    assert calls == [sql]
+    assert answered == [sql.startswith("SELECT COUNT")]
