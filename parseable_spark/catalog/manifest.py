@@ -34,7 +34,7 @@ import pyarrow.parquet as pq
 # fixed-width timestamp form so lexicographic order == time order
 # (isoformat() drops zero microseconds, which breaks string
 # comparison). Load-bearing at EVERY site that compares against
-# manifest bounds — store.scan, fast_count — so it lives in exactly
+# manifest bounds — store.scan, count_fast_path — so it lives in exactly
 # one place (r6 review: three hand-copied literals).
 ISO_MICRO_FMT = "%Y-%m-%dT%H:%M:%S.%f"
 
@@ -279,6 +279,31 @@ class Manifest:
             kept_pos.append(pos)
         kept_pos.sort()
         return [self._files[i] for i in kept_pos]
+
+    def window_count(
+        self, time_col: str, start: str | None = None, end: str | None = None
+    ) -> int | None:
+        """Rows of the files in [start, end), visiting only the files
+        ``overlapping`` yields (O(log n + window)); None when a file
+        has unknown bounds or straddles a boundary: metadata cannot
+        prove the answer, a real scan must count."""
+        n = 0
+        for f in self.overlapping(time_col, start, end):
+            tb = f.time_bounds(time_col)
+            if tb is None:
+                return None  # unknown bounds: cannot prove containment
+            f_lo, f_hi = tb
+            if (start is not None and f_lo < start) or (end is not None and f_hi >= end):
+                return None  # straddles a boundary: must scan
+            # the real windowed scan (ts >= start AND ts < end) drops
+            # NULL-timestamp rows, and parquet min/max stats ignore
+            # NULLs — so containment says nothing about them. Subtract
+            # the file's known null count; unknown → must scan.
+            nulls = (f.columns.get(time_col) or {}).get("nulls")
+            if nulls is None:
+                return None
+            n += f.num_rows - nulls
+        return n
 
     def limit_truncate(self, paths: list[str], limit: int) -> list[str]:
         """Planning-time LIMIT: stop adding files once cumulative

@@ -64,7 +64,6 @@ class StreamConfig:
 @dataclass
 class PreparedBatch:
     records: list[dict[str, Any]]
-    schema: sc.SchemaRegistry
     is_first: bool  # batch added new fields to the stream schema
     # user-time-partition streams: the stream's reference timestamp
     # after this batch. Process-lifetime state, like the reference's
@@ -289,7 +288,6 @@ def prepare_batch(
         out_records.append(typed)
     return PreparedBatch(
         records=out_records,
-        schema=registry,
         is_first=is_first,
         reference_ts=new_reference,
     )
@@ -303,10 +301,10 @@ def batch_spark_schema(registry: sc.SchemaRegistry, meta_fields: bool = True) ->
 
 
 def to_dataframe(
-    spark: SparkSession, batch: PreparedBatch, meta_fields: bool = True
+    spark: SparkSession, registry: sc.SchemaRegistry, records: list[dict[str, Any]]
 ) -> DataFrame:
-    schema = batch_spark_schema(batch.schema, meta_fields)
-    rows = [tuple(rec.get(f.name) for f in schema.fields) for rec in batch.records]
+    schema = batch_spark_schema(registry)
+    rows = [tuple(rec.get(f.name) for f in schema.fields) for rec in records]
     return spark.createDataFrame(rows, schema=schema)
 
 
@@ -334,4 +332,4 @@ class Stream:
             reference_ts=self.reference_timestamp,
         )
         self.reference_timestamp = batch.reference_ts
-        return to_dataframe(spark, batch)
+        return to_dataframe(spark, self.registry, batch.records)

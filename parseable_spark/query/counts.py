@@ -9,7 +9,6 @@ DATE_BIN becomes anchored floor arithmetic (functions.date_bin_sql).
 
 from __future__ import annotations
 
-from ..catalog.manifest import ISO_MICRO_FMT
 from ..functions import date_bin_sql
 
 # bin tiers mirror the reference's interval selection
@@ -71,32 +70,6 @@ def top_k_counts_sql(
     """
 
 
-def manifest_window_count(manifest, time_col: str, lo: str | None, hi: str | None):
-    """Rows of the manifest files in [lo, hi) (ISO_MICRO_FMT bounds),
-    or None when metadata cannot prove the answer. Only files the
-    time index says can overlap the window are visited, so a windowed
-    COUNT(*) costs O(log n + window), not O(history). Every overlapping
-    file must lie FULLY inside the window; a file with unknown bounds
-    or one that straddles a boundary forces a real scan (None)."""
-    n = 0
-    for f in manifest.overlapping(time_col, lo, hi):
-        tb = f.time_bounds(time_col)
-        if tb is None:
-            return None  # unknown bounds: cannot prove containment
-        f_lo, f_hi = tb
-        if (lo is not None and f_lo < lo) or (hi is not None and f_hi >= hi):
-            return None  # straddles a boundary: must scan
-        # the real windowed scan (ts >= lo AND ts < hi) drops
-        # NULL-timestamp rows, and parquet min/max stats ignore
-        # NULLs — so containment says nothing about them. Subtract
-        # the file's known null count; unknown → must scan.
-        nulls = (f.columns.get(time_col) or {}).get("nulls")
-        if nulls is None:
-            return None
-        n += f.num_rows - nulls
-    return n
-
-
 def fast_count(
     engine, sql: str, stores: dict, start=None, end=None, ctx=None
 ) -> "object | None":
@@ -106,13 +79,12 @@ def fast_count(
     a one-row DataFrame matching the query's output alias, or None when
     the query must actually execute.
 
-    With a `start`/`end` window (UTC-naive datetimes, the engine axis),
-    the count comes from files FULLY inside the window plus in-window
-    staging rows; any boundary-straddling file forces a real scan
-    (None) — the all-time manifest total must never answer a windowed
-    query (review finding). ``ctx`` is the request's context
-    (engine.RequestContext) for the same window: detection inspects its
-    analysed DataFrame, the one the query runs when this returns None."""
+    The count is StreamStore.count_fast_path's for the window; when it
+    cannot prove one, the query runs (the all-time manifest total
+    must never answer a windowed query). ``ctx`` is the
+    request's context (engine.RequestContext) for the same window:
+    detection inspects its analysed DataFrame, the one the query runs
+    when this returns None."""
     from .timerange import TimeRange
 
     window = TimeRange(start, end) if start is not None and end is not None else None
@@ -123,24 +95,8 @@ def fast_count(
     # case-insensitive: the analyzed plan lower-cases view names
     canon = {k.lower(): k for k in stores}
     store = stores.get(canon.get(stream.lower(), stream))
-    if store is None:
+    if store is None or (n := store.count_fast_path(start, end)) is None:
         return None
-    if start is None and end is None:
-        n = store.count_fast_path()
-    else:
-        iso = lambda d: d.strftime(ISO_MICRO_FMT) if d else None  # noqa: E731
-        lo, hi = iso(start), iso(end)
-        n = manifest_window_count(store.manifest, store.time_col, lo, hi)
-        if n is None:
-            return None
-        for b in store._staging:
-            for rec in b.records:
-                ts = rec.get(store.time_col)
-                if ts is None:
-                    continue
-                t = ts.strftime(ISO_MICRO_FMT)
-                if (lo is None or t >= lo) and (hi is None or t < hi):
-                    n += 1
     # A one-row LocalRelation: collecting it starts no Spark job, where
     # createDataFrame from a list builds an RDD that one job collects.
     # toDF takes the alias verbatim: one containing a backtick

@@ -63,7 +63,8 @@ class RequestContext:
     SQL's table list (one parse, shared by the RBAC gate, querier
     fan-out and the views), the time window, the scans the stream
     providers returned, the analysed DataFrame (one analysis, shared by
-    fast-count detection and the query) and an id naming the request."""
+    fast-count detection and the query) unless the manifest ``answered``
+    a bare COUNT(*), and an id naming the request."""
 
     sql: str
     window: TimeRange | None = None
@@ -71,6 +72,7 @@ class RequestContext:
     tables: list[str] | None = None
     scans: dict[str, DataFrame] = field(default_factory=dict)
     df: DataFrame | None = None
+    answered: bool = False
 
     def table_names(self, spark) -> list[str]:
         if self.tables is None:

@@ -95,10 +95,11 @@ def query_response(
 
 
 def ndjson_lines(
-    df: DataFrame, send_null: bool = True
+    df: DataFrame, send_null: bool = True, local: bool = False
 ) -> Iterator[str]:
     """Streaming NDJSON: one JSON object per line, partitions streamed
-    through the driver incrementally (no full materialization)."""
+    one at a time (no full materialization). A ``local`` answer (the
+    manifest's COUNT row) is collected: that starts no Spark job."""
     _reject_duplicate_columns(df)
-    for row in df.toLocalIterator(prefetchPartitions=True):
+    for row in df.collect() if local else df.toLocalIterator(prefetchPartitions=True):
         yield json.dumps(row_to_json(row, send_null), separators=(",", ":")) + "\n"

@@ -44,7 +44,7 @@ from typing import Any, Iterator
 from urllib.parse import parse_qs, quote as _urlquote, urlparse
 
 from .ingest.events import DEFAULT_TIMESTAMP_KEY, StreamConfig
-from .query.engine import QueryEngine
+from .query.engine import QueryEngine, RequestContext
 from .query.response import ndjson_lines, query_response
 from .storage.store import TOMBSTONE_GRACE_SECONDS, StreamStore
 
@@ -552,7 +552,7 @@ class ParseableAPI:
         stripped query) carries what the route already resolved: the
         HTTP handler parses the table list once for RBAC."""
         from .query.counts import fast_count
-        from .query.engine import RequestContext, TimeRange
+        from .query.engine import TimeRange
 
         sql = (payload.get("query") or "").strip()
         start = payload.get("startTime") or ""
@@ -609,6 +609,7 @@ class ParseableAPI:
             fast = fast_count(
                 self.engine, sql, self._stores, start=tr.start, end=tr.end, ctx=ctx
             )
+            ctx.answered = fast is not None
             return df if fast is None else fast
         except ValueError as e:  # bad time range / rejected SQL
             raise ApiError(400, str(e)) from e
@@ -655,6 +656,7 @@ class ParseableAPI:
         the first chunk (client disconnects between headers) would
         otherwise leave the API lock held forever — wedging every
         later request (review finding)."""
+        ctx = ctx or RequestContext((payload.get("query") or "").strip())
         self._lock.acquire()
         try:
             df = self._query_df(payload, ctx)
@@ -672,7 +674,9 @@ class ParseableAPI:
 
         def gen() -> Iterator[str]:
             try:
-                yield from ndjson_lines(df, send_null=bool(payload.get("sendNull")))
+                yield from ndjson_lines(
+                    df, send_null=bool(payload.get("sendNull")), local=ctx.answered
+                )
             finally:
                 release_once()
 
@@ -1442,10 +1446,7 @@ class ParseableAPI:
             )
             emit(
                 "staging_events", "gauge", "Events in the staging memtable",
-                [
-                    (lbl(s), sum(len(b.records) for b in self._stores[s]._staging))
-                    for s in streams
-                ],
+                [(lbl(s), self._stores[s].staged_rows) for s in streams],
             )
             emit(
                 "query_calls_total", "counter", "Total query calls",
@@ -1469,7 +1470,7 @@ class ParseableAPI:
                     "ingestion_bytes": st.stats.current.ingestion,
                     "storage_bytes": st.stats.current.storage,
                     "lifetime_events": st.stats.lifetime.events,
-                    "staging_events": sum(len(b.records) for b in st._staging),
+                    "staging_events": st.staged_rows,
                 }
                 for s, st in sorted(self._stores.items())
             }
@@ -1798,11 +1799,7 @@ class ParseableAPI:
 
     def _stream_ingested(self, name: str) -> bool:
         store = self._stores[name]
-        return (
-            store.stats.lifetime.events > 0
-            or any(len(b.records) for b in store._staging)
-            or store.manifest.total_rows() > 0
-        )
+        return store.stats.lifetime.events > 0 or store.count_fast_path() > 0
 
     def prism_home(
         self, principal: str | None, include_internal: bool = False
@@ -4604,7 +4601,6 @@ class _Handler(BaseHTTPRequestHandler):
         self._respond_json(200, {"status": "ok", "records": n})
 
     def _handle_query(self, params: dict[str, list[str]]) -> None:
-        from .query.engine import RequestContext
         from .rbac import Action
 
         payload = self._json_body()

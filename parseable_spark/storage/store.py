@@ -5,6 +5,8 @@ object-storage pipeline (SURVEY.md §2.1):
 
 - ingest(): JSON batches accumulate in an in-memory staging buffer
   (the per-minute arrow files of src/parseable/streams.rs:290-311).
+- staging_df(): one DataFrame (one createDataFrame) per staging
+  snapshot, newest-first; flush() writes the same frame.
 - flush(): staging → partitioned sorted parquet + manifest/snapshot
   commit (streams.rs:922-1107, object_storage.rs:1035-1280).
 - scan(start, end): UNION of staging memtable + manifest-pruned parquet
@@ -14,7 +16,7 @@ object-storage pipeline (SURVEY.md §2.1):
   with an old event time (time-partitioned streams) stay visible until
   the next flush, and a window no staged event can fall in skips the
   memtable altogether.
-- count_fast_path(): manifest row-count sums (query/mod.rs:427-462).
+- count_fast_path(start, end): manifest + staged rows (query/mod.rs:427-462).
 - retention(): drop partitions older than N days
   (src/storage/retention.rs:58-160).
 """
@@ -47,6 +49,11 @@ from .writer import write_stream_batch
 TOMBSTONE_GRACE_SECONDS = 330.0
 
 
+def _utc_naive(d: datetime | None) -> datetime | None:
+    """Aware stamps → the UTC-naive axis of staged and stored times."""
+    return d.astimezone(timezone.utc).replace(tzinfo=None) if d and d.tzinfo else d
+
+
 @dataclass
 class StreamStore:
     spark: SparkSession
@@ -77,11 +84,10 @@ class StreamStore:
     _mirror_seq: int = 0
     _mirror_applied: int = 0
     _mirror_lock: Any = field(default_factory=threading.Lock)
-    # staging_df memo: (n_batches, schema fingerprint) -> DataFrame.
-    # createDataFrame converts every row driver-side (GIL-bound Python
-    # work) — without this, EVERY query over a stream with staged data
-    # re-pays that conversion per batch; under concurrent tenants it
-    # serializes them (measured: tools/tenant_contention_probe.py).
+    # staging_df memo: (n_batches, schema fingerprint) -> the one frame
+    # of that snapshot. createDataFrame converts every row in Python
+    # (GIL-bound): without the memo every query over staged data re-pays
+    # it, serializing concurrent tenants (tools/tenant_contention_probe.py).
     # Batches are immutable once staged and the registry only grows,
     # so (count, fields) keys the cache exactly.
     _staging_cache: tuple[tuple, DataFrame] | None = None
@@ -254,6 +260,11 @@ class StreamStore:
         self._pending_ingestion_bytes += len(json.dumps(body, default=str))
         return len(batch.records)
 
+    @property
+    def staged_rows(self) -> int:
+        """Rows staged and not yet flushed."""
+        return sum(len(b.records) for b in self._staging)
+
     def staging_df(self) -> DataFrame | None:
         """In-memory staging scan, newest-first (reference reversed
         memtable, stream_schema_provider.rs:292-350, 780-789)."""
@@ -270,10 +281,10 @@ class StreamStore:
         return df
 
     def _batches_df(self, batches) -> DataFrame:
-        dfs = [to_dataframe(self.spark, b) for b in batches]
-        df = dfs[0]
-        for b in dfs[1:]:
-            df = df.unionByName(b, allowMissingColumns=True)
+        """All rows of ``batches`` as one frame of _full_schema(), sorted
+        time-desc: the range partitioning gives flush one file per minute."""
+        records = [r for b in batches for r in b.records]
+        df = to_dataframe(self.spark, self.stream.registry, records)
         return df.orderBy(F.desc(self.time_col))
 
     def flush(self, swap_lock=None) -> int:
@@ -357,27 +368,17 @@ class StreamStore:
         groups. The manifest is the listing: building the DataFrame
         starts no Spark job, whatever the number of files
         (_parquet_df)."""
-        naive = lambda d: (  # noqa: E731 — aware stamps → UTC-naive axis
-            d.astimezone(timezone.utc).replace(tzinfo=None)
-            if d is not None and d.tzinfo is not None
-            else d
-        )
-        start, end = naive(start), naive(end)
-        iso = lambda d: d.strftime(ISO_MICRO_FMT) if d else None  # noqa: E731
-        paths = self.manifest.prune_paths(self.time_col, iso(start), iso(end))
+        start, end = _utc_naive(start), _utc_naive(end)
+        lo, hi = [d and d.strftime(ISO_MICRO_FMT) for d in (start, end)]
+        paths = self.manifest.prune_paths(self.time_col, lo, hi)
         if limit is not None:
             paths = self.manifest.limit_truncate(paths, limit)
         if self.hot_tier is not None:
             paths = self.hot_tier.resolve(paths)
         df = self._parquet_df(paths)
 
-        sdf = self.staging_df() if self._staging_in_window(start, end) else None
-        if sdf is not None:
-            # backticks: dotted field names (OTel `http.method`) must not
-            # be parsed as struct access
-            sdf = sdf.select(
-                *[F.col(f"`{f.name}`") for f in self._full_schema().fields]
-            )
+        if self._staging_in_window(start, end):
+            sdf = self.staging_df()
             df = sdf if df is None else df.unionByName(sdf)
         if df is None:
             return self.spark.createDataFrame([], self._full_schema())
@@ -455,9 +456,26 @@ class StreamStore:
         )
 
     # --- metadata-only operators ----------------------------------------
-    def count_fast_path(self) -> int:
-        """Bare COUNT(*) from manifest sums + staging rows — no scan."""
-        return self.manifest.total_rows() + sum(len(b.records) for b in self._staging)
+    def count_fast_path(
+        self, start: datetime | None = None, end: datetime | None = None
+    ) -> int | None:
+        """scan(start, end).count() without a scan: manifest rows
+        (Manifest.window_count) plus staged rows in the window; None
+        when a file straddles a bound or lacks stats."""
+        if start is None and end is None:
+            return self.manifest.total_rows() + self.staged_rows
+        start, end = _utc_naive(start), _utc_naive(end)
+        lo, hi = [d and d.strftime(ISO_MICRO_FMT) for d in (start, end)]
+        n = self.manifest.window_count(self.time_col, lo, hi)
+        if n is None:
+            return None
+        return n + sum(
+            isinstance(t := r.get(self.time_col), datetime)
+            and (start is None or t >= start)
+            and (end is None or t < end)
+            for b in self._staging
+            for r in b.records
+        )
 
     # --- compaction -------------------------------------------------------
     def compact(

@@ -12,10 +12,11 @@ from datetime import datetime, timedelta, timezone
 import pytest
 
 from parseable_spark.catalog.manifest import ISO_MICRO_FMT, FileStats, Manifest
+from parseable_spark.ingest.events import StreamConfig
 from parseable_spark.query.alert_scheduler import CallbackTarget, ScheduledAlert
 from parseable_spark.query.alerts import Alert
-from parseable_spark.query.counts import manifest_window_count
 from parseable_spark.server import ParseableAPI
+from parseable_spark.storage.store import StreamStore
 
 BASE = datetime(2026, 8, 10, 9, 0)
 
@@ -210,12 +211,74 @@ def test_indexed_window_count_matches_linear(seed):
                 a, b = a // 60 * 60, b // 60 * 60
             lo = None if rng.random() < 0.05 else iso(a)
             hi = None if rng.random() < 0.05 else iso(b)
-            got = manifest_window_count(m, "p_timestamp", lo, hi)
+            got = m.window_count("p_timestamp", lo, hi)
             assert got == _linear_window_count(known, "p_timestamp", lo, hi)
             answers.append(got)
     # both outcomes are exercised: proofs and forced scans
     assert any(x is None for x in answers)
     assert sum(x is not None and x > 0 for x in answers) > 20
+
+
+@pytest.fixture(scope="module")
+def staged(spark, tmp_path_factory):
+    """(store, times): six flushed one-minute files whose rows sit at :20
+    and :40 of minutes 0-5, plus one staged batch on each of the minute
+    boundaries 0-8 (a new field every third batch), so a minute-aligned
+    window has staged rows at exactly its start and its end; ``times``
+    is every row's time."""
+    store = StreamStore(
+        spark, str(tmp_path_factory.mktemp("staged")), StreamConfig(name="w")
+    )
+    for m in range(6):
+        for sec in (20, 40):
+            store.ingest(
+                [{"m": m, "i": i} for i in range(3)],
+                p_timestamp=BASE + timedelta(minutes=m, seconds=sec),
+            )
+    store.flush()
+    for m in range(9):
+        store.ingest(
+            [{"m": m, f"g{m // 3}": i} for i in range(m % 3 + 1)],
+            p_timestamp=BASE + timedelta(minutes=m),
+        )
+    times = [r[0] for r in store.scan().select("p_timestamp").collect()]
+    assert len(store.manifest.files) == 6 and len(times) == 36 + 18
+    return store, times
+
+
+@pytest.mark.parametrize("seed", [3, 11, 29])
+def test_store_window_count_matches_scan(staged, seed):
+    """count_fast_path(start, end), whenever it answers, is the window's
+    row count: files fully inside plus staged rows in [start, end),
+    bounds on staged rows and on file bounds included, aware bounds
+    normalised like scan(); a sample is checked against scan().count()."""
+    store, times = staged
+    rng = random.Random(seed)
+    plus2 = timezone(timedelta(hours=2))
+    answers, scanned = [], 0
+    for _ in range(800):
+        a = rng.randrange(-120, 10 * 60)
+        b = a + rng.choice([1, 20, 60, 200, 600])
+        if rng.random() < 0.5:  # minute-aligned: staged rows sit on both bounds
+            a, b = a // 60 * 60, b // 60 * 60 + 60
+        elif rng.random() < 0.3:  # on a file's lowest or highest row
+            a, b = a // 60 * 60 + 20, b // 60 * 60 + rng.choice([20, 40])
+        lo = None if rng.random() < 0.05 else BASE + timedelta(seconds=a)
+        hi = None if rng.random() < 0.05 else BASE + timedelta(seconds=b)
+        want = sum((lo is None or t >= lo) and (hi is None or t < hi) for t in times)
+        if rng.random() < 0.3:  # the same instants, as aware stamps
+            lo, hi = [d and d.replace(tzinfo=timezone.utc).astimezone(plus2) for d in (lo, hi)]
+        got = store.count_fast_path(lo, hi)
+        answers.append(got)
+        if got is None:
+            continue
+        assert got == want, (lo, hi)
+        if scanned < 4:
+            assert store.scan(lo, hi).count() == got, (lo, hi)
+            scanned += 1
+    # both outcomes are exercised: proofs and forced scans
+    assert any(x is None for x in answers)
+    assert sum(x is not None and x > 0 for x in answers) > 100
 
 
 def test_concurrent_windows_stay_per_request(api):
@@ -288,17 +351,19 @@ def wide(spark, tmp_path_factory):
     srv.shutdown()
 
 
-def _post_query(base, sql, lo, hi):
+def _post_query(base, sql, lo, hi, streaming=False):
     import json
     import urllib.request
 
     body = {"query": sql, "startTime": _iso(lo), "endTime": _iso(hi)}
     req = urllib.request.Request(
-        base + "/api/v1/query",
+        base + "/api/v1/query" + ("?streaming=true" if streaming else ""),
         data=json.dumps(body).encode(),
         headers={"Content-Type": "application/json"},
     )
     with urllib.request.urlopen(req, timeout=60) as resp:
+        if streaming:
+            return [json.loads(line) for line in resp.read().splitlines()]
         return json.loads(resp.read())
 
 
@@ -318,12 +383,16 @@ def test_manifest_window_scan_starts_no_listing_job(spark, wide):
 def test_manifest_answered_bare_count_starts_no_job(spark, wide):
     """Through the HTTP route, a bare COUNT(*) the manifest answers
     starts no Spark job at all: not to plan its windowed scan, not to
-    analyse it, not to return the one-row answer. The same window with
-    a filter runs its scan (the counter does count)."""
+    analyse it, not to return the one-row answer, on the batch and the
+    streaming route alike. The same window with a filter runs its scan
+    (the counter does count)."""
     _, base, t0 = wide
     lo, hi = t0, t0 + timedelta(minutes=44)
     before = _jobs_submitted(spark)
     assert _post_query(base, "SELECT COUNT(*) AS n FROM app", lo, hi) == [{"n": 220}]
+    assert _jobs_submitted(spark) - before == 0
+    streamed = _post_query(base, "SELECT COUNT(*) AS n FROM app", lo, hi, streaming=True)
+    assert streamed == [{"n": 220}]
     assert _jobs_submitted(spark) - before == 0
     rows = _post_query(base, "SELECT COUNT(*) AS n FROM app WHERE i > 0", lo, hi)
     assert rows == [{"n": 176}]
