@@ -15,7 +15,9 @@ from datetime import datetime, timezone
 from decimal import Decimal
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType, TimestampNTZType
 
 from . import flatten as fl
@@ -303,9 +305,16 @@ def batch_spark_schema(registry: sc.SchemaRegistry, meta_fields: bool = True) ->
 def to_dataframe(
     spark: SparkSession, registry: sc.SchemaRegistry, records: list[dict[str, Any]]
 ) -> DataFrame:
+    """``records`` as one frame of batch_spark_schema(registry), built
+    from one Arrow array per field: it plans as a LocalRelation, where a
+    list of rows plans as an RDD scan. A field a record lacks reads NULL."""
     schema = batch_spark_schema(registry)
-    rows = [tuple(rec.get(f.name) for f in schema.fields) for rec in records]
-    return spark.createDataFrame(rows, schema=schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([rec.get(f.name) for rec in records], type=f.type) for f in arrow],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 @dataclass

@@ -5,10 +5,12 @@ object-storage pipeline (SURVEY.md §2.1):
 
 - ingest(): JSON batches accumulate in an in-memory staging buffer
   (the per-minute arrow files of src/parseable/streams.rs:290-311).
-- staging_df(): one DataFrame (one createDataFrame) per staging
-  snapshot, newest-first; flush() writes the same frame.
-- flush(): staging → partitioned sorted parquet + manifest/snapshot
-  commit (streams.rs:922-1107, object_storage.rs:1035-1280).
+- staging_df(): one Arrow-built DataFrame per staging snapshot, in no
+  particular row order; any order a reader sees comes from its query's
+  ORDER BY.
+- flush(): staging → partitioned parquet sorted time-desc + manifest/
+  snapshot commit (streams.rs:922-1107, object_storage.rs:1035-1280);
+  flush is the only place staged rows are sorted.
 - scan(start, end): UNION of staging memtable + manifest-pruned parquet
   paths (stream_schema_provider.rs:602-753). Staging joins the union
   if and only if some staged batch's time-column range overlaps
@@ -84,10 +86,11 @@ class StreamStore:
     _mirror_seq: int = 0
     _mirror_applied: int = 0
     _mirror_lock: Any = field(default_factory=threading.Lock)
-    # staging_df memo: (n_batches, schema fingerprint) -> the one frame
-    # of that snapshot. createDataFrame converts every row in Python
-    # (GIL-bound): without the memo every query over staged data re-pays
-    # it, serializing concurrent tenants (tools/tenant_contention_probe.py).
+    # staging_df memo: (n_batches, schema fingerprint) -> the one
+    # Arrow-built frame of that snapshot. Building it converts every
+    # staged value in Python (GIL-bound): without the memo every query
+    # over staged data re-pays it, serializing concurrent tenants
+    # (tools/tenant_contention_probe.py).
     # Batches are immutable once staged and the registry only grows,
     # so (count, fields) keys the cache exactly.
     _staging_cache: tuple[tuple, DataFrame] | None = None
@@ -266,8 +269,9 @@ class StreamStore:
         return sum(len(b.records) for b in self._staging)
 
     def staging_df(self) -> DataFrame | None:
-        """In-memory staging scan, newest-first (reference reversed
-        memtable, stream_schema_provider.rs:292-350, 780-789)."""
+        """In-memory staging scan (reference memtable,
+        stream_schema_provider.rs:292-350). Unsorted: flush() sorts what
+        it writes, and a query that needs an order states it."""
         if not self._staging:
             return None
         key = (
@@ -281,11 +285,9 @@ class StreamStore:
         return df
 
     def _batches_df(self, batches) -> DataFrame:
-        """All rows of ``batches`` as one frame of _full_schema(), sorted
-        time-desc: the range partitioning gives flush one file per minute."""
+        """All rows of ``batches`` as one unsorted frame of _full_schema()."""
         records = [r for b in batches for r in b.records]
-        df = to_dataframe(self.spark, self.stream.registry, records)
-        return df.orderBy(F.desc(self.time_col))
+        return to_dataframe(self.spark, self.stream.registry, records)
 
     def flush(self, swap_lock=None) -> int:
         """Staging → sorted partitioned parquet + manifest commit (the
@@ -306,7 +308,9 @@ class StreamStore:
             pending_bytes = self._pending_ingestion_bytes
         if not batches:
             return 0
-        df = self._batches_df(batches)
+        # the range partitioning of the time-desc sort gives one file per
+        # minute directory (adaptive execution coalesces small ranges)
+        df = self._batches_df(batches).orderBy(F.desc(self.time_col))
         before = set(glob(os.path.join(self.data_dir, "**/*.parquet"), recursive=True))
         write_stream_batch(df, self.data_dir, time_col=self.time_col)
         new_files = sorted(
@@ -381,7 +385,7 @@ class StreamStore:
             sdf = self.staging_df()
             df = sdf if df is None else df.unionByName(sdf)
         if df is None:
-            return self.spark.createDataFrame([], self._full_schema())
+            return to_dataframe(self.spark, self.stream.registry, [])
         if start is not None:
             df = df.filter(F.col(self.time_col) >= F.lit(start))
         if end is not None:
