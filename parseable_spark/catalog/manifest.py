@@ -11,8 +11,9 @@ Reference mapping (SURVEY.md §1.6):
   are skipped at planning time (stream_schema_provider.rs:505-600);
   LIMIT truncation by cumulative num_rows (:581-597).
 - COUNT(*) fast path answers from num_rows sums without touching data
-  (src/query/mod.rs:427-462); per-bin counts from manifests whose
-  time-col minimum falls in the bin (:537-662).
+  (src/query/mod.rs:427-462); the counts histogram (:537-662) is
+  answered only when every file in the window lies inside one bin, so
+  the metadata answer equals the scan's; otherwise the caller scans.
 
 At 100 TB this is the difference between listing+reading thousands of
 parquet footers per query and one small JSON read; Spark still applies
@@ -27,7 +28,7 @@ import os
 from dataclasses import asdict, dataclass, field
 from datetime import datetime
 from decimal import Decimal
-from typing import Any
+from typing import Any, Callable
 
 import pyarrow.parquet as pq
 
@@ -283,27 +284,10 @@ class Manifest:
     def window_count(
         self, time_col: str, start: str | None = None, end: str | None = None
     ) -> int | None:
-        """Rows of the files in [start, end), visiting only the files
-        ``overlapping`` yields (O(log n + window)); None when a file
-        has unknown bounds or straddles a boundary: metadata cannot
-        prove the answer, a real scan must count."""
-        n = 0
-        for f in self.overlapping(time_col, start, end):
-            tb = f.time_bounds(time_col)
-            if tb is None:
-                return None  # unknown bounds: cannot prove containment
-            f_lo, f_hi = tb
-            if (start is not None and f_lo < start) or (end is not None and f_hi >= end):
-                return None  # straddles a boundary: must scan
-            # the real windowed scan (ts >= start AND ts < end) drops
-            # NULL-timestamp rows, and parquet min/max stats ignore
-            # NULLs — so containment says nothing about them. Subtract
-            # the file's known null count; unknown → must scan.
-            nulls = (f.columns.get(time_col) or {}).get("nulls")
-            if nulls is None:
-                return None
-            n += f.num_rows - nulls
-        return n
+        """Rows of the files in [start, end): the one-bin histogram, so
+        None exactly when metadata cannot prove the count."""
+        h = self.histogram(time_col, start, end, 1, lambda _t: 0)
+        return None if h is None else h[0]
 
     def limit_truncate(self, paths: list[str], limit: int) -> list[str]:
         """Planning-time LIMIT: stop adding files once cumulative
@@ -318,24 +302,39 @@ class Manifest:
                 break
         return out
 
-    def histogram(self, time_col: str, bin_edges: list[str]) -> list[int]:
-        """Metadata-only counts histogram: a file lands in the bin that
-        contains its time minimum (reference src/query/mod.rs:537-662).
-        Runs over the time index: one bisect bounds the contributing
-        slice (lower ∈ [first_edge, last_edge)), one bisect per file
-        picks its bin — O(log n + window·log bins)."""
-        import bisect
+    def histogram(
+        self,
+        time_col: str,
+        start: str | None,
+        end: str | None,
+        num_bins: int,
+        bin_of: Callable[[str], int],
+    ) -> list[int] | None:
+        """Exact per-bin row counts of [start, end) from metadata alone,
+        visiting only the files ``overlapping`` yields (O(log n +
+        window)). ``bin_of`` maps a time bound to its bin in
+        0..num_bins-1 and must never decrease as time grows, so a file
+        whose two bounds share a bin has every row there.
 
-        counts = [0] * (len(bin_edges) - 1)
-        if not bin_edges or len(bin_edges) < 2:
-            return counts
-        lowers, bounded, _pmax, _unknown = self._time_index(time_col)
-        i0 = bisect.bisect_left(lowers, bin_edges[0])
-        i1 = bisect.bisect_left(lowers, bin_edges[-1])
-        for lo, _hi, rows, _pos in bounded[i0:i1]:
-            b = bisect.bisect_right(bin_edges, lo) - 1
-            if 0 <= b < len(counts):
-                counts[b] += rows
+        None when metadata cannot prove the bins and a real scan must
+        count: a file has unknown time bounds or an unknown time null
+        count, straddles start or end, or straddles a bin edge. A file
+        adds its rows less its NULL-time rows: the windowed scan
+        (ts >= start AND ts < end) drops those, and parquet min/max
+        stats ignore them, so containment says nothing about them."""
+        counts = [0] * num_bins
+        for f in self.overlapping(time_col, start, end):
+            tb = f.time_bounds(time_col)
+            nulls = (f.columns.get(time_col) or {}).get("nulls")
+            if tb is None or nulls is None:
+                return None
+            f_lo, f_hi = tb
+            if (start is not None and f_lo < start) or (end is not None and f_hi >= end):
+                return None
+            b = bin_of(f_lo)
+            if b != bin_of(f_hi):
+                return None
+            counts[b] += f.num_rows - nulls
         return counts
 
     # --- persistence (versioned via migration.py, transported via the

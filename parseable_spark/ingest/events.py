@@ -132,6 +132,9 @@ def validate_time_partition(
     return out, ref
 
 
+_INT_RANGES = {sc.INT64: (-(1 << 63), 1 << 63), sc.UINT64: (0, 1 << 64)}
+
+
 def _coerce_value(v: Any, t: str) -> Any:
     if v is None:
         return None
@@ -157,6 +160,12 @@ def _coerce_value(v: Any, t: str) -> Any:
             # millisecond precision, like the reference's Timestamp(ms)
             return dt.replace(microsecond=dt.microsecond // 1000 * 1000)
         return v
+    if t in _INT_RANGES and isinstance(v, int) and not isinstance(v, bool):
+        lo, hi = _INT_RANGES[t]
+        if not lo <= v < hi:
+            # the Arrow frame and the parquet column cannot hold it:
+            # staged, it would fail every later scan and flush
+            raise ValueError(f"value {v} is out of range for {t}")
     if t == sc.UINT64:
         return Decimal(v)
     if t == sc.UTF8:

@@ -5,11 +5,23 @@ Reference: src/query/mod.rs:665-735 builds
 and, with a group_by field, a 3-CTE query (grouped_counts, top_groups,
 null-safe inner join back). We generate the same shapes in Spark SQL;
 DATE_BIN becomes anchored floor arithmetic (functions.date_bin_sql).
+
+``Bins`` is the /api/v1/counts density rule: one bin index, evaluated in
+Python for a metadata answer and in Spark for a scan.
 """
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass
+from datetime import datetime, timedelta
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 from ..functions import date_bin_sql
+
+_US = timedelta(microseconds=1)
 
 # bin tiers mirror the reference's interval selection
 # (src/utils/time.rs:68-94): 1m / 5m / 1h / 1d depending on range width.
@@ -21,6 +33,50 @@ def pick_bin_seconds(range_seconds: int) -> int:
         if ceiling is None or range_seconds <= ceiling:
             return bin_s
     return 86400
+
+
+@dataclass(frozen=True)
+class Bins:
+    """``num_bins`` equal bins over the UTC-naive window [lo, hi).
+
+    A time t falls in bin ``index(t) = min(floor(offset_us / width_us),
+    num_bins - 1)`` with ``offset_us = (t - lo) // 1 µs``; ``column``
+    is the same rule as a Spark expression over the same ``width_us``
+    double. Offsets are integers below 2^53, so both sides divide the
+    same two doubles and agree bit for bit. The index never decreases
+    as t grows: a file whose lowest and highest time share a bin has
+    every row in that bin."""
+
+    lo: datetime
+    hi: datetime
+    num_bins: int
+
+    @property
+    def width_s(self) -> float:
+        return max((self.hi - self.lo).total_seconds(), 1e-9) / self.num_bins
+
+    @property
+    def width_us(self) -> float:
+        return self.width_s * 1e6
+
+    def index(self, t: datetime) -> int:
+        return min(math.floor(((t - self.lo) // _US) / self.width_us), self.num_bins - 1)
+
+    def column(self, time_col: str) -> Column:
+        # microsecond offsets: SECOND-granularity truncation misbins
+        # events near bin edges when width is fractional/sub-second
+        offset_us = F.expr(
+            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '{self.lo.isoformat(sep=' ')}', {time_col})"
+        )
+        return F.least(
+            F.floor(offset_us / F.lit(self.width_us)), F.lit(self.num_bins - 1)
+        ).cast("int")
+
+    def times(self, i: int) -> tuple[str, str]:
+        """Bin i's (start_time, end_time) as the route reports them."""
+        s = self.lo + timedelta(seconds=i * self.width_s)
+        e = self.lo + timedelta(seconds=(i + 1) * self.width_s)
+        return f"{s.isoformat()}+00:00", f"{e.isoformat()}+00:00"
 
 
 def histogram_sql(

@@ -2152,12 +2152,17 @@ class ParseableAPI:
         get_bin_density); optional conditions/groupBy/topK switch to the
         filtered SQL path (CountConditions, query/mod.rs:503-511).
         Ungrouped responses include empty bins (density semantics);
-        grouped responses carry only non-empty (group, bin) rows."""
-        from datetime import timedelta
+        grouped responses carry only non-empty (group, bin) rows.
 
+        An unconditioned, ungrouped request whose files each lie inside
+        one bin is answered from the manifest and staging
+        (StreamStore.histogram_fast_path) and starts no Spark job; any
+        other request scans, under the engine's P_SQL_TIMEOUT deadline
+        (504 on expiry), and returns the same bins."""
         from pyspark.sql import functions as F
 
         from .query.alerts import Condition, ConditionGroup
+        from .query.counts import Bins
         from .query.engine import TimeRange
 
         stream = body.get("stream") or ""
@@ -2174,10 +2179,7 @@ class ParseableAPI:
         num_bins = _int_arg(body.get("numBins"), "numBins", 10)
         if not 1 <= num_bins <= 10000:
             raise ApiError(400, "numBins must be between 1 and 10000")
-        lo = tr.start.replace(tzinfo=None)
-        hi = tr.end.replace(tzinfo=None)
-        total_s = max((hi - lo).total_seconds(), 1e-9)
-        width_s = total_s / num_bins
+        bins = Bins(tr.start, tr.end, num_bins)
 
         cond = body.get("conditions") or {}
         group_by = list(cond.get("groupBy") or cond.get("group_by") or [])
@@ -2197,26 +2199,22 @@ class ParseableAPI:
                 raise ApiError(400, str(e)) from e
 
         with self._lock:
-            tcol = store.time_col
-            df = store.scan(lo, hi)
-            if where:
-                df = df.filter(where)
-            # microsecond offsets: SECOND-granularity truncation misbins
-            # events near bin edges when width is fractional/sub-second
-            offset_us = F.expr(
-                f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '{lo.isoformat(sep=' ')}', {tcol})"
+            # tried before any Column is built: a hit makes no Py4J call
+            hist = (
+                None
+                if where or group_by
+                else store.histogram_fast_path(tr.start, tr.end, num_bins)
             )
-            idx = F.least(
-                F.floor(offset_us / F.lit(width_s * 1e6)), F.lit(num_bins - 1)
-            ).cast("int")
-            keys = [idx.alias("bin_idx"), *group_by]
-            agg = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("count"))
-            rows = agg.collect()
-
-        def bin_times(i: int) -> tuple[str, str]:
-            s = lo + timedelta(seconds=i * width_s)
-            e = lo + timedelta(seconds=(i + 1) * width_s)
-            return f"{s.isoformat()}+00:00", f"{e.isoformat()}+00:00"
+            if hist is None:
+                df = store.scan(tr.start, tr.end)
+                if where:
+                    df = df.filter(where)
+                keys = [bins.column(store.time_col).alias("bin_idx"), *group_by]
+                agg = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("count"))
+                try:
+                    rows = self.engine.run_with_deadline(agg.collect, f"counts {stream}")
+                except TimeoutError as e:
+                    raise ApiError(504, str(e)) from e
 
         if group_by:
             counts: dict = {}
@@ -2233,19 +2231,20 @@ class ParseableAPI:
             records = []
             for key in sorted(counts, key=lambda k: tuple(str(x) for x in k)):
                 for r in sorted(counts[key], key=lambda r: r["bin_idx"]):
-                    st, en = bin_times(r["bin_idx"])
+                    st, en = bins.times(r["bin_idx"])
                     rec = {"start_time": st, "end_time": en, "count": r["count"]}
                     rec.update(dict(zip(group_by, key)))
                     records.append(rec)
             fields = ["start_time", "end_time", "count", *group_by]
         else:
-            by_idx = {r["bin_idx"]: r["count"] for r in rows}
+            if hist is None:
+                hist = [0] * num_bins
+                for r in rows:
+                    hist[r["bin_idx"]] = r["count"]
             records = []
-            for i in range(num_bins):
-                st, en = bin_times(i)
-                records.append(
-                    {"start_time": st, "end_time": en, "count": by_idx.get(i, 0)}
-                )
+            for i, n in enumerate(hist):
+                st, en = bins.times(i)
+                records.append({"start_time": st, "end_time": en, "count": n})
             fields = ["start_time", "end_time", "count"]
         return {"fields": fields, "records": records}
 

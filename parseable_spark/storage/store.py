@@ -18,7 +18,9 @@ object-storage pipeline (SURVEY.md §2.1):
   with an old event time (time-partitioned streams) stay visible until
   the next flush, and a window no staged event can fall in skips the
   memtable altogether.
-- count_fast_path(start, end): manifest + staged rows (query/mod.rs:427-462).
+- count_fast_path(start, end): manifest + staged rows (query/mod.rs:427-462);
+  histogram_fast_path(start, end, num_bins): the same per counts bin
+  (query/mod.rs:537-662).
 - retention(): drop partitions older than N days
   (src/storage/retention.rs:58-160).
 """
@@ -40,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..catalog.manifest import ISO_MICRO_FMT, Manifest, Snapshot
 from ..ingest.events import DEFAULT_TIMESTAMP_KEY, PreparedBatch, Stream, StreamConfig, prepare_batch, to_dataframe
+from ..query.counts import Bins
 from .hottier import HotTier
 from .stats import FullStats
 from .writer import write_stream_batch
@@ -473,12 +476,39 @@ class StreamStore:
         n = self.manifest.window_count(self.time_col, lo, hi)
         if n is None:
             return None
-        return n + sum(
-            isinstance(t := r.get(self.time_col), datetime)
-            and (start is None or t >= start)
-            and (end is None or t < end)
+        return n + sum(1 for _ in self._staged_times(start, end))
+
+    def histogram_fast_path(
+        self, start: datetime, end: datetime, num_bins: int
+    ) -> list[int] | None:
+        """The /api/v1/counts bins of [start, end) without a scan:
+        Manifest.histogram plus the staged rows in the window, each
+        binned by query.counts.Bins; None when a file straddles a bin
+        edge or a bound, or lacks stats."""
+        start, end = _utc_naive(start), _utc_naive(end)
+        bins = Bins(start, end, num_bins)
+        h = self.manifest.histogram(
+            self.time_col,
+            start.strftime(ISO_MICRO_FMT),
+            end.strftime(ISO_MICRO_FMT),
+            num_bins,
+            lambda s: bins.index(datetime.fromisoformat(s)),
+        )
+        if h is None:
+            return None
+        for t in self._staged_times(start, end):
+            h[bins.index(t)] += 1
+        return h
+
+    def _staged_times(self, start: datetime | None, end: datetime | None):
+        """Time values of the staged rows in [start, end) (UTC-naive)."""
+        return (
+            t
             for b in self._staging
             for r in b.records
+            if isinstance(t := r.get(self.time_col), datetime)
+            and (start is None or t >= start)
+            and (end is None or t < end)
         )
 
     # --- compaction -------------------------------------------------------

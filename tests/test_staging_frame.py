@@ -194,3 +194,38 @@ def test_arrow_frame_matches_row_frame_across_schema_evolution(
     assert sorted(map(repr, _canon(store.staging_df().collect()))) == sorted(
         map(repr, _canon(to_dataframe(spark, registry, records).collect()))
     )
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        {"n": 2**63},
+        {"n": 2**64 - 1},
+        {"n": -(2**63) - 1},
+        {"__series_hash_u64": 2**64},
+        {"__series_hash_u64": -1},
+    ],
+    ids=["int64_max_plus_1", "u64_max", "int64_min_minus_1", "u64_too_big", "u64_negative"],
+)
+def test_out_of_range_integer_is_rejected_at_ingest(spark, tmp_path, body):
+    """An integer its column type cannot hold is a 400 at ingest: the
+    batch stages nothing and commits no field, and the stream still
+    ingests, scans and flushes. The extremes of each range are kept."""
+    from parseable_spark.server import ApiError, ParseableAPI
+
+    version = "v1" if "__series_hash_u64" in body else "v0"
+    api = ParseableAPI(spark, str(tmp_path))
+    api.create_stream("big")
+    store = api._stores["big"]
+    store.config.schema_version = version  # before the first batch: v0 keeps ints int64
+    (name,) = body
+    lo, hi = (0, 2**64 - 1) if name.startswith("__") else (-(2**63), 2**63 - 1)
+    with pytest.raises(ApiError) as ei:
+        api.ingest("big", [{name: lo}, body])
+    assert ei.value.status == 400 and "out of range" in str(ei.value)
+    assert store.staged_rows == 0 and name not in store.stream.registry.fields
+    assert api.ingest("big", [{name: lo}, {name: hi}]) == 2
+    assert store.scan().count() == 2
+    assert store.flush() == 2
+    got = sorted(int(r[0]) for r in store.scan().select(name).collect())
+    assert got == [lo, hi]

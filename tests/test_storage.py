@@ -8,6 +8,7 @@ from glob import glob
 
 from parseable_spark.catalog.manifest import Manifest, build_file_stats
 from parseable_spark.ingest.events import StreamConfig
+from parseable_spark.query.counts import Bins
 from parseable_spark.storage.store import StreamStore
 
 
@@ -70,8 +71,15 @@ class TestSinkAndManifest:
         for day in (1, 1, 2):
             st.ingest([{"d": day}], p_timestamp=_ts(day))
         st.flush()
-        edges = ["2026-08-01T00:00:00", "2026-08-02T00:00:00", "2026-08-03T00:00:00"]
-        assert st.manifest.histogram("p_timestamp", edges) == [2, 1]
+        bins = Bins(_ts(1), _ts(3), 2)
+        got = st.manifest.histogram(
+            "p_timestamp",
+            "2026-08-01T00:00:00.000000",
+            "2026-08-03T00:00:00.000000",
+            2,
+            lambda s: bins.index(datetime.fromisoformat(s)),
+        )
+        assert got == [2, 1]
 
 
 class TestStagingWindow:
@@ -144,6 +152,9 @@ class TestManifestTimeIndex:
 
     @staticmethod
     def _manifest(entries):
+        """One file per (lo, hi) or (lo, hi, nulls) entry; a None lo
+        gives a file without time stats, a missing nulls an unknown
+        null count."""
         from parseable_spark.catalog.manifest import FileStats, Manifest
 
         return Manifest(
@@ -152,9 +163,13 @@ class TestManifestTimeIndex:
                     file_path=f"f{i}",
                     num_rows=10 + i,
                     file_size=1,
-                    columns={"ts": {"min": lo, "max": hi}} if lo else {},
+                    columns={
+                        "ts": {"min": e[0], "max": e[1], "nulls": e[2] if len(e) > 2 else None}
+                    }
+                    if e[0]
+                    else {},
                 )
-                for i, (lo, hi) in enumerate(entries)
+                for i, e in enumerate(entries)
             ]
         )
 
@@ -187,17 +202,36 @@ class TestManifestTimeIndex:
             ), (s, e)
 
     def test_histogram_matches_linear_reference(self):
-        entries = [(f"t{i:04d}", f"t{i + 1:04d}") for i in range(100)]
-        m = self._manifest(entries)
-        edges = [f"t{i:04d}" for i in range(10, 60, 10)]
-        # linear reference: bin containing the file's time MIN
-        want = [0] * (len(edges) - 1)
-        for i, (lo, _hi) in enumerate(entries):
-            for b in range(len(edges) - 1):
-                if edges[b] <= lo < edges[b + 1]:
-                    want[b] += 10 + i
-                    break
-        assert m.histogram("ts", edges) == want
+        """The exact rule: a file counts in bin i only when both its
+        bounds fall in bin i, less its NULL-time rows; None when a file
+        straddles a bin edge or a window bound, or its bounds or null
+        count are unknown. The bin edges here are every 10 ticks."""
+        from tests.test_counts_fast_path import _linear_histogram
+
+        def t(i):
+            return f"t{i:04d}"
+
+        inside = [(t(i), t(i + 8), i % 3) for i in range(1, 100, 10)]  # t0001-t0009, ...
+        cases = [
+            (inside, 10, 60, [9, 12, 12, 12, 15]),
+            (inside + [(t(75), t(76))], 10, 60, [9, 12, 12, 12, 15]),  # outside
+            (inside + [(t(35), t(36))], 10, 60, None),  # unknown null count
+            (inside + [(None, None)], 10, 60, None),  # unknown bounds
+            (inside + [(t(39), t(41), 0)], 10, 60, None),  # straddles a bin edge
+            (inside, 15, 60, None),  # t0011-t0019 straddles the window start
+            (inside, 10, 55, None),  # t0051-t0059 straddles the window end
+            ([(t(i), t(i + 1), 0) for i in range(100)], 10, 60, None),  # files share edges
+        ]
+        for entries, a, b, want in cases:
+            m = self._manifest(entries)
+            n = (b - a + 9) // 10
+
+            def bin_of(s, a=a, n=n):
+                return min((int(s[1:]) - a) // 10, n - 1)
+
+            args = ("ts", t(a), t(b), n, bin_of)
+            assert _linear_histogram(m.files, *args) == want, (entries, a, b)
+            assert m.histogram(*args) == want, (entries, a, b)
 
     def test_ordered_add_file_extends_index_in_place(self, spark, tmp_path):
         from glob import glob as _glob

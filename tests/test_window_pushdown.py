@@ -83,10 +83,13 @@ def test_windowed_routes_pass_the_window_to_the_prune(api, monkeypatch):
     monkeypatch.setattr(Manifest, "prune_paths", spy)
     lo, hi = BASE + timedelta(hours=1), BASE + timedelta(hours=2)
     want = (lo.strftime(ISO_MICRO_FMT), hi.strftime(ISO_MICRO_FMT))
-    out = api.counts(
-        {"stream": "app", "startTime": _iso(lo), "endTime": _iso(hi), "numBins": 2}
-    )
-    assert [r["count"] for r in out["records"]] == [0, 10]
+    body = {"stream": "app", "startTime": _iso(lo), "endTime": _iso(hi), "numBins": 2}
+    assert [r["count"] for r in api.counts(body)["records"]] == [0, 10]
+    assert windows == []  # answered from the manifest: no scan to plan
+    body["conditions"] = {
+        "conditions": {"conditionConfig": [{"column": "i", "operator": ">=", "value": 0}]}
+    }
+    assert [r["count"] for r in api.counts(body)["records"]] == [0, 10]
     assert windows == [want]
     windows.clear()
     api.get_or_create_stream("other").ingest(
@@ -397,6 +400,61 @@ def test_manifest_answered_bare_count_starts_no_job(spark, wide):
     rows = _post_query(base, "SELECT COUNT(*) AS n FROM app WHERE i > 0", lo, hi)
     assert rows == [{"n": 176}]
     assert _jobs_submitted(spark) - before >= 1
+
+
+def _post_counts(base, lo, hi, num_bins, conditions=None):
+    import json
+    import urllib.request
+
+    body = {"stream": "app", "startTime": _iso(lo), "endTime": _iso(hi), "numBins": num_bins}
+    if conditions:
+        body["conditions"] = conditions
+    req = urllib.request.Request(
+        base + "/api/v1/counts",
+        data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+    )
+    with urllib.request.urlopen(req, timeout=60) as resp:
+        return [r["count"] for r in json.loads(resp.read())["records"]]
+
+
+_I_POSITIVE = {
+    "conditions": {
+        "operator": "AND",
+        "conditionConfig": [{"column": "i", "operator": ">", "value": 0}],
+    }
+}
+
+
+def test_manifest_answered_counts_start_no_job(spark, wide):
+    """An unconditioned counts request whose one-minute files each lie
+    inside one bin starts no Spark job; the same window with a
+    condition runs its scan."""
+    _, base, t0 = wide
+    lo, hi = t0, t0 + timedelta(minutes=40)
+    before = _jobs_submitted(spark)
+    assert _post_counts(base, lo, hi, 8) == [25] * 8
+    assert _jobs_submitted(spark) - before == 0
+    assert _post_counts(base, lo, hi, 8, _I_POSITIVE) == [20] * 8
+    assert _jobs_submitted(spark) - before >= 1
+
+
+def test_counts_scan_runs_under_the_deadline(wide, monkeypatch):
+    """A counts scan past the SQL deadline is cancelled with a 504, and
+    the API lock is released: the next request succeeds."""
+    import urllib.error
+
+    api, base, t0 = wide
+    lo, hi = t0, t0 + timedelta(minutes=40)
+    run = api.engine.run_with_deadline
+    monkeypatch.setattr(
+        api.engine, "run_with_deadline", lambda fn, label="collect", *_a: run(fn, label, 0)
+    )
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _post_counts(base, lo, hi, 8, _I_POSITIVE)
+    assert ei.value.code == 504
+    monkeypatch.undo()
+    assert _post_counts(base, lo, hi, 8, _I_POSITIVE) == [20] * 8
 
 
 @pytest.mark.parametrize(

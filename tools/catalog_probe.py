@@ -10,7 +10,9 @@ Synthesizes FileStats/Snapshot items with minute-granularity time
 bounds over a year (append-ordered, the real layout) and times, per N:
 
 - Manifest.prune_paths for a 1-hour window (the common dashboard case)
-- Manifest.histogram over 48 bins
+- Manifest.histogram over 48 two-minute bins (the exact rule, with
+  query.counts.Bins as the bin index; it answers, so every file in
+  the window is visited)
 - Manifest.total_rows
 - Snapshot.manifests_for_range for the same window
 - Snapshot.merge of 8 equal shards (querier fan-in)
@@ -26,10 +28,12 @@ import os
 import resource
 import sys
 import time
+from datetime import datetime
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parseable_spark.catalog.manifest import FileStats, Manifest, Snapshot  # noqa: E402
+from parseable_spark.query.counts import Bins  # noqa: E402
 
 TIME_COL = "p_timestamp"
 
@@ -52,7 +56,8 @@ def synth_manifest(n: int) -> Manifest:
             file_path=f"s3://bucket/stream/f{i}.parquet",
             num_rows=1000,
             file_size=1 << 20,
-            columns={TIME_COL: {"min": _iso(i), "max": _iso(i + 1)}},
+            # one-minute files: rows from :00 to :59, no NULL times
+            columns={TIME_COL: {"min": _iso(i), "max": _iso(i)[:-2] + "59", "nulls": 0}},
         )
         for i in range(n)
     ]
@@ -67,6 +72,11 @@ def main() -> None:
         man = synth_manifest(n)
         mid = n // 2
         start, end = _iso(mid), _iso(mid + 60)  # 1-hour window mid-log
+        hist_end = _iso(mid + 96)
+        bins = Bins(datetime.fromisoformat(start), datetime.fromisoformat(hist_end), 48)
+
+        def bin_of(s: str, bins=bins) -> int:
+            return bins.index(datetime.fromisoformat(s))
 
         def t(fn, reps=5):
             best = float("inf")
@@ -87,11 +97,10 @@ def main() -> None:
             "prune_1h_ms": t(lambda: man.prune_paths(TIME_COL, start, end)),
             "prune_rows": len(man.prune_paths(TIME_COL, start, end)),
             "histogram48_ms": t(
-                lambda: man.histogram(
-                    TIME_COL, [_iso(mid + i) for i in range(0, 98, 2)]
-                ),
-                3,
+                lambda: man.histogram(TIME_COL, start, hist_end, 48, bin_of), 3
             ),
+            "histogram48_answered": man.histogram(TIME_COL, start, hist_end, 48, bin_of)
+            is not None,
             "total_rows_ms": t(man.total_rows),
         }
         # snapshot over n//60 manifests (one per synthetic hour)
