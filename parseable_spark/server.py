@@ -45,7 +45,13 @@ from urllib.parse import parse_qs, quote as _urlquote, urlparse
 
 from .ingest.events import DEFAULT_TIMESTAMP_KEY, StreamConfig
 from .query.engine import QueryEngine, RequestContext
-from .query.response import ndjson_lines, query_response
+from .query.response import (
+    collect_values,
+    json_records,
+    ndjson_lines,
+    query_response,
+    record_converter,
+)
 from .storage.store import TOMBSTONE_GRACE_SECONDS, StreamStore
 
 TIME_ELAPSED_HEADER = "p-time-elapsed"  # query.rs:61
@@ -1148,7 +1154,6 @@ class ParseableAPI:
         query path, correlation.rs:300-360)."""
         from .query.correlation import JoinCondition, TableConfig, correlate
         from .query.engine import TimeRange
-        from .query.response import row_to_json
 
         cfg = self.get_correlation(cid)
         try:
@@ -1166,7 +1171,7 @@ class ParseableAPI:
                 for j in cfg["joinConfig"]["joinConditions"]
             )
             out = correlate(dfs[0], dfs[1], tcs[0], tcs[1], jcs)
-            return [row_to_json(r) for r in out.collect()]
+            return json_records(out)
 
     # -- OIDC login (src/oidc.rs, handlers/http/oidc.rs) ---------------------
     _OIDC_STATE_TTL = 600.0  # seconds a pending login may take
@@ -1642,7 +1647,6 @@ class ParseableAPI:
         the matching distinct-span count — both through the engine's
         broadcast-join rewrite of COUNT(DISTINCT) OVER."""
         from .query import traces as tr_mod
-        from .query.response import row_to_json
 
         raw_limit = body.get("limit")
         limit = _int_arg(raw_limit, "limit", self.DEFAULT_TRACE_LIMIT)
@@ -1679,7 +1683,7 @@ class ParseableAPI:
             count = tr_mod.trace_count(count_src, errors_only=errors_only).collect()[
                 0
             ]["count"]
-            records = [row_to_json(r) for r in listed.collect()]
+            records = json_records(listed)
         return {"count": count, "offset": offset, "limit": limit, "records": records}
 
     def trace_detail_api(self, body: dict[str, Any]) -> dict[str, Any]:
@@ -1687,7 +1691,6 @@ class ParseableAPI:
         span hierarchy of one trace (levels via the bounded-BFS
         replacement of WITH RECURSIVE) + the trace's time bounds."""
         from .query import traces as tr_mod
-        from .query.response import row_to_json
 
         trace_id = (body.get("traceId") or "").strip()
         if not trace_id:
@@ -1695,10 +1698,7 @@ class ParseableAPI:
         with self._lock:
             spans, _ = self._trace_spans(body)
             store = self._stores[body["dataset"]]
-            records = [
-                row_to_json(r)
-                for r in tr_mod.trace_detail(spans, trace_id).collect()
-            ]
+            records = json_records(tr_mod.trace_detail(spans, trace_id))
             if not records:
                 raise ApiError(404, f"Trace not found: {trace_id}")
             bounds = tr_mod.trace_bounds(
@@ -1718,7 +1718,6 @@ class ParseableAPI:
         from pyspark.sql import functions as F
 
         from .query.context import DIRECTION_TAG, log_context_sql
-        from .query.response import row_to_json
         from .query.timerange import parse_human_time
 
         dataset = body.get("dataset") or ""
@@ -1760,21 +1759,20 @@ class ParseableAPI:
                 half,
             )
             try:
-                rows = self.spark.sql(sql).collect()
+                ctx_df = self.spark.sql(sql)
+                # raw values: the page is sorted by, and its bounds
+                # printed from, the time values before they are JSON
+                rows = collect_values(ctx_df)
             finally:
                 self.spark.catalog.dropTempView(view)
-        before = sorted(
-            (r for r in rows if r[DIRECTION_TAG] == "before"),
-            key=lambda r: r[store.time_col],
-        )
-        after = sorted(
-            (r for r in rows if r[DIRECTION_TAG] == "after"),
-            key=lambda r: r[store.time_col],
-        )
-        records = [row_to_json(r) for r in [*before, *after]]
+        tag, ts = ctx_df.columns.index(DIRECTION_TAG), ctx_df.columns.index(store.time_col)
+        before = sorted((r for r in rows if r[tag] == "before"), key=lambda r: r[ts])
+        after = sorted((r for r in rows if r[tag] == "after"), key=lambda r: r[ts])
+        to_json = record_converter(ctx_df.schema)
+        records = [to_json(r) for r in [*before, *after]]
         for r in records:
             r.pop(DIRECTION_TAG, None)
-        times = [r[store.time_col] for r in [*before, *after]]
+        times = [r[ts] for r in [*before, *after]]
         return {
             "scope": "contextWindow",
             "contextStartTime": str(min(times)) if times else str(anchor_dt),

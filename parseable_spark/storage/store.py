@@ -10,7 +10,8 @@ object-storage pipeline (SURVEY.md §2.1):
   ORDER BY.
 - flush(): staging → partitioned parquet sorted time-desc + manifest/
   snapshot commit (streams.rs:922-1107, object_storage.rs:1035-1280);
-  flush is the only place staged rows are sorted.
+  flush is the only place staged rows are sorted, each minute by the
+  one task that writes its file.
 - scan(start, end): UNION of staging memtable + manifest-pruned parquet
   paths (stream_schema_provider.rs:602-753). Staging joins the union
   if and only if some staged batch's time-column range overlaps
@@ -308,14 +309,28 @@ class StreamStore:
         lock = swap_lock if swap_lock is not None else contextlib.nullcontext()
         with lock:
             batches = list(self._staging)
+            bounds = [b for b in self._staging_bounds[: len(batches)] if b is not None]
             pending_bytes = self._pending_ingestion_bytes
         if not batches:
             return 0
-        # the range partitioning of the time-desc sort gives one file per
-        # minute directory (adaptive execution coalesces small ranges)
-        df = self._batches_df(batches).orderBy(F.desc(self.time_col))
+        # hash-partitioned by minute directory into as many tasks as the
+        # batches span minutes, up to the shuffle width: one task writes
+        # each minute as one file, time-desc inside (write_stream_batch
+        # sorts within tasks), with no range-sampling job as a global
+        # sort needs
+        minutes = 1
+        if bounds:
+            lo = min(b[0] for b in bounds).replace(second=0, microsecond=0)
+            hi = max(b[1] for b in bounds)
+            minutes = (hi - lo) // timedelta(minutes=1) + 1
+        width = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         before = set(glob(os.path.join(self.data_dir, "**/*.parquet"), recursive=True))
-        write_stream_batch(df, self.data_dir, time_col=self.time_col)
+        write_stream_batch(
+            self._batches_df(batches),
+            self.data_dir,
+            time_col=self.time_col,
+            partitions=max(1, min(minutes, width)),
+        )
         new_files = sorted(
             set(glob(os.path.join(self.data_dir, "**/*.parquet"), recursive=True)) - before
         )
@@ -389,10 +404,12 @@ class StreamStore:
             df = sdf if df is None else df.unionByName(sdf)
         if df is None:
             return to_dataframe(self.spark, self.stream.registry, [])
-        if start is not None:
-            df = df.filter(F.col(self.time_col) >= F.lit(start))
-        if end is not None:
-            df = df.filter(F.col(self.time_col) < F.lit(end))
+        # the bounds as TIMESTAMP_NTZ literals from their text: a Python
+        # datetime literal passes through the host's local zone
+        if lo is not None:
+            df = df.filter(F.col(self.time_col) >= F.lit(lo).cast("timestamp_ntz"))
+        if hi is not None:
+            df = df.filter(F.col(self.time_col) < F.lit(hi).cast("timestamp_ntz"))
         return df
 
     def _staging_in_window(

@@ -1210,7 +1210,7 @@ def test_traces_apm_and_log_context_http(spark, tmp_path):
     from datetime import datetime, timedelta, timezone
 
     from parseable_spark.query import traces as tr_mod
-    from parseable_spark.query.response import row_to_json
+    from parseable_spark.query.response import json_records
 
     api = ParseableAPI(spark, str(tmp_path))
     srv, base = serve_background(api)
@@ -1239,7 +1239,7 @@ def test_traces_apm_and_log_context_http(spark, tmp_path):
         # same rows as the direct engine call
         store = api._stores["otel_tr"]
         spans = store.scan().withColumnRenamed("service.name", "service_name")
-        direct = [row_to_json(r) for r in tr_mod.trace_list(spans).collect()]
+        direct = json_records(tr_mod.trace_list(spans))
         keyfn = lambda r: r["span_span_id"]  # noqa: E731
         assert sorted(
             [{k: r[k] for k in direct[0]} for r in lst["records"]], key=keyfn
@@ -1281,7 +1281,7 @@ def test_traces_apm_and_log_context_http(spark, tmp_path):
             ("a", 0), ("b", 1), ("c", 2)
         ]
         assert all(r["total_span_count"] == 3 for r in det["records"])
-        direct_det = [row_to_json(r) for r in tr_mod.trace_detail(spans, "T1").collect()]
+        direct_det = json_records(tr_mod.trace_detail(spans, "T1"))
         assert det["records"] == direct_det
         with pytest.raises(urllib.error.HTTPError) as ei:
             _post(base + "/api/v1/services/traces/detail", {**body, "traceId": "ZZ"})
