@@ -35,9 +35,10 @@ of value into JSON: Arrow's (maps as lists of key/value pairs, structs
 as dicts, TIMESTAMP as aware UTC) and PySpark Rows' (maps as dicts,
 structs as Rows, TIMESTAMP as the host's local wall clock). TIMESTAMP
 renders as the UTC wall clock on any host, TIMESTAMP_NTZ as it is. A
-map's entries come in the map's own order from Arrow, and in the
-JVM's java.util.HashMap iteration order from Rows; JSON objects are
-unordered, so both are the same answer.
+map's entries come in the map's own order from Arrow and in the JVM's
+java.util.HashMap iteration order from Rows, so the converter sorts
+them: numeric keys by value, other keys by their JSON text. Every
+route then gives the same bytes for the same answer.
 
 Scale note: `ndjson_lines` iterates `toLocalIterator()` — partitions
 stream through the driver one at a time instead of a full collect, so
@@ -51,6 +52,7 @@ import json
 import math
 from datetime import datetime, timezone
 from decimal import Decimal
+from operator import itemgetter
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -82,6 +84,9 @@ _ARROW_LEAVES = (
     FloatType, DoubleType, DecimalType, StringType, BinaryType, DateType,
     TimestampType, TimestampNTZType,
 )  # fmt: skip
+
+# map key types whose entries sort by value; others sort by JSON text
+_NUMBERS = (ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType, DecimalType)
 
 # executed-plan roots whose collect() Spark answers on the driver
 _DRIVER_ROOTS = ("CollectLimitExec", "LocalTableScanExec")
@@ -163,11 +168,22 @@ def _map_converter(dt: MapType) -> Converter:
         return converted if isinstance(converted, str) else json.dumps(converted)
 
     def convert(v: Any) -> dict:
-        # a Row's map is a dict; Arrow's is a list of (key, value) pairs
+        # a Row's map is a dict in the JVM hash map's order, Arrow's a
+        # list of (key, value) pairs in the map's own order: the entries
+        # are sorted so that every route gives the same bytes
         pairs = v.items() if isinstance(v, dict) else v
-        return {json_key(k): _apply(val, x) for k, x in pairs}
+        if isinstance(dt.keyType, _NUMBERS):
+            # Spark normalizes NaN and -0.0 keys, so (isnan, k) is total
+            entries = [(json_key(k), x) for k, x in sorted(pairs, key=_number_order)]
+        else:
+            entries = sorted(((json_key(k), x) for k, x in pairs), key=itemgetter(0))
+        return {k: _apply(val, x) for k, x in entries}
 
     return convert
+
+
+def _number_order(pair: tuple) -> tuple:
+    return pair[0] != pair[0], pair[0]
 
 
 def record_converter(schema: StructType, send_null: bool = True) -> Converter:

@@ -309,27 +309,17 @@ class StreamStore:
         lock = swap_lock if swap_lock is not None else contextlib.nullcontext()
         with lock:
             batches = list(self._staging)
-            bounds = [b for b in self._staging_bounds[: len(batches)] if b is not None]
             pending_bytes = self._pending_ingestion_bytes
         if not batches:
             return 0
-        # hash-partitioned by minute directory into as many tasks as the
-        # batches span minutes, up to the shuffle width: one task writes
-        # each minute as one file, time-desc inside (write_stream_batch
-        # sorts within tasks), with no range-sampling job as a global
-        # sort needs
-        minutes = 1
-        if bounds:
-            lo = min(b[0] for b in bounds).replace(second=0, microsecond=0)
-            hi = max(b[1] for b in bounds)
-            minutes = (hi - lo) // timedelta(minutes=1) + 1
-        width = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        # write_stream_batch hash-partitions by minute directory: one task
+        # writes each minute as one time-desc file, with no range-sampling
+        # job as a global sort needs
         before = set(glob(os.path.join(self.data_dir, "**/*.parquet"), recursive=True))
         write_stream_batch(
             self._batches_df(batches),
             self.data_dir,
             time_col=self.time_col,
-            partitions=max(1, min(minutes, width)),
         )
         new_files = sorted(
             set(glob(os.path.join(self.data_dir, "**/*.parquet"), recursive=True)) - before

@@ -66,18 +66,14 @@ def write_stream_batch(
     bloom_filter_cols: list[str] | None = None,
     granularity: str = "minute",
     mode: str = "append",
-    partitions: int | None = None,
 ) -> None:
-    """Append a batch as partitioned, sorted parquet. With
-    ``partitions``, the rows are first hash-partitioned by the partition
-    columns into that many tasks, so each directory is written by one
-    task as one file."""
+    """Append a batch as partitioned, sorted parquet. The rows are first
+    hash-partitioned by the partition columns, so each directory is
+    written by one task as one file (adaptive execution coalesces whole
+    hash partitions, never splits one)."""
     parts = list(PARTITION_COLS if granularity == "minute" else PARTITION_COLS[:2])
     parts += custom_partitions or []
-    out = with_partition_columns(df, time_col, granularity)
-    if partitions is not None:
-        # an explicit count: adaptive execution does not coalesce it
-        out = out.repartition(partitions, *parts)
+    out = with_partition_columns(df, time_col, granularity).repartition(*parts)
     # descending time inside each file (streams.rs:756-760); OTel
     # metrics pass [metric_name asc, time desc] instead (:725-754).
     # Partition cols lead the sort so the dynamic-partition writer sees

@@ -4,9 +4,10 @@ range-sampling job.
 - The JSON body built from `DataFrame.toArrow()` equals, byte for byte
   on a UTC host, the body the Row path gives (the oracle below keeps
   the Row serializer the response module used before), for every type
-  it serializes; a map's entries may come in another order, so maps
-  compare as parsed JSON. Types the Row path cannot serialize fail
-  with the same status.
+  it serializes; the Row path gave a map's entries in the JVM hash
+  map's order, so maps compare with it as parsed JSON, and every route
+  now gives them sorted, in the same bytes. Types the Row path cannot
+  serialize fail with the same status.
 - TIMESTAMP renders as the UTC wall clock whatever the host's zone.
 - Spark's driver-side answers keep `collect()`: a plain LIMIT runs no
   more tasks than its incremental take, the manifest's COUNT(*) row
@@ -35,7 +36,7 @@ import pytest
 from pyspark.sql import Row
 
 from parseable_spark.ingest.events import StreamConfig
-from parseable_spark.query.response import json_records, ndjson_lines, query_response
+from parseable_spark.query.response import ndjson_lines, query_response
 from parseable_spark.server import ParseableAPI, serve_background
 from parseable_spark.storage.store import StreamStore
 
@@ -210,8 +211,22 @@ def test_arrow_maps_equal_row_maps_as_json(spark, utc_host, arrow_calls):
     df = _frame(spark, 30, MAPS)
     _assert_same_bodies(df, as_json=True)
     assert len(arrow_calls) == len(FLAGS)
-    first = json_records(df)[1]
-    assert list(first["m_str"]) == ["k1", "zz", "a"]  # the map's own order
+
+
+def test_every_route_sorts_map_entries(spark, utc_host, arrow_calls):
+    """The Arrow body, the driver-side LIMIT take's Rows and the NDJSON
+    stream give the same bytes: numeric keys by value, others by their
+    JSON text."""
+    df = _frame(spark, 30, MAPS)
+    arrow = query_response(df)
+    assert len(arrow_calls) == 1
+    rows = query_response(df.limit(29))  # a CollectLimitExec: Rows
+    assert len(arrow_calls) == 1
+    assert _dumps(rows) == _dumps(arrow[:29])
+    assert [_dumps(r) + "\n" for r in arrow] == list(ndjson_lines(df))
+    assert list(arrow[1]["m_str"]) == ["a", "k1", "zz"]
+    assert list(arrow[1]["m_int"]) == [1, 2, 18]
+    assert list(arrow[2]["m_date"]) == ["1900-01-01", "2026-01-03"]
 
 
 def test_empty_result_keeps_fields(spark, utc_host, arrow_calls):
@@ -419,7 +434,7 @@ def _confs(spark, **confs):
             spark.conf.set(k, v)
 
 
-def test_one_minute_flush_runs_one_job(spark, tmp_path):
+def test_one_minute_flush_runs_no_sampling_job(spark, tmp_path):
     """The shuffle's map stage and the write: two jobs, where the global
     time sort added a third, the RangePartitioner's sampling job."""
     store = StreamStore(spark, str(tmp_path), StreamConfig(name="one"))
