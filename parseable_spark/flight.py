@@ -116,15 +116,10 @@ class FlightQueryServer(_flight.FlightServerBase if _flight else object):
                 return _flight.RecordBatchStream(pa.table({}))
             df = sdf
             if req.get("startTime") and req.get("endTime"):
-                from pyspark.sql import functions as F
-
                 from .query.timerange import TimeRange
 
                 tr = TimeRange.parse(req["startTime"], req["endTime"])
-                tc = F.col(store.time_col)
-                df = sdf.filter(
-                    (tc >= F.lit(tr.start)) & (tc < F.lit(tr.end))
-                )
+                df = store.window_filter(sdf, tr.start, tr.end)
         else:
             df = self.engine.query(
                 req["query"], req.get("startTime"), req.get("endTime")

@@ -217,21 +217,6 @@ def repetition_features(
     )
 
 
-def token_counts(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Whitespace tokens + BPE-ish subunit count (alpha runs / digit runs /
-    other non-space chars) — the standard pre-tokenizer approximation."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(id_col),
-        F.size(normalized_words(t)).cast("bigint").alias("ws_tokens"),
-        F.regexp_count(F.lower(t), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]")).cast("bigint").alias(
-            "bpe_ish_tokens"
-        ),
-    )
-
-
 def fingerprints(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", prefix_len: int = 64
 ) -> DataFrame:

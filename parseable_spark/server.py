@@ -39,8 +39,10 @@ import os
 import re
 import threading
 import time
+from dataclasses import dataclass
+from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any, Iterator
+from typing import Any, Callable, Iterable, Iterator
 from urllib.parse import parse_qs, quote as _urlquote, urlparse
 
 from .ingest.events import DEFAULT_TIMESTAMP_KEY, StreamConfig
@@ -52,7 +54,14 @@ from .query.response import (
     query_response,
     record_converter,
 )
+from .rbac import _PRIVILEGES, DEFAULT_TENANT, AccessDenied, Action, Grant, Rbac
 from .storage.store import TOMBSTONE_GRACE_SECONDS, StreamStore
+from .tenants import (
+    INTRA_CLUSTER_TENANT_HEADER,
+    TENANT_ID_HEADER,
+    TenantMeta,
+    TenantNotFound,
+)
 
 TIME_ELAPSED_HEADER = "p-time-elapsed"  # query.rs:61
 STREAM_NAME_HEADER = "x-p-stream"  # handlers/mod.rs:29
@@ -121,8 +130,6 @@ class ParseableAPI:
         tenant: str | None = None,  # tenants.py: one API instance per tenant
         ingestor_auth: tuple[str, str] | None = None,  # Flight peer creds
     ) -> None:
-        from .rbac import DEFAULT_TENANT
-
         self.spark = spark
         self.root = root
         self.time_col = time_col
@@ -154,8 +161,6 @@ class ParseableAPI:
         # scan providers, so they take the API lock like every request
         self.scheduler = AlertScheduler(self.engine, lock=self._lock)
         self._alerts: dict[str, Any] = {}
-        from .rbac import Rbac
-
         self.rbac = Rbac()
         self._passwords: dict[str, str] = {}
         self._filters: dict[str, dict[str, Any]] = {}
@@ -903,7 +908,6 @@ class ParseableAPI:
         # SSE push on trigger (alerts/mod.rs:711-751): broadcast to
         # connected sessions whose principal may QUERY the stream;
         # sits in targets so it inherits the notification-mute gate
-        from .rbac import DEFAULT_TENANT
         from .sse import SseAlertTarget
 
         sa.targets.append(
@@ -2804,8 +2808,6 @@ class ParseableAPI:
 
     # -- users + RBAC (rbac.rs, role.rs:195-330) -----------------------------
     def _parse_grants(self, items: list[dict[str, Any]]):
-        from .rbac import Grant, _PRIVILEGES
-
         grants = []
         for g in items or []:
             priv = (g.get("privilege") or "").lower()
@@ -3001,8 +3003,6 @@ class ParseableAPI:
         """Boolean form of the QUERY gate, for SSE broadcast filtering
         (alerts/mod.rs:726-733 user_auth_for_alert_config per active
         session)."""
-        from .rbac import Action
-
         try:
             self.authorize(principal, Action.QUERY, stream)
             return True
@@ -3012,8 +3012,6 @@ class ParseableAPI:
     def authorize(self, principal: str | None, action, stream: str = "*") -> None:
         """Per-action grant check (reference user_auth_for_datasets);
         '*' principals (open server / built-in admin) skip it."""
-        from .rbac import AccessDenied
-
         if principal == "*":
             return
         if principal is None:
@@ -3047,7 +3045,44 @@ def _canon_ip(addr: str) -> str:
     return str(v4 if v4 is not None else ip)
 
 
+# access rules of a route that are not an rbac.Action
+PUBLIC = "public"  # no authentication
+AUTHENTICATED = "authenticated"  # any principal; the handler filters by it
+SUPERADMIN = "superadmin"  # the server administrator (tenant lifecycle)
+_UNREAD = object()  # _Handler._body before the JSON body is parsed
+
+
+def _any_stream(h, **_) -> tuple[str, ...]:
+    return ("*",)
+
+
+@dataclass(frozen=True)
+class Route:
+    """One row of the route table (_ROUTES). ``pattern`` is an exact
+    path whose ``{param}`` segments each match one non-empty segment;
+    the handler and the extractor get them as keyword arguments.
+
+    ``access`` is an rbac.Action, PUBLIC, AUTHENTICATED or SUPERADMIN.
+    For an Action, ``resources(h, **params)`` names the streams the
+    dispatcher gates (an ``(Action, stream)`` pair gates with that
+    action instead). It runs after authentication and before the gate,
+    so request checks whose 400/404 must come before the 403 live
+    there. A handler returns the 200 JSON body, or replies itself.
+    ``ingest`` rows need the tenant header in multi-tenant mode
+    (middleware.rs:340-358)."""
+
+    method: str
+    pattern: str
+    access: Action | str
+    handler: Callable[..., Any]
+    resources: Callable[..., Iterable[Any]] = _any_stream
+    ingest: bool = False
+
+
 class _Handler(BaseHTTPRequestHandler):
+    """Serves every method through ``_dispatch`` and the route table;
+    the routes (and their RBAC actions) are listed once, in _ROUTES."""
+
     protocol_version = "HTTP/1.1"
     api: ParseableAPI  # set by make_server (default tenant's API)
     tenants = None  # tenants.TenantManager | None — set by make_server
@@ -3096,13 +3131,15 @@ class _Handler(BaseHTTPRequestHandler):
         return raw
 
     def _json_body(self) -> Any:
-        raw = self._raw_body()
-        if not raw:
-            return None
-        try:
-            return json.loads(raw)
-        except json.JSONDecodeError as e:
-            raise ApiError(400, f"invalid JSON body: {e}") from e
+        """The request's JSON body, parsed once: a route's extractor and
+        its handler share it."""
+        if self._body is _UNREAD:
+            raw = self._raw_body()
+            try:
+                self._body = json.loads(raw) if raw else None
+            except json.JSONDecodeError as e:
+                raise ApiError(400, f"invalid JSON body: {e}") from e
+        return self._body
 
     def _drain_body(self) -> None:
         """Consume an unread request body before responding. HTTP/1.1
@@ -3126,7 +3163,14 @@ class _Handler(BaseHTTPRequestHandler):
 
     def handle_one_request(self) -> None:  # noqa: D102 — per-request reset
         self._body_consumed = False
+        self._body = _UNREAD
+        self._replied = False
+        self.principal = None
         super().handle_one_request()
+
+    def send_response(self, code: int, message: str | None = None) -> None:
+        self._replied = True
+        super().send_response(code, message)
 
     def _respond_json(self, status: int, obj: Any, extra: dict[str, str] | None = None) -> None:
         self._drain_body()
@@ -3287,8 +3331,6 @@ class _Handler(BaseHTTPRequestHandler):
             return False
 
     # -- multi-tenancy (x-p-tenant; middleware.rs:150-260,334-390) -----------
-    _INGEST_PATHS = ("/api/v1/ingest", "/v1/logs", "/v1/metrics", "/v1/traces")
-
     tenant: str = "default"
 
     def _probe_credentials(self, api) -> str | None:
@@ -3311,8 +3353,6 @@ class _Handler(BaseHTTPRequestHandler):
     def _tenant_key(self) -> str | None:
         """Session key for per-tenant generator state: None for the
         default tenant (the reference's Option<String> keying)."""
-        from .rbac import DEFAULT_TENANT
-
         return None if self.tenant == DEFAULT_TENANT else self.tenant
 
     def _otel_generator(self):
@@ -3329,7 +3369,7 @@ class _Handler(BaseHTTPRequestHandler):
                 root._otel_demo_gen = gen
         return gen
 
-    def _resolve_tenant(self) -> None:
+    def _resolve_tenant(self, ingest: bool) -> None:
         """Route the request to its tenant's ParseableAPI instance.
 
         Reference flow (middleware.rs): single-tenant mode rejects the
@@ -3337,14 +3377,8 @@ class _Handler(BaseHTTPRequestHandler):
         it and forbids "default" (:340-358); other actions derive the
         tenant from the authenticated user when no header is given
         (:361-377); a workspace-suspended tenant is refused everything
-        (tenants/mod.rs:134-149)."""
-        from .rbac import DEFAULT_TENANT
-        from .tenants import (
-            INTRA_CLUSTER_TENANT_HEADER,
-            TENANT_ID_HEADER,
-            TenantNotFound,
-        )
-
+        (tenants/mod.rs:134-149). An unknown tenant raises
+        TenantNotFound (404)."""
         mgr = self.tenants
         hdr = self.headers.get(TENANT_ID_HEADER) or self.headers.get(
             INTRA_CLUSTER_TENANT_HEADER
@@ -3355,16 +3389,13 @@ class _Handler(BaseHTTPRequestHandler):
             if hdr is not None:
                 raise ApiError(400, f"unexpected header {TENANT_ID_HEADER}")
             return
-        if self.command == "POST" and urlparse(self.path).path in self._INGEST_PATHS:
+        if ingest:
             if hdr is None:
                 raise ApiError(400, f"missing {TENANT_ID_HEADER} header")
             if hdr == DEFAULT_TENANT:
                 raise ApiError(400, f"invalid {TENANT_ID_HEADER} header")
         if hdr is not None:
-            try:
-                self.api = mgr.api_for(hdr)
-            except TenantNotFound as e:
-                raise ApiError(404, str(e)) from e
+            self.api = mgr.api_for(hdr)
             self.tenant = hdr
         else:
             homes = mgr.tenant_of_credentials(self._probe_credentials)
@@ -3377,72 +3408,15 @@ class _Handler(BaseHTTPRequestHandler):
     def _allow_superadmin(self) -> None:
         """Tenant lifecycle is SuperAdmin-only (reference Action::
         SuperAdmin, middleware.rs:359): the built-in credential pair
-        (or an open dev server), never a tenant-local admin."""
+        (or an open dev server), never a tenant-local admin. The HTTP
+        surface is over the OSS-public engine functions add_tenant/
+        suspend/resume/delete_tenant (src/parseable/mod.rs:1178-1263)."""
         if self.principal != "*":
             raise ApiError(403, "tenant management requires the server administrator")
-
-    def _tenant_admin_route(self, parts: list[str]) -> bool:
-        """/api/v1/tenants[/{id}[/suspend|resume]] — dispatch; returns
-        True when handled. HTTP surface over the OSS-public engine
-        functions add_tenant/suspend/resume/delete_tenant
-        (src/parseable/mod.rs:1178-1263; the reference's own HTTP
-        handlers for these live in its enterprise tree)."""
-        if parts[:3] != ["api", "v1", "tenants"]:
-            return False
-        from .tenants import TenantMeta, TenantNotFound
-
-        if not self._authorized():
-            return True
-        self._allow_superadmin()
-        mgr = self.tenants
-        if mgr is None or not mgr.multi_tenant:
+        if self.tenants is None or not self.tenants.multi_tenant:
             raise ApiError(400, "P_MULTI_TENANCY is set to false")
-        try:
-            if self.command == "GET" and len(parts) == 3:
-                self._respond_json(200, mgr.list_tenants())
-            elif self.command == "PUT" and len(parts) == 4:
-                body = self._json_body() or {}
-                try:
-                    mgr.add_tenant(
-                        parts[3],
-                        TenantMeta.from_json(body),
-                        # explicit opt-in to re-attach a deleted
-                        # tenant's retained storage (see add_tenant)
-                        adopt_existing=bool(body.get("adopt_existing")),
-                    )
-                except ValueError as e:
-                    raise ApiError(400, str(e)) from e
-                self._respond_json(200, {"status": f"created tenant {parts[3]}"})
-            elif self.command == "POST" and len(parts) == 4:
-                mgr.update_meta(parts[3], self._json_body() or {})
-                self._respond_json(200, {"status": f"updated tenant {parts[3]}"})
-            elif (
-                self.command == "PUT"
-                and len(parts) == 5
-                and parts[4] in ("suspend", "resume")
-            ):
-                qp = parse_qs(urlparse(self.path).query)
-                service = (qp.get("service") or [""])[0]
-                try:
-                    if parts[4] == "suspend":
-                        mgr.suspend_service(parts[3], service)
-                    else:
-                        mgr.resume_service(parts[3], service)
-                except ValueError as e:
-                    raise ApiError(400, str(e)) from e
-                self._respond_json(
-                    200, {"status": f"{parts[4]}d {service} for tenant {parts[3]}"}
-                )
-            elif self.command == "DELETE" and len(parts) == 4:
-                mgr.delete_tenant(parts[3])
-                self._respond_json(200, {"status": f"deleted tenant {parts[3]}"})
-            else:
-                self._respond_json(404, {"error": "no such tenant route"})
-        except TenantNotFound as e:
-            raise ApiError(404, str(e)) from e
-        return True
 
-    def _serve_sse(self, qp: dict[str, str]) -> None:
+    def _serve_sse(self) -> None:
         """GET /api/v1/sse — ``text/event-stream`` of alert events.
         (See also _serve_livetail below for the row-push channel.)
 
@@ -3467,7 +3441,7 @@ class _Handler(BaseHTTPRequestHandler):
                 )
             raise ApiError(401, "unauthorized")
         try:
-            max_events = int(qp.get("max_events", "0"))
+            max_events = int(self.qp.get("max_events", "0"))
         except ValueError as e:
             raise ApiError(400, "invalid max_events") from e
         if max_events < 0:
@@ -3512,7 +3486,7 @@ class _Handler(BaseHTTPRequestHandler):
             if client is not None:
                 self.api.sse.unregister(client)
 
-    def _serve_livetail(self, qp: dict[str, str]) -> None:
+    def _serve_livetail(self) -> None:
         """GET /api/v1/livetail?stream=S[&max_rows=N] — NDJSON push of
         freshly ingested (normalized) rows, the reference's livetail
         channel (src/livetail.rs) over chunked HTTP instead of Flight.
@@ -3524,23 +3498,16 @@ class _Handler(BaseHTTPRequestHandler):
         import time as _time
         import uuid as _uuid
 
-        from .rbac import Action
         from .streaming.livetail import LIVETAIL
 
-        if not self._authorized():
-            return
-        stream = qp.get("stream") or ""
-        if not stream:
-            raise ApiError(400, "missing stream query param")
-        # RBAC BEFORE the existence check: a principal with zero grants
-        # must not be able to probe stream-name existence via 404-vs-403
-        # (review finding — matches the read-side RBAC ordering on the
-        # filters/targets/alerts/schema routes).
-        self._allow(Action.QUERY, stream)
+        # the route gated QUERY on the stream (_livetail_stream) BEFORE
+        # this existence check: a principal with zero grants must not
+        # probe stream-name existence via 404-vs-403
+        stream = self.qp["stream"]
         if stream not in self.api._stores:
             raise ApiError(404, f"logstream {stream} does not exist")
         try:
-            max_rows = int(qp.get("max_rows", "0"))
+            max_rows = int(self.qp.get("max_rows", "0"))
         except ValueError as e:
             raise ApiError(400, "invalid max_rows") from e
         self._drain_body()
@@ -3592,8 +3559,6 @@ class _Handler(BaseHTTPRequestHandler):
         """Admin = open-server/built-in principal or a MANAGE grant —
         may act on other users' per-user resources (dashboards.rs
         is_admin semantics)."""
-        from .rbac import Action
-
         if self.principal == "*":
             return True
         try:
@@ -3602,954 +3567,309 @@ class _Handler(BaseHTTPRequestHandler):
         except ApiError:
             return False
 
-    # -- routes --------------------------------------------------------------
-    @staticmethod
-    def _logstream_route(path: str) -> tuple[str, str] | None:
-        """/api/v1/logstream[/{name}[/{sub}]] → (name, sub) with empty
-        strings for missing segments; None when not a logstream path."""
-        parts = path.strip("/").split("/")
-        if parts[:3] != ["api", "v1", "logstream"]:
-            return None
-        if len(parts) > 5:
-            return None
-        return (
-            parts[3] if len(parts) > 3 else "",
-            parts[4] if len(parts) > 4 else "",
-        )
-
-    def do_GET(self) -> None:  # noqa: N802 (stdlib naming)
-        parsed_url = urlparse(self.path)
-        path = parsed_url.path
+    # -- dispatch ------------------------------------------------------------
+    def _dispatch(self) -> None:
+        """Serve one request from _ROUTES, in this order: tenant, route
+        (no match is a 404 before authentication), the POST overload
+        gate, authentication, the row's access rule on each resource its
+        extractor names, the handler. Every error reply is made here."""
+        url = urlparse(self.path)
+        self.qp = {k: v[0] for k, v in parse_qs(url.query).items()}
+        row, params = _match_route(self.command, url.path)
         try:
-            self._resolve_tenant()
-            parts_d = path.strip("/").split("/")
-            if self._tenant_admin_route(parts_d):
-                return
-            if parts_d[:4] == ["api", "v1", "o", "login"]:
-                qp = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                target = qp.get("redirect") or "/"
-                if not self._valid_redirect(target):
-                    raise ApiError(400, "Bad Request, Invalid Redirect URL!")
-                sid = self._session_cookie()
-                if sid and self.api.check_session(sid):
-                    self._redirect(target)  # active session: straight back
-                elif self.api.oidc_client is not None:
-                    self._redirect(
-                        self.api.oidc_client.auth_url(
-                            state=self.api.mint_oidc_state(
-                                target, client=self._oidc_client_key()
-                            )
+            self._resolve_tenant(ingest=row is not None and row.ingest)
+            if row is None:
+                raise ApiError(404, f"no route {url.path}")
+            # resource gate (resource_check.rs middleware): shed the
+            # data plane under overload; health/admin GETs and tenant
+            # administration stay up
+            mon = getattr(self.api, "resource_monitor", None)
+            if (
+                self.command == "POST"
+                and row.access != SUPERADMIN
+                and mon is not None
+                and not mon.resource_ok
+            ):
+                raise ApiError(503, "Server resources over-utilized")
+            if row.access != PUBLIC:
+                if not self._authorized():
+                    return
+                if row.access == SUPERADMIN:
+                    self._allow_superadmin()
+                elif row.access != AUTHENTICATED:
+                    for res in row.resources(self, **params):
+                        action, stream = (
+                            res if isinstance(res, tuple) else (row.access, res)
                         )
-                    )
-                else:
-                    self._redirect(target)  # no OIDC configured (dev mode)
-                return
-            if parts_d[:4] == ["api", "v1", "o", "code"]:
-                qp = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                code = qp.get("code") or ""
-                if not code:
-                    raise ApiError(400, "missing code")
-                # the state must redeem a nonce WE minted for this
-                # browser's login — an attacker-delivered code with a
-                # forged/absent state is rejected instead of silently
-                # logging the victim in as the attacker (r7 review)
-                target = self.api.consume_oidc_state(qp.get("state"))
-                if target is None:
-                    raise ApiError(400, "invalid or expired login state")
-                if not self._valid_redirect(target):
-                    target = "/"
-                sid, username = self.api.oidc_callback(code)
-                # cookie value URL-encoded: IdP display names are
-                # attacker-controlled — raw interpolation breaks on
-                # non-Latin-1 (send_header encodes latin-1) and allows
-                # ";"/CRLF cookie-attribute injection
-                safe_user = _urlquote(username, safe="")
-                self._redirect(
-                    target,
-                    cookies=[
-                        f"session={sid}; Path=/; HttpOnly",
-                        f"username={safe_user}; Path=/",
-                    ],
-                )
-                return
-            if parts_d[:4] == ["api", "v1", "o", "logout"]:
-                qp = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                target = qp.get("redirect") or "/"
-                if not self._valid_redirect(target):
-                    raise ApiError(400, "Bad Request, Invalid Redirect URL!")
-                sid = self._session_cookie()
-                user = self.api.drop_session(sid) if sid else None
-                # provider end-session only for OAuth principals
-                # (reference is_oauth check, handlers/http/oidc.rs:190-200)
-                end = (
-                    self.api.oidc_client.logout_url()
-                    if self.api.oidc_client is not None and self.api.is_oauth(user)
-                    else None
-                )
-                self._redirect(
-                    end or target,
-                    cookies=["session=; Path=/; Max-Age=0"],
-                )
-                return
-            if parts_d[:3] == ["api", "prism", "v1"]:
-                if not self._authorized():
-                    return
-                qp = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                if parts_d[3] == "apikeys":
-                    from .rbac import Action
-
-                    self._allow(Action.MANAGE)
-                    if len(parts_d) == 4:
-                        self._respond_json(200, self.api.list_api_keys())
-                    else:
-                        self._respond_json(200, self.api.get_api_key(parts_d[4]))
-                elif parts_d[3:] == ["home"]:
-                    self._respond_json(
-                        200,
-                        self.api.prism_home(
-                            self.principal,
-                            include_internal=qp.get("includeInternal") == "true",
-                        ),
-                    )
-                elif parts_d[3:] == ["home", "search"]:
-                    if not qp:
-                        self._respond_json(200, {})
-                        return
-                    if "key" not in qp:
-                        raise ApiError(400, "invalid query parameter, expected key")
-                    self._respond_json(
-                        200, self.api.prism_home_search(self.principal, qp["key"])
-                    )
-                elif (
-                    len(parts_d) == 6
-                    and parts_d[3] == "logstream"
-                    and parts_d[5] == "info"
-                ):
-                    from .rbac import Action
-
-                    self._allow(Action.QUERY, parts_d[4])
-                    self._respond_json(
-                        200, self.api.prism_logstream_info(parts_d[4])
-                    )
-                else:
-                    self._respond_json(404, {"error": f"no route {path}"})
-                return
-            if parts_d[:3] == ["api", "v1", "dashboards"]:
-                if not self._authorized():
-                    return
-                if len(parts_d) == 3:
-                    params = {
-                        k: v[0] for k, v in parse_qs(parsed_url.query).items()
-                    }
-                    limit = 0
-                    if "limit" in params:
-                        try:
-                            limit = int(params["limit"])
-                        except ValueError as e:
-                            raise ApiError(400, "Invalid limit value") from e
-                        if limit < 0:  # ds[:-n] would DROP dashboards
-                            raise ApiError(400, "Invalid limit value")
-                    tags = None
-                    if "tags" in params:
-                        tags = [
-                            t.strip() for t in params["tags"].split(",") if t.strip()
-                        ]
-                        if not tags:
-                            raise ApiError(400, "Tags cannot be empty")
-                    self._respond_json(200, self.api.list_dashboards(limit, tags))
-                elif parts_d[3] == "list_tags":
-                    self._respond_json(200, self.api.list_dashboard_tags())
-                else:
-                    self._respond_json(200, self.api.get_dashboard(parts_d[3]))
-                return
-            if path in ("/api/v1/liveness", "/api/v1/readiness"):
-                self._respond_json(200, {"status": "ok"})
-                return
-            if path == "/api/v1/sse":
-                qp = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                self._serve_sse(qp)
-                return
-            if path == "/api/v1/livetail":
-                qp = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                self._serve_livetail(qp)
-                return
-            if path == "/api/v1/metrics":
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)  # reference Action::Metrics
-                body = self.api.prometheus_metrics().encode()
-                self.send_response(200)
-                self.send_header(
-                    "Content-Type", "text/plain; version=0.0.4; charset=utf-8"
-                )
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-                return
-            if path == "/api/v1/alert-target-policy":
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)  # reference Action::All
-                self._respond_json(200, self.api.get_target_policy())
-                return
-            if path in ("/api/v1/cluster/info", "/api/v1/cluster/metrics"):
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)  # reference Action::ListCluster*
-                payload = (
-                    self.api.cluster_info()
-                    if path.endswith("/info")
-                    else self.api.cluster_metrics()
-                )
-                self._respond_json(200, payload)
-                return
-            if path == "/api/v1/demodata":
-                # GET /api/v1/demodata?action=... (demo_data.rs:39-82):
-                # 400 on missing/unknown params, spawn-and-202 otherwise
-                from .demo_data import DEMO_STREAM, run_demo_action
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                qp = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                if not qp:
-                    raise ApiError(400, "missing query parameter")
-                action = qp.get("action")
-                if action is None:
-                    raise ApiError(400, "missing query parameter 'action'")
-                if action not in ("ingest", "filters", "alerts", "dashboards"):
-                    raise ApiError(400, f"invalid demodata action {action!r}")
-                # per-artifact RBAC: the non-ingest actions create
-                # MANAGE-gated objects (targets/alerts/filters/
-                # dashboards), exactly like their dedicated routes — an
-                # ingest-only principal must not mint webhook targets
-                # through the demo door (review finding)
-                if action == "ingest":
-                    self._allow(Action.INGEST, DEMO_STREAM)
-                else:
-                    self._allow(Action.MANAGE)
-                run_demo_action(self.api, action)
-                self._respond_json(202, {"status": "accepted"})
-                return
-            if path == "/api/v1/otel_generator":
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.INGEST)
-                self._respond_json(
-                    200, self._otel_generator().status(self._tenant_key())
-                )
-                return
-            if path == "/api/v1/about":
-                # payload shape per handlers/http/about.rs:48-119;
-                # authenticated scope like the reference — the payload
-                # leaks the storage filesystem path, deployment id, and
-                # hot-tier stream names (review finding)
-                if not self._authorized():
-                    return
-                from . import __version__
-
-                hot = [
-                    n
-                    for n, s in self.api._stores.items()
-                    if getattr(s, "hot_tier", None) is not None
-                ]
-                self._respond_json(
-                    200,
-                    {
-                        "version": f"v{__version__}",
-                        "engine": "parseable-spark",
-                        "uiVersion": "development",
-                        "commit": "",
-                        "deploymentId": self.api.deployment_id,
-                        "updateAvailable": False,
-                        "latestVersion": None,
-                        "llmActive": False,
-                        "llmProvider": None,
-                        "oidcActive": self.api.oidc_client is not None,
-                        "license": {
-                            "name": "AGPL-3.0-only",
-                            "version": "v1",
-                            "plan": "OSS",
-                            "deploymentInfo": "Managed",
-                        },
-                        "mode": "querier" if self.api.ingestor_ports else "standalone",
-                        "staging": self.api.root,
-                        "hotTier": (
-                            f"Enabled, Streams: {','.join(sorted(hot))}"
-                            if hot
-                            else "Disabled"
-                        ),
-                        "grpcPort": None,
-                        "store": {"type": "localdrive", "path": self.api.root},
-                        "streams": len(self.api._stores),
-                    },
-                )
-                return
-            parts = path.strip("/").split("/")
-            if parts[:3] == ["api", "v1", "user"]:
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)
-                if len(parts) == 5 and parts[4] == "role":
-                    self._respond_json(200, self.api.get_user_roles(parts[3]))
-                else:
-                    self._respond_json(200, self.api.list_users())
-                return
-            if parts[:3] == ["api", "v1", "users"]:
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)
-                self._respond_json(
-                    200,
-                    self.api.prism_users(parts[3] if len(parts) > 3 else None),
-                )
-                return
-            if parts[:3] in (["api", "v1", "role"], ["api", "v1", "roles"]):
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)
-                if len(parts) == 3:
-                    self._respond_json(200, self.api.rbac.list_roles())
-                else:
-                    self._respond_json(200, self.api.get_role(parts[3]))
-                return
-            # read-side MANAGE gates mirror the create/modify/delete
-            # routes: a zero-grant user must not enumerate alert
-            # definitions, notification endpoints, saved filters, or
-            # correlations (review finding — asymmetric authz)
-            if parts[:3] == ["api", "v1", "filters"]:
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)
-                if len(parts) == 3:
-                    self._respond_json(200, self.api.list_filters())
-                else:
-                    self._respond_json(200, self.api.get_filter(parts[3]))
-                return
-            if parts[:3] == ["api", "v1", "correlation"]:
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)
-                if len(parts) == 3:
-                    self._respond_json(200, self.api.list_correlations())
-                else:
-                    self._respond_json(200, self.api.get_correlation(parts[3]))
-                return
-            if parts[:3] == ["api", "v1", "targets"]:
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)
-                if len(parts) == 3:
-                    self._respond_json(200, self.api.targets.list())
-                else:
-                    try:
-                        self._respond_json(200, self.api.targets.get(parts[3]).mask())
-                    except KeyError as e:
-                        raise ApiError(404, str(e)) from e
-                return
-            if parts[:3] == ["api", "v1", "alerts"]:
-                from .rbac import Action
-
-                if not self._authorized():
-                    return
-                self._allow(Action.MANAGE)
-                if len(parts) == 3:
-                    self._respond_json(200, self.api.list_alerts())
-                else:
-                    self._respond_json(200, self.api.alert_json(parts[3]))
-                return
-            route = self._logstream_route(path)
-            if route is None:
-                self._respond_json(404, {"error": f"no route {path}"})
-                return
-            if not self._authorized():
-                return
-            name, sub = route
-            from .rbac import Action
-
-            if not name:
-                # list only streams the principal may see (reference
-                # filters ListStream results by per-stream permission)
-                streams = [
-                    s
-                    for s in self.api.list_streams()
-                    if self._can(Action.LIST_STREAM, s["name"])
-                ]
-                self._respond_json(200, streams)
-            elif sub == "schema":
-                self._allow(Action.QUERY, name)  # reference GetSchema
-                self._respond_json(200, self.api.stream_schema(name))
-            elif sub == "stats":
-                self._allow(Action.QUERY, name)  # reference GetStats
-                self._respond_json(200, self.api.stream_stats(name))
-            elif sub == "retention":
-                self._allow(Action.MANAGE, name)  # GetRetention-analog
-                self._respond_json(200, self.api.get_retention(name))
-            elif sub == "hottier":
-                self._allow(Action.MANAGE, name)
-                self._respond_json(200, self.api.get_hot_tier(name))
-            elif sub == "info":
-                self._allow(Action.QUERY, name)  # reference GetStreamInfo
-                self._respond_json(200, self.api.stream_info(name))
-            else:
-                self._respond_json(404, {"error": f"no route {path}"})
-        except ApiError as e:
-            self._respond_json(e.status, {"error": str(e)})
+                        self._allow(action, stream)
+            out = row.handler(self, **params)
+            if not self._replied:
+                self._respond_json(200, out)
+        except (ApiError, TenantNotFound) as e:
+            self._respond_json(getattr(e, "status", 404), {"error": str(e)})
         except Exception as e:  # noqa: BLE001 — e.g. OIDC discovery URLError;
             # without this the socket closes with no status line at all
             self._respond_json(500, {"error": str(e).split(chr(10))[0]})
 
-    def do_PUT(self) -> None:  # noqa: N802
-        parsed_url = urlparse(self.path)
-        path = parsed_url.path
+    do_GET = do_PUT = do_PATCH = do_DELETE = do_POST = _dispatch  # noqa: N815
+
+    # -- handlers with more than one step (the rest are lambdas in _ROUTES) --
+    def _login(self) -> None:
+        target = self.qp.get("redirect") or "/"
+        if not self._valid_redirect(target):
+            raise ApiError(400, "Bad Request, Invalid Redirect URL!")
+        sid = self._session_cookie()
+        if sid and self.api.check_session(sid):
+            self._redirect(target)  # active session: straight back
+        elif self.api.oidc_client is not None:
+            self._redirect(
+                self.api.oidc_client.auth_url(
+                    state=self.api.mint_oidc_state(
+                        target, client=self._oidc_client_key()
+                    )
+                )
+            )
+        else:
+            self._redirect(target)  # no OIDC configured (dev mode)
+
+    def _code(self) -> None:
+        code = self.qp.get("code") or ""
+        if not code:
+            raise ApiError(400, "missing code")
+        # the state must redeem a nonce WE minted for this browser's
+        # login — an attacker-delivered code with a forged/absent state
+        # is rejected instead of silently logging the victim in as the
+        # attacker (r7 review)
+        target = self.api.consume_oidc_state(self.qp.get("state"))
+        if target is None:
+            raise ApiError(400, "invalid or expired login state")
+        if not self._valid_redirect(target):
+            target = "/"
+        sid, username = self.api.oidc_callback(code)
+        # cookie value URL-encoded: IdP display names are
+        # attacker-controlled — raw interpolation breaks on non-Latin-1
+        # (send_header encodes latin-1) and allows ";"/CRLF
+        # cookie-attribute injection
+        safe_user = _urlquote(username, safe="")
+        self._redirect(
+            target,
+            cookies=[
+                f"session={sid}; Path=/; HttpOnly",
+                f"username={safe_user}; Path=/",
+            ],
+        )
+
+    def _logout(self) -> None:
+        target = self.qp.get("redirect") or "/"
+        if not self._valid_redirect(target):
+            raise ApiError(400, "Bad Request, Invalid Redirect URL!")
+        sid = self._session_cookie()
+        user = self.api.drop_session(sid) if sid else None
+        # provider end-session only for OAuth principals
+        # (reference is_oauth check, handlers/http/oidc.rs:190-200)
+        end = (
+            self.api.oidc_client.logout_url()
+            if self.api.oidc_client is not None and self.api.is_oauth(user)
+            else None
+        )
+        self._redirect(end or target, cookies=["session=; Path=/; Max-Age=0"])
+
+    def _add_tenant(self, tid: str) -> dict[str, str]:
+        body = self._json_body() or {}
         try:
-            self._resolve_tenant()
-            if self._tenant_admin_route(path.strip("/").split("/")):
-                return
-            if not self._authorized():
-                return
-            parts = path.strip("/").split("/")
-            if path == "/api/v1/alert-target-policy":
-                from .rbac import Action
+            self.tenants.add_tenant(
+                tid,
+                TenantMeta.from_json(body),
+                # explicit opt-in to re-attach a deleted tenant's
+                # retained storage (see add_tenant)
+                adopt_existing=bool(body.get("adopt_existing")),
+            )
+        except ValueError as e:
+            raise ApiError(400, str(e)) from e
+        return {"status": f"created tenant {tid}"}
 
-                self._allow(Action.MANAGE)  # reference Action::All
-                self._respond_json(
-                    200, self.api.put_target_policy(self._json_body() or {})
-                )
-                return
-            if parts[:3] == ["api", "v1", "dashboards"] and len(parts) >= 4:
-                if len(parts) == 5 and parts[4] == "add_tile":
-                    self._respond_json(
-                        200,
-                        self.api.add_dashboard_tile(
-                            self.principal,
-                            parts[3],
-                            self._json_body() or {},
-                            is_admin=self._is_admin(),
-                        ),
-                    )
-                    return
-                params = {k: v[0] for k, v in parse_qs(parsed_url.query).items()}
-                self._respond_json(
-                    200,
-                    self.api.update_dashboard(
-                        self.principal,
-                        parts[3],
-                        self._json_body(),
-                        params,
-                        is_admin=self._is_admin(),
-                    ),
-                )
-                return
-            if parts[:3] == ["api", "v1", "role"] and len(parts) == 4:
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.put_role(parts[3], self._json_body())
-                self._respond_json(200, {"status": f"set role {parts[3]}"})
-                return
-            if parts[:3] == ["api", "v1", "alerts"] and len(parts) == 4:
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)  # PutAlert-analog
-                self._respond_json(
-                    200, self.api.modify_alert(parts[3], self._json_body() or {})
-                )
-                return
-            route = self._logstream_route(path)
-            if route is None or not route[0]:
-                self._respond_json(404, {"error": f"no route {path}"})
-                return
-            name, sub = route
-            if not sub:
-                from .rbac import Action
-
-                self._allow(Action.CREATE_STREAM, name)
-                static = (
-                    self.headers.get("x-p-static-schema-flag") or ""
-                ).lower() == "true"
-                limit_raw = (
-                    self.headers.get("x-p-time-partition-limit") or "30d"
-                ).rstrip("d")
-                try:
-                    limit_days = int(limit_raw)
-                    if limit_days <= 0:
-                        raise ValueError
-                except ValueError:
-                    raise ApiError(
-                        400, "x-p-time-partition-limit must be like '90d'"
-                    ) from None
-                zraw = self.headers.get("x-p-zorder") or ""
-                self.api.create_stream(
-                    name,
-                    body=self._json_body() if static else None,
-                    static_schema=static,
-                    custom_partition=self.headers.get("x-p-custom-partition"),
-                    time_partition=self.headers.get("x-p-time-partition"),
-                    time_partition_limit_days=limit_days,
-                    zorder_cols=[c.strip() for c in zraw.split(",") if c.strip()]
-                    or None,
-                )
-                self._respond_json(200, {"status": f"created log stream {name}"})
-            elif sub == "retention":
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                body = self._json_body()
-                if not isinstance(body, list):
-                    raise ApiError(400, "retention body must be a task list")
-                self.api.put_retention(name, body)
-                self._respond_json(
-                    200,
-                    {"status": f"set retention configuration for log stream {name}"},
-                )
-            elif sub == "hottier":
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.put_hot_tier(name, self._json_body() or {})
-                self._respond_json(
-                    200, {"status": f"hot tier set for log stream {name}"}
-                )
-            else:
-                self._respond_json(404, {"error": f"no route {path}"})
-        except ApiError as e:
-            self._respond_json(e.status, {"error": str(e)})
-        except Exception as e:  # noqa: BLE001 — last-resort 500
-            self._respond_json(500, {"error": str(e).split(chr(10))[0]})
-
-    def do_PATCH(self) -> None:  # noqa: N802
-        path = urlparse(self.path).path
+    def _tenant_service(self, tid: str, op: str) -> dict[str, str]:
+        service = self.qp.get("service", "")
+        mgr = self.tenants
         try:
-            self._resolve_tenant()
-            if not self._authorized():
-                return
-            parts = path.strip("/").split("/")
-            if (
-                parts[:3] == ["api", "v1", "alerts"]
-                and len(parts) == 5
-                and parts[4] in ("enable", "disable")
-            ):
-                from .rbac import Action
+            (mgr.suspend_service if op == "suspend" else mgr.resume_service)(
+                tid, service
+            )
+        except ValueError as e:
+            raise ApiError(400, str(e)) from e
+        return {"status": f"{op}d {service} for tenant {tid}"}
 
-                self._allow(Action.MANAGE)  # PutAlert-analog
-                self._respond_json(
-                    200,
-                    self.api.set_alert_enabled(parts[3], parts[4] == "enable"),
+    def _about(self) -> dict[str, Any]:
+        # payload shape per handlers/http/about.rs:48-119; authenticated
+        # scope like the reference — the payload leaks the storage
+        # filesystem path, deployment id, and hot-tier stream names
+        from . import __version__
+
+        hot = [
+            n
+            for n, s in self.api._stores.items()
+            if getattr(s, "hot_tier", None) is not None
+        ]
+        return {
+            "version": f"v{__version__}",
+            "engine": "parseable-spark",
+            "uiVersion": "development",
+            "commit": "",
+            "deploymentId": self.api.deployment_id,
+            "updateAvailable": False,
+            "latestVersion": None,
+            "llmActive": False,
+            "llmProvider": None,
+            "oidcActive": self.api.oidc_client is not None,
+            "license": {
+                "name": "AGPL-3.0-only",
+                "version": "v1",
+                "plan": "OSS",
+                "deploymentInfo": "Managed",
+            },
+            "mode": "querier" if self.api.ingestor_ports else "standalone",
+            "staging": self.api.root,
+            "hotTier": (
+                f"Enabled, Streams: {','.join(sorted(hot))}" if hot else "Disabled"
+            ),
+            "grpcPort": None,
+            "store": {"type": "localdrive", "path": self.api.root},
+            "streams": len(self.api._stores),
+        }
+
+    def _list_streams(self) -> list[dict[str, str]]:
+        # only the streams the principal may see (reference filters
+        # ListStream results by per-stream permission)
+        return [
+            s
+            for s in self.api.list_streams()
+            if self._can(Action.LIST_STREAM, s["name"])
+        ]
+
+    def _home_search(self) -> dict[str, Any]:
+        if not self.qp:
+            return {}
+        if "key" not in self.qp:
+            raise ApiError(400, "invalid query parameter, expected key")
+        return self.api.prism_home_search(self.principal, self.qp["key"])
+
+    def _object_body(self, default: Any = None) -> dict[str, Any]:
+        """The JSON body, which must be an object; an absent body is
+        ``default`` (a 400 when that is None)."""
+        body = self._json_body()
+        if default is not None:
+            body = body or default
+        if not isinstance(body, dict):
+            raise ApiError(400, "body must be a JSON object")
+        return body
+
+    def _list_dashboards(self) -> list[dict[str, Any]]:
+        limit = 0
+        if "limit" in self.qp:
+            try:
+                limit = int(self.qp["limit"])
+            except ValueError as e:
+                raise ApiError(400, "Invalid limit value") from e
+            if limit < 0:  # ds[:-n] would DROP dashboards
+                raise ApiError(400, "Invalid limit value")
+        tags = None
+        if "tags" in self.qp:
+            tags = [t.strip() for t in self.qp["tags"].split(",") if t.strip()]
+            if not tags:
+                raise ApiError(400, "Tags cannot be empty")
+        return self.api.list_dashboards(limit, tags)
+
+    def _metrics(self) -> None:
+        body = self.api.prometheus_metrics().encode()
+        self.send_response(200)
+        self.send_header("Content-Type", "text/plain; version=0.0.4; charset=utf-8")
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+    def _demodata(self) -> None:
+        # GET /api/v1/demodata?action=... (demo_data.rs:39-82): the
+        # extractor answered 400 on missing/unknown params; spawn-and-202
+        from .demo_data import run_demo_action
+
+        run_demo_action(self.api, self.qp["action"])
+        self._respond_json(202, {"status": "accepted"})
+
+    def _start_otel_generator(self) -> None:
+        """POST /api/v1/otel_generator {durationSecs}
+        (otel_generator.rs start_otel_generator): 400 out of range, 409
+        already running, 202 accepted."""
+        from .demo_data import MAX_DURATION_SECS
+
+        body = self._json_body() or {}
+        duration = body.get("durationSecs", body.get("duration_secs"))
+        if duration is not None:
+            duration = _int_arg(duration, "durationSecs", 0)
+            if duration < 1 or duration > MAX_DURATION_SECS:
+                raise ApiError(
+                    400, f"durationSecs must be between 1 and {MAX_DURATION_SECS}"
                 )
-                return
-            if (
-                parts[:3] == ["api", "v1", "alerts"]
-                and len(parts) == 5
-                and parts[4] == "update_notification_state"
-            ):
-                from .rbac import Action
+        api = self.api
+        result = self._otel_generator().start(
+            lambda kind, stream, payload: api.ingest_otel(kind, stream, payload, None),
+            f"http://{self.headers.get('Host', 'localhost')}",
+            duration,
+            self._tenant_key(),
+        )
+        if result["status"] == "started":
+            self._respond_json(202, {"status": "accepted", "message": result["message"]})
+        else:
+            self._respond_json(409, {"error": result["message"]})
 
-                self._allow(Action.MANAGE)  # PutAlert-analog
-                self._respond_json(
-                    200,
-                    self.api.update_notification_state(
-                        parts[3], self._json_body() or {}
-                    ),
-                )
-                return
-            if (
-                parts[:3] == ["api", "v1", "user"]
-                and len(parts) == 6
-                and parts[4] == "role"
-                and parts[5] in ("add", "remove")
-            ):
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                roles = self.api.modify_user_roles(
-                    parts[3], self._json_body(), add=parts[5] == "add"
-                )
-                self._respond_json(200, {"name": parts[3], "roles": roles})
-                return
-            self._respond_json(404, {"error": f"no route {path}"})
-        except ApiError as e:
-            self._respond_json(e.status, {"error": str(e)})
-        except Exception as e:  # noqa: BLE001 — last-resort 500
-            self._respond_json(500, {"error": str(e).split(chr(10))[0]})
-
-    def do_DELETE(self) -> None:  # noqa: N802
-        path = urlparse(self.path).path
+    def _get_target(self, tid: str) -> dict[str, Any]:
         try:
-            self._resolve_tenant()
-            if self._tenant_admin_route(path.strip("/").split("/")):
-                return
-            if not self._authorized():
-                return
-            parts = path.strip("/").split("/")
-            if parts[:3] == ["api", "v1", "cluster"] and len(parts) == 4:
-                from .rbac import Action
+            return self.api.targets.get(tid).mask()
+        except KeyError as e:
+            raise ApiError(404, str(e)) from e
 
-                self._allow(Action.MANAGE)  # reference Action::DeleteNode
-                self._respond_json(200, self.api.remove_cluster_node(parts[3]))
-                return
-            if parts[:4] == ["api", "prism", "v1", "apikeys"] and len(parts) == 5:
-                from .rbac import Action
+    def _delete_target(self, tid: str) -> dict[str, str]:
+        from .query.alert_targets import TargetInUseError
 
-                self._allow(Action.MANAGE)
-                self._respond_json(200, self.api.delete_api_key(parts[4]))
-                return
-            if parts[:3] == ["api", "v1", "dashboards"] and len(parts) == 4:
-                self.api.delete_dashboard(
-                    self.principal, parts[3], is_admin=self._is_admin()
-                )
-                self._respond_json(200, {"status": f"deleted dashboard {parts[3]}"})
-                return
-            if parts[:3] == ["api", "v1", "user"] and len(parts) == 4:
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.delete_user(parts[3])
-                self._respond_json(200, {"status": f"deleted user {parts[3]}"})
-                return
-            if parts[:3] == ["api", "v1", "role"] and len(parts) == 4:
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.delete_role(parts[3])
-                self._respond_json(200, {"status": f"deleted role {parts[3]}"})
-                return
-            if parts[:3] == ["api", "v1", "filters"] and len(parts) == 4:
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.delete_filter(parts[3])
-                self._respond_json(200, {"status": f"deleted filter {parts[3]}"})
-                return
-            if parts[:3] == ["api", "v1", "correlation"] and len(parts) == 4:
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.delete_correlation(parts[3])
-                self._respond_json(200, {"status": f"deleted correlation {parts[3]}"})
-                return
-            if parts[:3] == ["api", "v1", "targets"] and len(parts) == 4:
-                from .query.alert_targets import TargetInUseError
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                try:
-                    self.api.delete_target(parts[3])
-                except TargetInUseError as e:
-                    raise ApiError(409, f"target {e} is in use by an alert") from e
-                except KeyError as e:
-                    raise ApiError(404, str(e)) from e
-                self._respond_json(200, {"status": f"deleted target {parts[3]}"})
-                return
-            if parts[:3] == ["api", "v1", "alerts"] and len(parts) == 4:
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.delete_alert(parts[3])
-                self._respond_json(200, {"status": f"deleted alert {parts[3]}"})
-                return
-            if path == "/api/v1/otel_generator":
-                from .rbac import Action
-
-                self._allow(Action.INGEST)
-                self._respond_json(
-                    200, self._otel_generator().stop(self._tenant_key())
-                )
-                return
-            route = self._logstream_route(path)
-            if route is None or not route[0]:
-                self._respond_json(404, {"error": f"no route {path}"})
-                return
-            if route[1] == "hottier":
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self.api.delete_hot_tier(route[0])
-                self._respond_json(
-                    200, {"status": f"hot tier deleted for log stream {route[0]}"}
-                )
-                return
-            if route[1]:
-                self._respond_json(404, {"error": f"no route {path}"})
-                return
-            from .rbac import Action
-
-            self._allow(Action.DELETE_STREAM, route[0])
-            self.api.delete_stream(route[0])
-            self._respond_json(200, {"status": f"deleted log stream {route[0]}"})
-        except ApiError as e:
-            self._respond_json(e.status, {"error": str(e)})
-        except Exception as e:  # noqa: BLE001 — last-resort 500
-            self._respond_json(500, {"error": str(e).split(chr(10))[0]})
-
-    def do_POST(self) -> None:  # noqa: N802
-        parsed = urlparse(self.path)
         try:
-            self._resolve_tenant()
-            if self._tenant_admin_route(parsed.path.strip("/").split("/")):
-                return
-            # resource gate (resource_check.rs middleware): shed the
-            # data plane under overload; health/admin GETs stay up
-            mon = getattr(self.api, "resource_monitor", None)
-            if mon is not None and not mon.resource_ok:
-                self._respond_json(503, {"error": "Server resources over-utilized"})
-                return
-            if not self._authorized():
-                return
-            if parsed.path in ("/v1/logs", "/v1/metrics", "/v1/traces"):
-                kind = parsed.path.rsplit("/", 1)[1]
-                src = (self.headers.get(LOG_SOURCE_HEADER) or "").lower()
-                if src and src != f"otel-{kind}":
-                    raise ApiError(
-                        400, f"x-p-log-source {src!r} does not match /v1/{kind}"
-                    )
-                from .rbac import Action
+            self.api.delete_target(tid)
+        except TargetInUseError as e:
+            raise ApiError(409, f"target {e} is in use by an alert") from e
+        except KeyError as e:
+            raise ApiError(404, str(e)) from e
+        return {"status": f"deleted target {tid}"}
 
-                otel_stream = self.headers.get(STREAM_NAME_HEADER, "")
-                if otel_stream:
-                    self._allow(Action.INGEST, otel_stream)
-                # Content-Type dispatch (ingest_utils.rs:130-180). OSS
-                # rejects x-protobuf; we decode it (otlp_proto.py —
-                # deliberate beyond-OSS: protobuf is the OTLP default
-                # encoding). Missing header stays lenient-JSON for the
-                # pre-r5 clients of this server.
-                ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
-                if ctype == "application/x-protobuf":
-                    from .ingest.otlp_proto import ProtoDecodeError, decode_otlp
+    def _create_stream(self, name: str) -> dict[str, str]:
+        static = (self.headers.get("x-p-static-schema-flag") or "").lower() == "true"
+        limit_raw = (self.headers.get("x-p-time-partition-limit") or "30d").rstrip("d")
+        try:
+            limit_days = int(limit_raw)
+            if limit_days <= 0:
+                raise ValueError
+        except ValueError:
+            raise ApiError(400, "x-p-time-partition-limit must be like '90d'") from None
+        zraw = self.headers.get("x-p-zorder") or ""
+        self.api.create_stream(
+            name,
+            body=self._json_body() if static else None,
+            static_schema=static,
+            custom_partition=self.headers.get("x-p-custom-partition"),
+            time_partition=self.headers.get("x-p-time-partition"),
+            time_partition_limit_days=limit_days,
+            zorder_cols=[c.strip() for c in zraw.split(",") if c.strip()] or None,
+        )
+        return {"status": f"created log stream {name}"}
 
-                    raw = self._raw_body()
-                    try:
-                        payload = decode_otlp(kind, raw)
-                    except ProtoDecodeError as e:
-                        raise ApiError(400, f"malformed OTLP protobuf: {e}") from e
-                elif ctype in ("", "application/json"):
-                    payload = self._json_body()
-                else:
-                    raise ApiError(
-                        400,
-                        f"Unsupported Content-Type: {ctype}. Expected "
-                        "application/json or application/x-protobuf",
-                    )
-                n = self.api.ingest_otel(
-                    kind,
-                    otel_stream,
-                    payload,
-                    self._custom_fields(),
-                )
-                if ctype == "application/x-protobuf":
-                    # OTLP/HTTP success: an empty Export*ServiceResponse
-                    # (zero bytes IS the valid serialization — no
-                    # partial_success field set) with matching type
-                    self._drain_body()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "application/x-protobuf")
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
-                else:
-                    self._respond_json(200, {"status": "ok", "records": n})
-            elif parsed.path == "/api/v1/ingest":
-                self._handle_ingest()
-            elif parsed.path == "/api/v1/query":
-                self._handle_query(parse_qs(parsed.query))
-            elif parsed.path == "/api/v1/counts":
-                from .rbac import Action
+    def _put_retention(self, name: str) -> dict[str, str]:
+        body = self._json_body()
+        if not isinstance(body, list):
+            raise ApiError(400, "retention body must be a task list")
+        self.api.put_retention(name, body)
+        return {"status": f"set retention configuration for log stream {name}"}
 
-                body = self._json_body()
-                if not isinstance(body, dict):
-                    raise ApiError(400, "body must be a JSON object")
-                # counts reads stream data — gate with the Query grant,
-                # mirroring the reference's Action::Query on /counts
-                # (modal/server.rs:343-512)
-                self._allow(Action.QUERY, str(body.get("stream") or ""))
-                t0 = time.perf_counter()
-                out = self.api.counts(body)
-                self._respond_json(
-                    200, out, {TIME_ELAPSED_HEADER: f"{time.perf_counter() - t0:.3f}s"}
-                )
-            elif parsed.path == "/api/prism/v1/apikeys":
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self._respond_json(
-                    200,
-                    self.api.create_api_key(self.principal, self._json_body() or {}),
-                )
-            elif parsed.path == "/api/prism/v1/apikeys/validate":
-                body = self._json_body() or {}
-                self._respond_json(
-                    200, self.api.validate_api_key(str(body.get("apiKey") or ""))
-                )
-            elif parsed.path == "/api/v1/services/traces/list":
-                from .rbac import Action
-
-                body = self._json_body() or {}
-                self._allow(Action.QUERY, str(body.get("dataset") or ""))
-                self._respond_json(200, self.api.traces_list(body))
-            elif parsed.path == "/api/v1/services/traces/detail":
-                from .rbac import Action
-
-                body = self._json_body() or {}
-                self._allow(Action.QUERY, str(body.get("dataset") or ""))
-                self._respond_json(200, self.api.trace_detail_api(body))
-            elif parsed.path == "/api/v1/query/context":
-                from .rbac import Action
-
-                body = self._json_body() or {}
-                self._allow(Action.QUERY, str(body.get("dataset") or ""))
-                self._respond_json(200, self.api.query_context(body))
-            elif parsed.path == "/api/prism/v1/dataset_stats":
-                from .rbac import Action
-
-                body = self._json_body() or {}
-                if not isinstance(body, dict):
-                    raise ApiError(400, "body must be a JSON object")
-                self._allow(Action.QUERY, str(body.get("dataset_name") or ""))
-                self._respond_json(200, self.api.dataset_stats(body))
-            elif parsed.path == "/api/prism/v1/datasets":
-                body = self._json_body() or {}
-                if not isinstance(body, dict):
-                    raise ApiError(400, "body must be a JSON object")
-                self._respond_json(
-                    200,
-                    self.api.prism_datasets(
-                        self.principal, list(body.get("streams") or [])
-                    ),
-                )
-            elif parsed.path == "/api/v1/dashboards":
-                body = self._json_body()
-                if not isinstance(body, dict):
-                    raise ApiError(400, "body must be a JSON object")
-                self._respond_json(
-                    200, self.api.create_dashboard(self.principal, body)
-                )
-            elif parsed.path == "/api/v1/logstream/schema/detect":
-                self._respond_json(200, self.api.detect_schema(self._json_body()))
-            elif parsed.path.startswith("/api/v1/user/"):
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                uparts = parsed.path.strip("/").split("/")
-                if len(uparts) == 5 and uparts[4] == "generate-new-password":
-                    self._respond_json(
-                        200, self.api.generate_new_password(uparts[3])
-                    )
-                else:
-                    name = parsed.path.rsplit("/", 1)[1]
-                    self._respond_json(
-                        200, self.api.create_user(name, self._json_body() or {})
-                    )
-            elif parsed.path == "/api/v1/filters":
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self._respond_json(200, self.api.save_filter(self._json_body() or {}))
-            elif parsed.path == "/api/v1/correlation":
-                from .rbac import Action
-
-                body = self._json_body() or {}
-                # saving a correlation pre-authorizes running it — require
-                # the Query grant on both referenced streams up front
-                for tc in body.get("tableConfigs") or []:
-                    self._allow(Action.QUERY, str(tc.get("tableName") or ""))
-                self._respond_json(200, self.api.save_correlation(body))
-            elif (
-                parsed.path.startswith("/api/v1/correlation/")
-                and parsed.path.endswith("/run")
-            ):
-                from .rbac import Action
-
-                cid = parsed.path.split("/")[4]
-                # running returns raw rows from both streams — Query grant
-                # on each (reference runs correlations through its query
-                # path with per-dataset auth, correlation.rs:300-360)
-                for tc in self.api.get_correlation(cid).get("tableConfigs") or []:
-                    self._allow(Action.QUERY, str(tc.get("tableName") or ""))
-                params = parse_qs(parsed.query)
-                rows = self.api.run_correlation(
-                    cid,
-                    (params.get("startTime") or [""])[0],
-                    (params.get("endTime") or [""])[0],
-                )
-                self._respond_json(200, rows)
-            elif parsed.path == "/api/v1/targets":
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                self._respond_json(200, self.api.create_target(self._json_body() or {}))
-            elif parsed.path == "/api/v1/alerts":
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)  # PutAlert-analog (server.rs:343-512)
-                self._respond_json(200, self.api.create_alert(self._json_body() or {}))
-            elif (
-                parsed.path.startswith("/api/v1/alerts/")
-                and parsed.path.endswith("/evaluate")
-            ):
-                from .rbac import Action
-
-                self._allow(Action.MANAGE)
-                alert_id = parsed.path.split("/")[4]
-                self._respond_json(200, self.api.evaluate_alert(alert_id))
-            elif parsed.path == "/api/v1/otel_generator":
-                # POST /api/v1/otel_generator {durationSecs}
-                # (otel_generator.rs start_otel_generator): 400 out of
-                # range, 409 already running, 202 accepted
-                from .demo_data import MAX_DURATION_SECS
-                from .rbac import Action
-
-                self._allow(Action.INGEST)
-                body = self._json_body() or {}
-                duration = body.get("durationSecs", body.get("duration_secs"))
-                if duration is not None:
-                    duration = _int_arg(duration, "durationSecs", 0)
-                    if duration < 1 or duration > MAX_DURATION_SECS:
-                        raise ApiError(
-                            400,
-                            "durationSecs must be between 1 and "
-                            f"{MAX_DURATION_SECS}",
-                        )
-                api = self.api
-                result = self._otel_generator().start(
-                    lambda kind, stream, payload: api.ingest_otel(
-                        kind, stream, payload, None
-                    ),
-                    f"http://{self.headers.get('Host', 'localhost')}",
-                    duration,
-                    self._tenant_key(),
-                )
-                if result["status"] == "started":
-                    self._respond_json(
-                        202,
-                        {"status": "accepted", "message": result["message"]},
-                    )
-                else:
-                    self._respond_json(409, {"error": result["message"]})
-            else:
-                self._respond_json(404, {"error": f"no route {parsed.path}"})
-        except ApiError as e:
-            self._respond_json(e.status, {"error": str(e)})
-        except Exception as e:  # noqa: BLE001 — last-resort 500
-            self._respond_json(500, {"error": str(e).split(chr(10))[0]})
+    def _run_correlation(self, cid: str) -> list[dict[str, Any]]:
+        return self.api.run_correlation(
+            cid, self.qp.get("startTime", ""), self.qp.get("endTime", "")
+        )
 
     def _custom_fields(self) -> dict[str, str]:
         custom: dict[str, str] = {
@@ -4571,19 +3891,9 @@ class _Handler(BaseHTTPRequestHandler):
                     extracted += 1
         return custom
 
-    def _handle_ingest(self) -> None:
-        from .rbac import Action
-
-        stream = self.headers.get(STREAM_NAME_HEADER, "")
-        log_source = (self.headers.get(LOG_SOURCE_HEADER) or "").lower()
-        if log_source in OTEL_LOG_SOURCES:
-            raise ApiError(
-                400, "OTEL log sources are not supported on /api/v1/ingest"
-            )
-        if stream:
-            self._allow(Action.INGEST, stream)
+    def _ingest(self) -> dict[str, Any]:
         body = self._json_body()
-        if log_source == "kinesis":
+        if (self.headers.get(LOG_SOURCE_HEADER) or "").lower() == "kinesis":
             # Firehose envelope → per-record events (reference dispatch
             # ingest_utils.rs:209-225; r6 review — the decoder existed
             # but nothing routed to it, so deliveries ingested as one
@@ -4594,47 +3904,388 @@ class _Handler(BaseHTTPRequestHandler):
                 body = flatten_kinesis_logs(body)
             except KinesisError as e:
                 raise ApiError(400, str(e)) from e
+        stream = self.headers.get(STREAM_NAME_HEADER, "")
         n = self.api.ingest(stream, body, self._custom_fields())
-        self._respond_json(200, {"status": "ok", "records": n})
+        return {"status": "ok", "records": n}
 
-    def _handle_query(self, params: dict[str, list[str]]) -> None:
-        from .rbac import Action
+    def _ingest_otel(self, kind: str) -> dict[str, Any] | None:
+        # Content-Type dispatch (ingest_utils.rs:130-180). OSS rejects
+        # x-protobuf; we decode it (otlp_proto.py — deliberate
+        # beyond-OSS: protobuf is the OTLP default encoding). Missing
+        # header stays lenient-JSON for the pre-r5 clients of this server.
+        ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
+        if ctype == "application/x-protobuf":
+            from .ingest.otlp_proto import ProtoDecodeError, decode_otlp
 
-        payload = self._json_body()
-        if not isinstance(payload, dict):
-            raise ApiError(400, "body must be a JSON object")
-        # parser-derived table set: matches exactly what Spark resolves,
-        # closing the regex bypasses (FROM`s2`, FROM/**/s2, comma joins)
-        # case-insensitive: Spark resolves views case-insensitively, so
-        # FROM APP must hit the grant check for stream "app" too. The
-        # request context keeps the parse: views and fan-out reuse it.
-        ctx = RequestContext(str(payload.get("query") or "").strip())
-        canon = {k.lower(): k for k in self.api._stores}
-        canon.update(
-            {k.lower(): k for k in self.api.engine._streams if k.lower() not in canon}
+            try:
+                payload = decode_otlp(kind, self._raw_body())
+            except ProtoDecodeError as e:
+                raise ApiError(400, f"malformed OTLP protobuf: {e}") from e
+        elif ctype in ("", "application/json"):
+            payload = self._json_body()
+        else:
+            raise ApiError(
+                400,
+                f"Unsupported Content-Type: {ctype}. Expected "
+                "application/json or application/x-protobuf",
+            )
+        n = self.api.ingest_otel(
+            kind,
+            self.headers.get(STREAM_NAME_HEADER, ""),
+            payload,
+            self._custom_fields(),
         )
-        for t in ctx.table_names(self.api.spark):
-            # fail closed: anything resolvable in the engine needs a
-            # QUERY grant, whether or not a live store backs it — a
-            # stale view must never be a grant bypass (review finding)
-            if t.lower() in canon:
-                self._allow(Action.QUERY, canon[t.lower()])
+        if ctype != "application/x-protobuf":
+            return {"status": "ok", "records": n}
+        # OTLP/HTTP success: an empty Export*ServiceResponse (zero bytes
+        # IS the valid serialization — no partial_success field set)
+        # with matching type
+        self._drain_body()
+        self.send_response(200)
+        self.send_header("Content-Type", "application/x-protobuf")
+        self.send_header("Content-Length", "0")
+        self.end_headers()
+        return None
+
+    def _counts(self) -> None:
+        t0 = time.perf_counter()
+        out = self.api.counts(self._json_body())
+        self._respond_json(
+            200, out, {TIME_ELAPSED_HEADER: f"{time.perf_counter() - t0:.3f}s"}
+        )
+
+    def _query(self) -> None:
+        # the extractor (_query_streams) parsed and gated the body
+        payload = self._json_body()
         # query params override/augment body flags (query.rs:591-619)
         for flag in ("fields", "sendNull", "streaming"):
-            if flag in params and not payload.get(flag):
-                payload[flag] = params[flag][0].lower() == "true"
+            if flag in self.qp and not payload.get(flag):
+                payload[flag] = self.qp[flag].lower() == "true"
         t0 = time.perf_counter()
         if payload.get("streaming"):
-            lines = self.api.query_ndjson(payload, ctx)
+            lines = self.api.query_ndjson(payload, self.query_ctx)
             self._respond_chunked(
                 lines, {TIME_ELAPSED_HEADER: f"{time.perf_counter() - t0:.3f}s"}
             )
         else:
-            out = self.api.query(payload, ctx)
+            out = self.api.query(payload, self.query_ctx)
             self._respond_json(
                 200, out, {TIME_ELAPSED_HEADER: f"{time.perf_counter() - t0:.3f}s"}
             )
         self.api.record_query(time.perf_counter() - t0)
+
+
+# -- resource extractors: the streams a route's action is checked on ------
+def _path_stream(h, name: str) -> tuple[str, ...]:
+    return (name,)
+
+
+def _header_stream(h) -> tuple[str, ...]:
+    stream = h.headers.get(STREAM_NAME_HEADER, "")
+    return (stream,) if stream else ()
+
+
+def _ingest_streams(h) -> tuple[str, ...]:
+    if (h.headers.get(LOG_SOURCE_HEADER) or "").lower() in OTEL_LOG_SOURCES:
+        raise ApiError(400, "OTEL log sources are not supported on /api/v1/ingest")
+    return _header_stream(h)
+
+
+def _otel_streams(h, kind: str) -> tuple[str, ...]:
+    src = (h.headers.get(LOG_SOURCE_HEADER) or "").lower()
+    if src and src != f"otel-{kind}":
+        raise ApiError(400, f"x-p-log-source {src!r} does not match /v1/{kind}")
+    return _header_stream(h)
+
+
+def _body_stream(key: str, empty_ok: bool = True) -> Callable[..., tuple[str, ...]]:
+    """The stream named by the JSON object body's ``key``. A body that
+    is not an object is a 400; so is an absent one unless empty_ok."""
+
+    def streams(h) -> tuple[str, ...]:
+        body = h._object_body({} if empty_ok else None)
+        return (str(body.get(key) or ""),)
+
+    return streams
+
+
+def _query_streams(h) -> list[str]:
+    """Every stream the query's SQL reads, from the parser-derived table
+    set: it matches exactly what Spark resolves, closing the regex
+    bypasses (FROM`s2`, FROM/**/s2, comma joins). Case-insensitive:
+    Spark resolves views case-insensitively, so FROM APP must hit the
+    grant check for stream "app" too. The request context keeps the
+    parse for the handler: views and fan-out reuse it."""
+    payload = h._object_body()
+    h.query_ctx = RequestContext(str(payload.get("query") or "").strip())
+    canon = {k.lower(): k for k in h.api._stores}
+    canon.update(
+        {k.lower(): k for k in h.api.engine._streams if k.lower() not in canon}
+    )
+    # fail closed: anything resolvable in the engine needs a QUERY
+    # grant, whether or not a live store backs it — a stale view must
+    # never be a grant bypass
+    return [
+        canon[t.lower()]
+        for t in h.query_ctx.table_names(h.api.spark)
+        if t.lower() in canon
+    ]
+
+
+def _table_names(correlation: dict[str, Any]) -> list[str]:
+    return [str(tc.get("tableName") or "") for tc in correlation.get("tableConfigs") or []]
+
+
+def _livetail_stream(h) -> tuple[str, ...]:
+    stream = h.qp.get("stream") or ""
+    if not stream:
+        raise ApiError(400, "missing stream query param")
+    return (stream,)
+
+
+def _demodata_gate(h) -> list[Any]:
+    """Per-artifact RBAC: ``action=ingest`` needs INGEST on the demo
+    stream; the other actions create MANAGE-gated objects (targets,
+    alerts, filters, dashboards), exactly like their dedicated routes,
+    so an ingest-only principal cannot mint webhook targets through the
+    demo door."""
+    from .demo_data import DEMO_STREAM
+
+    if not h.qp:
+        raise ApiError(400, "missing query parameter")
+    action = h.qp.get("action")
+    if action is None:
+        raise ApiError(400, "missing query parameter 'action'")
+    if action not in ("ingest", "filters", "alerts", "dashboards"):
+        raise ApiError(400, f"invalid demodata action {action!r}")
+    return [(Action.INGEST, DEMO_STREAM)] if action == "ingest" else ["*"]
+
+
+def _status(template: str, act: Callable[..., Any]) -> Callable[..., dict[str, str]]:
+    """A handler that runs ``act(h, **params)``, then replies
+    ``{"status": template.format(**params)}``."""
+
+    def handler(h, **params) -> dict[str, str]:
+        act(h, **params)
+        return {"status": template.format(**params)}
+
+    return handler
+
+
+M, Q = Action.MANAGE, Action.QUERY
+
+# Every HTTP route, its access rule and the streams that rule is checked
+# on (reference: each route registers its Action, and the auth
+# middleware checks it — middleware.rs). The first row that matches
+# wins, so a literal segment is listed before a {param} in its place.
+_ROUTES: tuple[Route, ...] = (
+    # -- public: health, the OIDC login flow, SSE (its own session check)
+    Route("GET", "/api/v1/liveness", PUBLIC, lambda h: {"status": "ok"}),
+    Route("GET", "/api/v1/readiness", PUBLIC, lambda h: {"status": "ok"}),
+    Route("GET", "/api/v1/o/login", PUBLIC, _Handler._login),
+    Route("GET", "/api/v1/o/code", PUBLIC, _Handler._code),
+    Route("GET", "/api/v1/o/logout", PUBLIC, _Handler._logout),
+    Route("GET", "/api/v1/sse", PUBLIC, _Handler._serve_sse),
+    # -- tenant lifecycle: the server administrator only
+    Route("GET", "/api/v1/tenants", SUPERADMIN, lambda h: h.tenants.list_tenants()),
+    Route("PUT", "/api/v1/tenants/{tid}", SUPERADMIN, _Handler._add_tenant),
+    Route("POST", "/api/v1/tenants/{tid}", SUPERADMIN, _status(
+        "updated tenant {tid}",
+        lambda h, tid: h.tenants.update_meta(tid, h._json_body() or {}))),
+    Route("DELETE", "/api/v1/tenants/{tid}", SUPERADMIN, _status(
+        "deleted tenant {tid}", lambda h, tid: h.tenants.delete_tenant(tid))),
+    *(
+        Route("PUT", f"/api/v1/tenants/{{tid}}/{op}", SUPERADMIN,
+              partial(_Handler._tenant_service, op=op))
+        for op in ("suspend", "resume")
+    ),
+    # -- any principal: the handler filters by it
+    Route("GET", "/api/v1/about", AUTHENTICATED, _Handler._about),
+    Route("GET", "/api/v1/logstream", AUTHENTICATED, _Handler._list_streams),
+    Route("POST", "/api/v1/logstream/schema/detect", AUTHENTICATED,
+          lambda h: h.api.detect_schema(h._json_body())),
+    Route("GET", "/api/prism/v1/home", AUTHENTICATED, lambda h: h.api.prism_home(
+        h.principal, include_internal=h.qp.get("includeInternal") == "true")),
+    Route("GET", "/api/prism/v1/home/search", AUTHENTICATED, _Handler._home_search),
+    Route("POST", "/api/prism/v1/datasets", AUTHENTICATED, lambda h: h.api.prism_datasets(
+        h.principal, list(h._object_body({}).get("streams") or []))),
+    Route("POST", "/api/prism/v1/apikeys/validate", AUTHENTICATED,
+          lambda h: h.api.validate_api_key(str((h._json_body() or {}).get("apiKey") or ""))),
+    Route("GET", "/api/v1/dashboards", AUTHENTICATED, _Handler._list_dashboards),
+    Route("POST", "/api/v1/dashboards", AUTHENTICATED,
+          lambda h: h.api.create_dashboard(h.principal, h._object_body())),
+    Route("GET", "/api/v1/dashboards/list_tags", AUTHENTICATED,
+          lambda h: h.api.list_dashboard_tags()),
+    Route("GET", "/api/v1/dashboards/{did}", AUTHENTICATED,
+          lambda h, did: h.api.get_dashboard(did)),
+    Route("PUT", "/api/v1/dashboards/{did}", AUTHENTICATED, lambda h, did: h.api.update_dashboard(
+        h.principal, did, h._json_body(), h.qp, is_admin=h._is_admin())),
+    Route("PUT", "/api/v1/dashboards/{did}/add_tile", AUTHENTICATED,
+          lambda h, did: h.api.add_dashboard_tile(
+              h.principal, did, h._json_body() or {}, is_admin=h._is_admin())),
+    Route("DELETE", "/api/v1/dashboards/{did}", AUTHENTICATED, _status(
+        "deleted dashboard {did}",
+        lambda h, did: h.api.delete_dashboard(h.principal, did, is_admin=h._is_admin()))),
+    # -- stream data: the action on each stream the request names
+    Route("POST", "/api/v1/ingest", Action.INGEST, _Handler._ingest, _ingest_streams,
+          ingest=True),
+    *(
+        Route("POST", f"/v1/{kind}", Action.INGEST, partial(_Handler._ingest_otel, kind=kind),
+              partial(_otel_streams, kind=kind), ingest=True)
+        for kind in ("logs", "metrics", "traces")
+    ),
+    Route("POST", "/api/v1/query", Q, _Handler._query, _query_streams),
+    # counts reads stream data: the reference's Action::Query on /counts
+    # (modal/server.rs:343-512)
+    Route("POST", "/api/v1/counts", Q, _Handler._counts,
+          _body_stream("stream", empty_ok=False)),
+    Route("POST", "/api/v1/services/traces/list", Q,
+          lambda h: h.api.traces_list(h._object_body({})), _body_stream("dataset")),
+    Route("POST", "/api/v1/services/traces/detail", Q,
+          lambda h: h.api.trace_detail_api(h._object_body({})), _body_stream("dataset")),
+    Route("POST", "/api/v1/query/context", Q,
+          lambda h: h.api.query_context(h._object_body({})), _body_stream("dataset")),
+    Route("POST", "/api/prism/v1/dataset_stats", Q,
+          lambda h: h.api.dataset_stats(h._object_body({})), _body_stream("dataset_name")),
+    Route("GET", "/api/v1/livetail", Q, _Handler._serve_livetail, _livetail_stream),
+    Route("GET", "/api/prism/v1/logstream/{name}/info", Q,
+          lambda h, name: h.api.prism_logstream_info(name), _path_stream),
+    Route("PUT", "/api/v1/logstream/{name}", Action.CREATE_STREAM, _Handler._create_stream,
+          _path_stream),
+    Route("DELETE", "/api/v1/logstream/{name}", Action.DELETE_STREAM, _status(
+        "deleted log stream {name}", lambda h, name: h.api.delete_stream(name)),
+          _path_stream),
+    Route("GET", "/api/v1/logstream/{name}/schema", Q,  # reference GetSchema
+          lambda h, name: h.api.stream_schema(name), _path_stream),
+    Route("GET", "/api/v1/logstream/{name}/stats", Q,  # reference GetStats
+          lambda h, name: h.api.stream_stats(name), _path_stream),
+    Route("GET", "/api/v1/logstream/{name}/info", Q,  # reference GetStreamInfo
+          lambda h, name: h.api.stream_info(name), _path_stream),
+    Route("GET", "/api/v1/logstream/{name}/retention", M,  # GetRetention-analog
+          lambda h, name: h.api.get_retention(name), _path_stream),
+    Route("GET", "/api/v1/logstream/{name}/hottier", M,
+          lambda h, name: h.api.get_hot_tier(name), _path_stream),
+    # setting retention or a hot tier gates MANAGE on "*", reading on the stream
+    Route("PUT", "/api/v1/logstream/{name}/retention", M, _Handler._put_retention),
+    Route("PUT", "/api/v1/logstream/{name}/hottier", M, _status(
+        "hot tier set for log stream {name}",
+        lambda h, name: h.api.put_hot_tier(name, h._json_body() or {}))),
+    Route("DELETE", "/api/v1/logstream/{name}/hottier", M, _status(
+        "hot tier deleted for log stream {name}",
+        lambda h, name: h.api.delete_hot_tier(name))),
+    # saving a correlation pre-authorizes running it, and running returns
+    # raw rows from both streams (correlation.rs:300-360): QUERY on each
+    Route("POST", "/api/v1/correlation", Q,
+          lambda h: h.api.save_correlation(h._json_body() or {}),
+          lambda h: _table_names(h._json_body() or {})),
+    Route("POST", "/api/v1/correlation/{cid}/run", Q, _Handler._run_correlation,
+          lambda h, cid: _table_names(h.api.get_correlation(cid))),
+    Route("GET", "/api/v1/demodata", M, _Handler._demodata, _demodata_gate),
+    Route("GET", "/api/v1/otel_generator", Action.INGEST,
+          lambda h: h._otel_generator().status(h._tenant_key())),
+    Route("POST", "/api/v1/otel_generator", Action.INGEST, _Handler._start_otel_generator),
+    Route("DELETE", "/api/v1/otel_generator", Action.INGEST,
+          lambda h: h._otel_generator().stop(h._tenant_key())),
+    # -- administration: MANAGE on "*". The read routes are gated like
+    # the writes: a zero-grant user must not enumerate alert
+    # definitions, notification endpoints, saved filters or correlations
+    Route("GET", "/api/v1/metrics", M, _Handler._metrics),  # reference Action::Metrics
+    Route("GET", "/api/v1/alert-target-policy", M,  # reference Action::All
+          lambda h: h.api.get_target_policy()),
+    Route("PUT", "/api/v1/alert-target-policy", M,
+          lambda h: h.api.put_target_policy(h._json_body() or {})),
+    Route("GET", "/api/v1/cluster/info", M, lambda h: h.api.cluster_info()),
+    Route("GET", "/api/v1/cluster/metrics", M, lambda h: h.api.cluster_metrics()),
+    Route("DELETE", "/api/v1/cluster/{domain}", M,  # reference Action::DeleteNode
+          lambda h, domain: h.api.remove_cluster_node(domain)),
+    Route("GET", "/api/prism/v1/apikeys", M, lambda h: h.api.list_api_keys()),
+    Route("POST", "/api/prism/v1/apikeys", M,
+          lambda h: h.api.create_api_key(h.principal, h._json_body() or {})),
+    Route("GET", "/api/prism/v1/apikeys/{kid}", M, lambda h, kid: h.api.get_api_key(kid)),
+    Route("DELETE", "/api/prism/v1/apikeys/{kid}", M,
+          lambda h, kid: h.api.delete_api_key(kid)),
+    Route("GET", "/api/v1/user", M, lambda h: h.api.list_users()),
+    Route("POST", "/api/v1/user/{name}", M,
+          lambda h, name: h.api.create_user(name, h._json_body() or {})),
+    Route("DELETE", "/api/v1/user/{name}", M,
+          _status("deleted user {name}", lambda h, name: h.api.delete_user(name))),
+    Route("POST", "/api/v1/user/{name}/generate-new-password", M,
+          lambda h, name: h.api.generate_new_password(name)),
+    Route("GET", "/api/v1/user/{name}/role", M, lambda h, name: h.api.get_user_roles(name)),
+    *(
+        Route("PATCH", f"/api/v1/user/{{name}}/role/{op}", M, lambda h, name, add=op == "add": {
+            "name": name, "roles": h.api.modify_user_roles(name, h._json_body(), add=add)})
+        for op in ("add", "remove")
+    ),
+    Route("GET", "/api/v1/users", M, lambda h: h.api.prism_users(None)),
+    Route("GET", "/api/v1/users/{userid}", M, lambda h, userid: h.api.prism_users(userid)),
+    Route("GET", "/api/v1/role", M, lambda h: h.api.rbac.list_roles()),
+    Route("GET", "/api/v1/roles", M, lambda h: h.api.rbac.list_roles()),
+    Route("GET", "/api/v1/role/{name}", M, lambda h, name: h.api.get_role(name)),
+    Route("GET", "/api/v1/roles/{name}", M, lambda h, name: h.api.get_role(name)),
+    Route("PUT", "/api/v1/role/{name}", M,
+          _status("set role {name}", lambda h, name: h.api.put_role(name, h._json_body()))),
+    Route("DELETE", "/api/v1/role/{name}", M,
+          _status("deleted role {name}", lambda h, name: h.api.delete_role(name))),
+    Route("GET", "/api/v1/filters", M, lambda h: h.api.list_filters()),
+    Route("POST", "/api/v1/filters", M, lambda h: h.api.save_filter(h._json_body() or {})),
+    Route("GET", "/api/v1/filters/{fid}", M, lambda h, fid: h.api.get_filter(fid)),
+    Route("DELETE", "/api/v1/filters/{fid}", M,
+          _status("deleted filter {fid}", lambda h, fid: h.api.delete_filter(fid))),
+    Route("GET", "/api/v1/correlation", M, lambda h: h.api.list_correlations()),
+    Route("GET", "/api/v1/correlation/{cid}", M, lambda h, cid: h.api.get_correlation(cid)),
+    Route("DELETE", "/api/v1/correlation/{cid}", M, _status(
+        "deleted correlation {cid}", lambda h, cid: h.api.delete_correlation(cid))),
+    Route("GET", "/api/v1/targets", M, lambda h: h.api.targets.list()),
+    Route("POST", "/api/v1/targets", M, lambda h: h.api.create_target(h._json_body() or {})),
+    Route("GET", "/api/v1/targets/{tid}", M, _Handler._get_target),
+    Route("DELETE", "/api/v1/targets/{tid}", M, _Handler._delete_target),
+    # PutAlert-analog (server.rs:343-512)
+    Route("GET", "/api/v1/alerts", M, lambda h: h.api.list_alerts()),
+    Route("POST", "/api/v1/alerts", M, lambda h: h.api.create_alert(h._json_body() or {})),
+    Route("GET", "/api/v1/alerts/{aid}", M, lambda h, aid: h.api.alert_json(aid)),
+    Route("PUT", "/api/v1/alerts/{aid}", M,
+          lambda h, aid: h.api.modify_alert(aid, h._json_body() or {})),
+    Route("DELETE", "/api/v1/alerts/{aid}", M,
+          _status("deleted alert {aid}", lambda h, aid: h.api.delete_alert(aid))),
+    Route("POST", "/api/v1/alerts/{aid}/evaluate", M, lambda h, aid: h.api.evaluate_alert(aid)),
+    Route("PATCH", "/api/v1/alerts/{aid}/enable", M,
+          lambda h, aid: h.api.set_alert_enabled(aid, True)),
+    Route("PATCH", "/api/v1/alerts/{aid}/disable", M,
+          lambda h, aid: h.api.set_alert_enabled(aid, False)),
+    Route("PATCH", "/api/v1/alerts/{aid}/update_notification_state", M,
+          lambda h, aid: h.api.update_notification_state(aid, h._json_body() or {})),
+)
+del M, Q
+
+
+def _segments(path: str) -> list[str]:
+    return path.strip("/").split("/")
+
+
+_ROUTES_BY_METHOD: dict[str, list[tuple[list[str], Route]]] = {}
+for _row in _ROUTES:
+    _ROUTES_BY_METHOD.setdefault(_row.method, []).append((_segments(_row.pattern), _row))
+
+
+def _match_route(method: str, path: str) -> tuple[Route | None, dict[str, str]]:
+    """The first row of ``method`` whose pattern matches ``path`` (a
+    trailing slash ignored), with its ``{param}`` values."""
+    parts = _segments(path)
+    for segs, row in _ROUTES_BY_METHOD.get(method, ()):
+        if len(segs) != len(parts):
+            continue
+        params = {}
+        for seg, part in zip(segs, parts):
+            if seg.startswith("{"):
+                if not part:
+                    break
+                params[seg[1:-1]] = part
+            elif seg != part:
+                break
+        else:
+            return row, params
+    return None, {}
 
 
 def build_ssl_context(

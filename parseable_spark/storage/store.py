@@ -394,8 +394,16 @@ class StreamStore:
             df = sdf if df is None else df.unionByName(sdf)
         if df is None:
             return to_dataframe(self.spark, self.stream.registry, [])
-        # the bounds as TIMESTAMP_NTZ literals from their text: a Python
-        # datetime literal passes through the host's local zone
+        return self.window_filter(df, start, end)
+
+    def window_filter(
+        self, df: DataFrame, start: datetime | None, end: datetime | None
+    ) -> DataFrame:
+        """``df``'s rows whose time column lies in [start, end); either
+        bound may be None. The bounds are TIMESTAMP_NTZ literals from
+        their UTC text: a Python datetime literal passes through the
+        host's local zone."""
+        lo, hi = [d and _utc_naive(d).strftime(ISO_MICRO_FMT) for d in (start, end)]
         if lo is not None:
             df = df.filter(F.col(self.time_col) >= F.lit(lo).cast("timestamp_ntz"))
         if hi is not None:

@@ -631,12 +631,6 @@ class StreamingDedupIndex(BatchPartitionedIndex):
             shingle_n=self.shingle_n,
         )
 
-    def _prior_index(self, batch_id: int) -> DataFrame | None:
-        """The full pre-state visible to ``batch_id`` — a replay reads
-        the same pre-state even when its own partition was already
-        written (it is excluded by the cutoff)."""
-        return self._visible_index(self._prior_cutoff(batch_id))
-
     def _touched_bytes(self, parts: list[int], pts: list[int]) -> int:
         """On-disk bytes of the (batch, band_pt) partition dirs a
         pruned probe would touch — drives the adaptive chunking gate.

@@ -22,19 +22,6 @@ from pyspark.sql import functions as F
 
 from .session import configure
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # NTZ epoch arithmetic: avoids session-timezone dependence entirely.
 _NS_TO_NTZ = (
     "timestampadd(MICROSECOND, (ts div 1000) % 1000000, "
@@ -179,13 +166,3 @@ def fan_out(df: DataFrame, key: str, max_bytes: int = 512 * 1024 * 1024) -> Data
         )
         return df
     return df.repartition(target, F.col(key))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

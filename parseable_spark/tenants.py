@@ -329,9 +329,6 @@ class TenantManager:
             raise TenantNotFound(tenant_id)
         return api
 
-    def has_tenant(self, tenant_id: str) -> bool:
-        return tenant_id in self._apis
-
     def list_tenants(self) -> list[dict[str, Any]]:
         with self._lock:
             return [

@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
+import os
 import shutil
 import sys
+import time
 from collections import namedtuple
 from pathlib import Path
 from types import SimpleNamespace
@@ -48,6 +51,31 @@ def fake_volume(monkeypatch):
         shutil, "disk_usage", lambda path: _DiskUsage(vol.total, vol.used, vol.free)
     )
     return vol
+
+
+@contextlib.contextmanager
+def _host_zone(tz: str):
+    """The Python process's local zone (what PySpark's Row datetimes and
+    datetime literals follow); the JVM and the session's UTC are
+    untouched."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+@pytest.fixture
+def host_zone():
+    """``with host_zone("America/New_York"): ...`` runs the block with
+    the Python process in that local zone."""
+    return _host_zone
 
 
 # Slow-tier marking: tests/slow_tests.txt lists the node IDs measured >= 10 s

@@ -24,7 +24,6 @@ import glob
 import json
 import math
 import os
-import time
 import urllib.error
 import urllib.request
 from datetime import date, datetime, timedelta, timezone
@@ -83,26 +82,9 @@ def _dumps(body) -> str:
     return json.dumps(body, separators=(",", ":"))
 
 
-@contextlib.contextmanager
-def _host_zone(tz: str):
-    """The Python process's local zone (what PySpark's Row datetimes
-    follow); the JVM and the session's UTC are untouched."""
-    old = os.environ.get("TZ")
-    os.environ["TZ"] = tz
-    time.tzset()
-    try:
-        yield
-    finally:
-        if old is None:
-            del os.environ["TZ"]
-        else:
-            os.environ["TZ"] = old
-        time.tzset()
-
-
 @pytest.fixture()
-def utc_host():
-    with _host_zone("UTC"):
+def utc_host(host_zone):
+    with host_zone("UTC"):
         yield
 
 
@@ -315,7 +297,7 @@ def _window(sql):
     return {"query": sql, "startTime": _iso(T0), "endTime": _iso(T0 + timedelta(hours=1))}
 
 
-def test_timestamp_is_utc_on_any_host(served):
+def test_timestamp_is_utc_on_any_host(served, host_zone):
     """TIMESTAMP is the UTC wall clock on a host in New York, on the
     batch (Arrow and collect paths) and the NDJSON route."""
     _, base = served
@@ -333,7 +315,7 @@ def test_timestamp_is_utc_on_any_host(served):
         }
         for i in range(3)
     ]
-    with _host_zone("America/New_York"):
+    with host_zone("America/New_York"):
         for q in (f"{sql} ORDER BY i", f"{sql} ORDER BY i LIMIT 10"):
             for streaming in (False, True):
                 got = _post(base, "/api/v1/query", _window(q), streaming)

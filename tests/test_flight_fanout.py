@@ -248,3 +248,32 @@ def test_send_to_ingester_mixed_awareness_does_not_raise():
     aware = NOW.replace(tzinfo=timezone.utc)
     assert send_to_ingester(aware - timedelta(minutes=5), NOW, now=NOW)
     assert send_to_ingester(NOW - timedelta(minutes=5), aware, now=aware)
+
+
+def test_staging_only_window_is_utc_on_any_host_zone(spark, tmp_path, host_zone):
+    """The staging-only fan-out keeps exactly the staged rows inside the
+    request window on a host in New York. A Python datetime literal
+    would pass through the host's zone and shift the window by its
+    offset (four hours in August), serving the wrong staged rows."""
+    from parseable_spark.flight import fetch
+
+    store = StreamStore(spark, str(tmp_path / "z"), StreamConfig(name="app"))
+    for msg, at in (
+        ("before", NOW - timedelta(hours=3)),
+        ("inside-1", NOW - timedelta(minutes=50)),
+        ("inside-2", NOW - timedelta(seconds=20)),
+        ("after", NOW + timedelta(hours=3, minutes=30)),
+    ):
+        store.ingest([{"msg": msg}], p_timestamp=at)
+    srv = serve(QueryEngine(spark, time_col="p_timestamp"), stores={"app": store})
+    start = (NOW - timedelta(hours=1)).strftime("%Y-%m-%dT%H:%M:%SZ")
+    end = (NOW + timedelta(minutes=1)).strftime("%Y-%m-%dT%H:%M:%SZ")
+    try:
+        with host_zone("America/New_York"):
+            t = fetch(
+                srv.port, "select * from `app`", start, end,
+                ticket_extra={"staging_only": True, "stream": "app"},
+            )
+        assert sorted(t.column("msg").to_pylist()) == ["inside-1", "inside-2"]
+    finally:
+        srv.shutdown()
